@@ -24,6 +24,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from slipstream_async_spark.functions import text as TXT
 from slipstream_async_spark.functions import vectors as VEC
@@ -20975,8 +20976,30 @@ def fk_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact-fact edge shuffles key counts, never rows). 7 edges, 7
     rows out; at 100 TB each child is two key-projection scans, not a
     per-edge rescan."""
+    return _fk_audit(spark, sf_dir, _FK_EDGES)
+
+
+def _bigint_key(df: DataFrame, col: str, edge: str):
+    """``col`` cast to the audit's common bigint key. The cast is exact
+    only for integral types; any other key type raises rather than
+    being cast (a string key that does not parse becomes NULL and is
+    then never counted as an orphan, so the audit would pass it)."""
+    dt = df.schema[col].dataType
+    if not isinstance(dt, IntegralType):
+        raise TypeError(
+            f"fk_violation_audit: edge {edge!r} key column {col!r} is "
+            f"{dt.simpleString()}; only integral keys are audited"
+        )
+    return F.col(col).cast("bigint")
+
+
+def _fk_audit(
+    spark: SparkSession, sf_dir: str, fk_edges: list[tuple[str, str, str, str, str]]
+) -> DataFrame:
+    """:func:`fk_violation_audit` over ``fk_edges`` (rows shaped like
+    ``_FK_EDGES``)."""
     by_child: dict[str, list] = {}
-    for edge, child, fk, parent, pk in _FK_EDGES:
+    for edge, child, fk, parent, pk in fk_edges:
         by_child.setdefault(child, []).append((edge, fk, parent, pk))
     frames = []
     for child, edges in by_child.items():
@@ -21000,7 +21023,7 @@ def fk_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                         *[
                             F.struct(
                                 F.lit(edge).alias("_e"),
-                                F.col(fk).cast("bigint").alias("k"),
+                                _bigint_key(ch, fk, edge).alias("k"),
                             )
                             for edge, fk, _, _ in edges
                         ]
@@ -21017,7 +21040,7 @@ def fk_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             orph = (
                 fused.filter(F.col("_e") == edge)
                 .join(
-                    par.select(F.col(pk).cast("bigint").alias("k")),
+                    par.select(_bigint_key(par, pk, edge).alias("k")),
                     "k",
                     "left_anti",
                 )

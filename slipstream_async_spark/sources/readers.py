@@ -11,6 +11,9 @@ Streaming semantics (micro-batches, watermarks, state).
 
 from __future__ import annotations
 
+import os
+
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -67,12 +70,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Parquet-footer row-group counts, memoized per file list. The probe is
-# driver-side O(KB) footer reads, paid once per distinct input set per
-# process — never a plan->RDD conversion (which re-runs physical planning
-# on every call and, under AQE, would eagerly execute upstream shuffle
-# stages if a caller ever passed a post-exchange frame).
-_ROW_GROUPS: dict[tuple, int] = {}
+# Parquet-footer row-group counts, memoized per file version: (path,
+# size, mtime_ns), so a file rewritten in place is probed again. The
+# probe is driver-side O(KB) footer reads, paid once per distinct file
+# per process — never a plan->RDD conversion (which re-runs physical
+# planning on every call and, under AQE, would eagerly execute upstream
+# shuffle stages if a caller ever passed a post-exchange frame).
+_ROW_GROUPS: dict[tuple[str, int, int], int] = {}
 
 
 def _carrying_tasks(df: DataFrame) -> int:
@@ -87,19 +91,44 @@ def _carrying_tasks(df: DataFrame) -> int:
         return 1 << 30
     if not files:
         return 1 << 30
-    if files not in _ROW_GROUPS:
-        try:
-            import pyarrow.parquet as pq
+    try:
+        import pyarrow.parquet as pq
 
-            n = 0
-            for f in files:
-                path = f[7:] if f.startswith("file://") else f
-                path = path[5:] if path.startswith("file:") else path
-                n += pq.ParquetFile(path).metadata.num_row_groups
-        except Exception:
-            n = 1 << 30
-        _ROW_GROUPS[files] = n
-    return _ROW_GROUPS[files]
+        n = 0
+        for f in files:
+            path = f[7:] if f.startswith("file://") else f
+            path = path[5:] if path.startswith("file:") else path
+            st = os.stat(path)
+            key = (path, st.st_size, st.st_mtime_ns)
+            if key not in _ROW_GROUPS:
+                _ROW_GROUPS[key] = pq.ParquetFile(path).metadata.num_row_groups
+            n += _ROW_GROUPS[key]
+    except Exception:
+        return 1 << 30
+    return n
+
+
+# Logical nodes that keep their child's partitioning: a Repartition
+# found below a chain of these still decides the frame's fan-out.
+_NARROW_NODES = frozenset({"Project", "Filter", "SubqueryAlias"})
+
+
+def _already_fanned(df: DataFrame) -> bool:
+    """True when the analyzed plan's top is an explicit repartition
+    (``repartition``/``coalesce``), reached through narrow nodes only.
+    A walk, not a substring match: a column or literal named
+    "Repartition", or one buried under a join, does not count."""
+    try:
+        node = df._jdf.queryExecution().analyzed()
+        while True:
+            name = node.nodeName()
+            if name in ("Repartition", "RepartitionByExpression"):
+                return True
+            if name not in _NARROW_NODES:
+                return False
+            node = node.children().head()
+    except (AttributeError, Py4JError):  # no JVM plan (e.g. Spark Connect)
+        return False
 
 
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:
@@ -134,11 +163,7 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     # filter/projection, then passed it into an operator that spreads
     # too) pass through — the old .rdd probe saw their >= target
     # partitions; the footer probe must not re-add an exchange.
-    try:
-        analyzed = df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        analyzed = ""
-    if "Repartition" in analyzed:
+    if _already_fanned(df):
         return df
     if _carrying_tasks(df) >= target:
         return df

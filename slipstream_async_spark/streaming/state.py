@@ -489,17 +489,7 @@ class StateTable:
         tmp_delta = os.path.join(vdir, f"delta-{self.version + 1}.tmp")
         try:
             (
-                batch.withColumn("_bucket", self._bucket_expr())
-                # group each bucket into one task -> ONE file per bucket
-                # per version (otherwise every input partition writes a
-                # sliver into every bucket dir: tasks x buckets files).
-                # numPartitions=n_buckets: an explicit repartition is
-                # exempt from AQE coalescing, so without it every commit
-                # schedules spark.sql.shuffle.partitions reduce tasks —
-                # mostly empty for small batches; bounding to n_buckets
-                # keeps per-commit latency proportional to buckets
-                # actually written (the streaming-sink hot path).
-                .repartition(self.n_buckets, F.col("_bucket"))
+                self._bucketed(batch)
                 .write.mode("overwrite")
                 .partitionBy("_bucket")
                 .parquet(tmp_delta)
@@ -507,6 +497,27 @@ class StateTable:
             self._commit_delta(tmp_delta, fence=fence)
         finally:
             shutil.rmtree(tmp_delta, ignore_errors=True)
+
+    def _bucketed(self, batch: DataFrame) -> DataFrame:
+        """A mutation batch as its commit writes it: tagged with its
+        ``_bucket``, one task per bucket, one row per key — behind ONE
+        shuffle."""
+        return (
+            batch.withColumn("_bucket", self._bucket_expr())
+            # group each bucket into one task -> ONE file per bucket
+            # per version (otherwise every input partition writes a
+            # sliver into every bucket dir: tasks x buckets files).
+            # numPartitions=n_buckets: an explicit repartition is
+            # exempt from AQE coalescing, so without it every commit
+            # schedules spark.sql.shuffle.partitions reduce tasks —
+            # mostly empty for small batches; bounding to n_buckets
+            # keeps per-commit latency proportional to buckets
+            # actually written (the streaming-sink hot path).
+            .repartition(self.n_buckets, F.col("_bucket"))
+            # one row per key; the bucket is a function of the key, so
+            # the repartition's clustering already serves this dedup
+            .dropDuplicates(["_bucket", "key"])
+        )
 
     def _commit_delta(
         self, tmp_delta: str, fence: tuple[str, int] | None = None
@@ -1058,22 +1069,11 @@ class StateTable:
         compact()/rebucket() it emits NO changelog rows (consumers of
         a rebuilt table re-baseline from snapshot()); epoch fences are
         carried forward."""
-        for c, t in (("value", "string"), ("attrs", "map<string,string>")):
-            if c not in updates.columns:
-                updates = updates.withColumn(c, F.lit(None).cast(t))
-        batch = (
-            updates.select(
-                F.col("key").cast("string").alias("key"), "value", "attrs"
-            )
-            .dropDuplicates(["key"])
-            .withColumn("op", F.lit("put"))
-        )
         new_v = self.version + 1
         tmp = self._vpath(new_v) + ".tmp"
         try:
             (
-                batch.withColumn("_bucket", self._bucket_expr())
-                .repartition(self.n_buckets, F.col("_bucket"))
+                self._bucketed(_normalize_put_batch(updates))
                 .write.mode("overwrite")
                 .partitionBy("_bucket")
                 .parquet(tmp)
@@ -1217,17 +1217,16 @@ class StateTable:
 
 def _normalize_put_batch(updates: DataFrame) -> DataFrame:
     """The upsert input contract as a frame: key cast to string,
-    value/attrs defaulted, one row per key, op='put'."""
+    value/attrs defaulted, op='put'. Keys are NOT made unique here: the
+    commit write drops duplicates after its bucket repartition, where
+    the bucket shuffle already clusters equal keys (a dedup here would
+    plan a second shuffle on ``key`` alone)."""
     for c, t in (("value", "string"), ("attrs", "map<string,string>")):
         if c not in updates.columns:
             updates = updates.withColumn(c, F.lit(None).cast(t))
-    return (
-        updates.select(
-            F.col("key").cast("string").alias("key"), "value", "attrs"
-        )
-        .dropDuplicates(["key"])
-        .withColumn("op", F.lit("put"))
-    )
+    return updates.select(
+        F.col("key").cast("string").alias("key"), "value", "attrs"
+    ).withColumn("op", F.lit("put"))
 
 
 def _adopt_dir(src: str, dst: str) -> None:
@@ -1237,6 +1236,26 @@ def _adopt_dir(src: str, dst: str) -> None:
         os.rename(src, dst)
     except OSError:
         StateTable._link_dir(src, dst)
+
+
+def _grouped(writes: list[tuple[StateTable, DataFrame]]) -> DataFrame:
+    """The union :func:`upsert_group` writes: every batch normalized,
+    tagged with its table's bucket and its group ordinal, one task per
+    (group, bucket), one row per key within a group — behind ONE
+    shuffle."""
+    tagged = [
+        _normalize_put_batch(df)
+        .withColumn("_bucket", t._bucket_expr())
+        .withColumn("_grp", F.lit(i))
+        for i, (t, df) in enumerate(writes)
+    ]
+    union = tagged[0]
+    for part in tagged[1:]:
+        union = union.unionByName(part)
+    total_buckets = sum(t.n_buckets for t, _ in writes)
+    return union.repartition(
+        total_buckets, F.col("_grp"), F.col("_bucket")
+    ).dropDuplicates(["_grp", "_bucket", "key"])
 
 
 def upsert_group(
@@ -1270,17 +1289,6 @@ def upsert_group(
     cross-table commit point."""
     if not writes:
         return
-    spark = writes[0][0].spark
-    tagged = [
-        _normalize_put_batch(df)
-        .withColumn("_bucket", t._bucket_expr())
-        .withColumn("_grp", F.lit(i))
-        for i, (t, df) in enumerate(writes)
-    ]
-    union = tagged[0]
-    for part in tagged[1:]:
-        union = union.unionByName(part)
-    total_buckets = sum(t.n_buckets for t, _ in writes)
     # the shared write stages under the FIRST table's versions/ (any
     # non-v\d+ name is invisible to _versions); per-table deltas are
     # renamed out before each commit
@@ -1289,7 +1297,7 @@ def upsert_group(
     )
     try:
         (
-            union.repartition(total_buckets, F.col("_grp"), F.col("_bucket"))
+            _grouped(writes)
             .write.mode("overwrite")
             .partitionBy("_grp", "_bucket")
             .parquet(gtmp)

@@ -7,12 +7,16 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from slipstream_async_spark.sources.readers import (
+    _carrying_tasks,
     load_table,
     read_csv,
     read_json,
+    spread,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -133,3 +137,31 @@ def test_orc_round_trip(spark, tmp_path):
     assert "PushedFilters: [" in plan
     pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
     assert "GreaterThan(id,1)" in pushed
+
+
+def _write_ints(path, row_group_size=None):
+    pq.write_table(pa.table({"x": list(range(64))}), path, row_group_size=row_group_size)
+
+
+def test_spread_reads_plan_nodes_not_plan_text(spark, tmp_path):
+    """``spread`` passes a frame through only when an explicit
+    repartition tops its plan (under narrow nodes): a literal that
+    merely spells "Repartition" is no fan-out."""
+    path = os.path.join(str(tmp_path), "one_group.parquet")
+    _write_ints(path)  # one row group: one data-carrying scan task
+    df = spark.read.parquet(path)
+    tagged = df.withColumn("tag", F.lit("Repartition"))
+    top = spread(tagged)._jdf.queryExecution().analyzed().nodeName()
+    assert top == "Repartition"
+    fanned = df.repartition(3).filter("x > 1").select("x")
+    assert spread(fanned) is fanned
+
+
+def test_row_group_probe_sees_a_rewritten_file(spark, tmp_path):
+    """The footer memo is keyed per file version, so a file rewritten
+    in place under the same path is probed again."""
+    path = os.path.join(str(tmp_path), "rewritten.parquet")
+    _write_ints(path)
+    assert _carrying_tasks(spark.read.parquet(path)) == 1
+    _write_ints(path, row_group_size=4)
+    assert _carrying_tasks(spark.read.parquet(path)) == 16

@@ -5,10 +5,16 @@ reference: CRUD, prefix families user:/order:, ordered scans)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
-from slipstream_async_spark.streaming.state import StateTable
+from slipstream_async_spark.streaming.state import (
+    StateTable,
+    _grouped,
+    _normalize_put_batch,
+)
 
 
 @pytest.fixture()
@@ -990,3 +996,27 @@ def test_append_only_reads_and_replace_all(spark, tmp_path):
     )
     assert t.get("n3") == "z" and t.snapshot().count() == 3
     t.destroy()
+
+
+def _exchanges(df) -> int:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return len(re.findall(r"\bExchange\b", plan))
+
+
+def test_commit_write_plans_one_exchange(spark, tmp_path):
+    """A commit writes one row per key behind ONE shuffle: the key
+    dedup runs after the bucket repartition, whose clustering already
+    satisfies it, instead of planning a second exchange on ``key``."""
+    t = StateTable(spark, str(tmp_path / "t"), n_buckets=4)
+    u = StateTable(spark, str(tmp_path / "u"), n_buckets=2)
+    batch = spark.createDataFrame(
+        [(str(i % 5), str(i)) for i in range(20)], "key string, value string"
+    )
+    single = t._bucketed(_normalize_put_batch(batch))
+    assert _exchanges(single) == 1
+    assert single.count() == 5
+    group = _grouped([(t, batch), (u, batch)])
+    assert _exchanges(group) == 1
+    assert group.count() == 10
+    t.upsert(batch)
+    assert t.snapshot().count() == 5

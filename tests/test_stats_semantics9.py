@@ -58,6 +58,23 @@ def test_fk_violation_audit_counts(q, lineitem, orders):
     assert len(out) == 7
 
 
+def test_fk_violation_audit_rejects_non_integral_keys(spark, tmp_path):
+    """A string FK would be cast to bigint, and an unparseable value
+    becomes NULL and is never counted as an orphan: the audit must fail
+    closed on such an edge instead of reporting it clean."""
+    from slipstream_async_spark.plans.catalog import _fk_audit
+
+    d = str(tmp_path)
+    pd.DataFrame({"c_key": ["1", "x9"]}).to_parquet(f"{d}/child.parquet")
+    pd.DataFrame({"p_key": [1, 2]}).to_parquet(f"{d}/parent.parquet")
+    edge = ("child.c_key->parent", "child", "c_key", "parent", "p_key")
+    with pytest.raises(TypeError, match="c_key"):
+        _fk_audit(spark, d, [edge])
+    pd.DataFrame({"c_key": [1, 9]}).to_parquet(f"{d}/child.parquet")
+    row = _fk_audit(spark, d, [edge]).collect()[0]
+    assert (row.n_rows, row.n_orphan_keys, row.n_orphan_rows) == (2, 1, 1)
+
+
 def test_periodogram_is_the_dft_power_fraction(q, orders):
     day = (
         orders.o_orderdate.values.astype("datetime64[D]")
