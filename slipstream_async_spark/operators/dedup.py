@@ -12,9 +12,15 @@ Scale design notes
   hash groupBy; Jaccard candidates come from an inverted shingle index
   (equi-join on shingle); MinHash candidates come from LSH band buckets
   (equi-join on band key); SimHash candidates from fingerprint bands.
-- All hashes are md5-derived (``hash32``) so the DuckDB oracle reproduces
-  results bit-for-bit; swap to ``xxhash64`` for pure speed when oracle
-  parity is not needed.
+- Hashes that shape the output — MinHash signatures and LSH band keys,
+  SimHash fingerprints — are md5-derived (``hash32``), so the DuckDB
+  oracle reproduces them bit-for-bit. Shingle-set candidate generation
+  and exact verification run on ``xxhash64``: those hashes never leave
+  the operator, and the pairs and Jaccard values they produce are exact
+  up to a ~|u|^2/2^64 collision bound.
+- The shingle-set operators share one core: one cached hashed-set frame
+  (:func:`_cached_hsets`, which alone reads the broadcast gates), one
+  rarest-first prefix window and one PPJoin filter expression.
 
 Algorithms are the published standards: MinHash resemblance sketching
 (Broder, "On the resemblance and containment of documents", SEQUENCES
@@ -181,35 +187,115 @@ def _bucket_pairs(
 # or the shingle-frequency table (~50 B/shingle) measures small, shipping it
 # to every task turns a 3-way shuffle join into a map-side join. Both tables
 # grow with the corpus — at 100 TB neither fits, so the decision is made from
-# a measured count, never assumed.
+# a measured count, never assumed. Read only by :func:`_cached_hsets`.
 _BC_MAX_DOCS = 100_000
 _BC_MAX_VOCAB = 1_000_000
 
 
-def _verified_pairs(cand: DataFrame, sets: DataFrame, id_col: str,
-                    threshold: float, broadcast_sets: bool = False) -> DataFrame:
-    """Join candidate (id_a, id_b) pairs back to shingle sets and keep
-    pairs with exact Jaccard >= threshold.
+def _xxh_set():
+    """The hashed shingle set ``_h``: distinct xxhash64 of each shingle.
+    ``_n`` stays ``size(sh)``, the STRING set size: verification's
+    |A|/|B| and the prefix length both come from it (array_distinct may
+    shrink ``_h`` only under a 2^-64 intra-doc collision, and
+    array_intersect's output is distinct regardless, so the Jaccard is
+    bit-identical)."""
+    return F.array_distinct(F.transform("sh", lambda s: F.xxhash64(s)))
 
-    Verification cost shapes the whole operator at scale, so the set
-    algebra is minimized: shingles are compared as 64-bit hashes (int
-    equality, not ~30-char string equality; xxhash64 collisions within
-    one pair's union are ~|u|^2/2^64 ≈ 1e-14 — no effect on any
-    realistic corpus), and |A∪B| is computed as nA + nB − |A∩B| instead
-    of materializing the union array — one array op per pair, on ints.
 
-    ``broadcast_sets`` hints both set sides into broadcast-hash joins
-    (cost-based stats through cache + transform lineage underestimate
-    nothing/overestimate wildly, so AQE alone won't pick this up).
-    """
-    hsets = sets.select(
+def _cached_hsets(hsets: DataFrame, label: str) -> tuple[DataFrame, bool, bool]:
+    """Cache a caller's ``(id, _h, _n, …)`` projection of its shingle
+    sets and run the ONE action that both materializes the cache and
+    measures the broadcast gates: the doc count and the total shingle
+    occurrences (an upper bound on the vocabulary). Every consumer
+    downstream — inverted index, prefix window, both verify sides —
+    reads the cached 8-byte hashes instead of re-tokenizing.
+
+    Returns ``(cached, small_sets, small_vocab)``: ``small_sets`` when the
+    per-document set table fits a broadcast, ``small_vocab`` when the
+    shingle-frequency table does as well."""
+    cached = hsets.transform(scoped_cache, label)
+    n_docs, total_sh = cached.agg(
+        F.count("*"), F.coalesce(F.sum("_n"), F.lit(0))
+    ).first()
+    small_sets = n_docs <= _BC_MAX_DOCS
+    return cached, small_sets, small_sets and total_sh <= _BC_MAX_VOCAB
+
+
+def _rarest_first_prefix(
+    hsets: DataFrame,
+    id_col: str,
+    threshold: float,
+    broadcast_freq: bool,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """PPJoin prefix rows ``(id, *keep, n, s, _r)`` of the hashed sets
+    under the rarest-first (corpus frequency asc, hash asc) order: each
+    document keeps its first ``n - ceil(threshold*n) + 1`` shingles, and
+    ``_r`` is the shingle's rank in the doc's full order (the positional
+    filter needs it).
+
+    The order runs on 64-bit xxhash64 shingle hashes, the SAME domain
+    verification intersects in (:func:`_verified_pairs_hashed`), so the
+    frequency and bucket shuffle keys are 8-byte longs, not ~30-char
+    strings. Result-identical: prefix filtering is complete under ANY
+    consistent total order (the frozen-order theorem at
+    :func:`frozen_order_prefix_rows`), this order is consistent, and the
+    prefix length computed from the STRING set size n is >= the length
+    the (possibly collision-shrunk) hashed set requires because
+    n - ceil(t*n) + 1 is nondecreasing in n.
+
+    The frequency table is folded to freq >= 2 entries before it is
+    broadcast/joined (guide §3.1, smaller build side): on a web corpus
+    MOST shingles are unique, so the folded table is a small fraction of
+    the vocabulary. A LEFT join + coalesce(_f, 1) reproduces the full
+    order exactly — every absent shingle has frequency exactly 1, and
+    the ties it creates were already broken by the hash order."""
+    inv = hsets.select(
         F.col(id_col),
-        F.transform("sh", lambda s: F.xxhash64(s)).alias("_h"),
-        F.size("sh").alias("_n"),
+        *keep,
+        F.col("_n").alias("n"),
+        F.explode("_h").alias("s"),
     )
-    return _verified_pairs_hashed(
-        cand, hsets, id_col, threshold, broadcast_sets=broadcast_sets
+    freq = (
+        inv.groupBy("s")
+        .agg(F.count("*").alias("_f"))
+        .filter(F.col("_f") >= 2)
     )
+    if broadcast_freq:
+        freq = F.broadcast(freq)
+    w = Window.partitionBy(id_col).orderBy(F.col("_f").asc(), F.col("s").asc())
+    return (
+        inv.join(freq, "s", "left")
+        .withColumn("_f", F.coalesce("_f", F.lit(1)))
+        .withColumn("_r", F.row_number().over(w))
+        .filter(F.col("_r") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1)
+        .select(F.col(id_col), *keep, "n", "s", "_r")
+    )
+
+
+def _ppjoin_filter(threshold: float):
+    """Two exact prunes on a candidate carrying both set sizes
+    (``_na``, ``_nb``) and the ranks of a shared prefix shingle
+    (``_pa``, ``_pb``), applied before the verify joins see the pair:
+
+    1. Jaccard length bound: J >= t forces min(|A|,|B|) >= t*max(|A|,|B|).
+    2. PPJoin positional filter: J >= t <=> overlap >= t/(1+t)*(nA+nB),
+       and a shared shingle at ranks (pA, pB) bounds the overlap by
+       1 + min(nA-pA, nB-pB) (everything before the shared shingle in
+       either doc's order can't contribute more). The epsilon keeps
+       float round-up from ever pruning a boundary pair — too-low alpha
+       only admits extras, which exact verification removes."""
+    alpha = F.ceil(
+        F.lit(threshold / (1.0 + threshold)) * (F.col("_na") + F.col("_nb"))
+        - F.lit(1e-9)
+    )
+    ubound = 1 + F.least(
+        F.col("_na") - F.col("_pa"), F.col("_nb") - F.col("_pb")
+    )
+    return (
+        F.least("_na", "_nb").cast("double")
+        >= F.lit(threshold) * F.greatest("_na", "_nb")
+    ) & (ubound >= alpha)
 
 
 def _verified_pairs_hashed(
@@ -219,12 +305,24 @@ def _verified_pairs_hashed(
     threshold: float,
     broadcast_sets: bool = False,
 ) -> DataFrame:
-    """:func:`_verified_pairs` core over PRE-HASHED sets — ``hsets`` is
-    ``(id_col, _h array<bigint>, _n int)``. The persistent near-dup
-    index stores exactly this shape per document (xxhash64 of each
-    shingle), so streaming verification never re-reads document text or
-    re-shingles anything — it joins candidates against stored hash
-    arrays."""
+    """Join candidate (id_a, id_b) pairs to PRE-HASHED shingle sets —
+    ``hsets`` is ``(id_col, _h array<bigint>, _n int)`` — and keep pairs
+    with exact Jaccard >= threshold.
+
+    Verification cost shapes the whole operator at scale, so the set
+    algebra is minimized: shingles are compared as 64-bit hashes (int
+    equality, not ~30-char string equality; xxhash64 collisions within
+    one pair's union are ~|u|^2/2^64 ≈ 1e-14 — no effect on any
+    realistic corpus), and |A∪B| is computed as nA + nB − |A∩B| instead
+    of materializing the union array — one array op per pair, on ints.
+    The persistent near-dup index stores exactly this shape per
+    document, so streaming verification never re-reads document text or
+    re-shingles anything.
+
+    ``broadcast_sets`` hints both set sides into broadcast-hash joins
+    (cost-based stats through cache + transform lineage underestimate
+    nothing/overestimate wildly, so AQE alone won't pick this up).
+    """
     a = hsets.select(
         F.col(id_col).alias("id_a"),
         F.col("_h").alias("_ha"),
@@ -285,99 +383,30 @@ def dedup_ngram_jaccard(
     quality gates, source) alongside the pairs get them without a
     second corpus scan.
     """
-    # The CACHE holds the HASHED sets (id, _h array<bigint>, _n) — not
-    # the string shingle arrays: every downstream consumer (inverted
-    # index, verify side a, verify side b) works in the xxhash64 domain,
-    # so hashing once into the cache removes two full re-tokenize+hash
-    # passes per query and the cached/broadcast payload shrinks from
-    # ~30-char strings to 8-byte longs. ``_n`` stays the STRING set size
-    # (verification's |A|/|B| and the prefix length both come from it;
-    # array_distinct may shrink _h only under a 2^-64 intra-doc
-    # collision, and array_intersect's output is distinct regardless, so
-    # the Jaccard is bit-identical).
+    # The CACHE holds the HASHED sets (id, _h, _n) — not the string
+    # shingle arrays: every downstream consumer (inverted index, verify
+    # side a, verify side b) works in the xxhash64 domain, so hashing
+    # once into the cache removes two full re-tokenize+hash passes per
+    # query and the cached/broadcast payload shrinks from ~30-char
+    # strings to 8-byte longs.
     carry = dict(carry or {})
     sets = shingle_sets(df, text_col, id_col, k, carry=carry)
-    hsets = sets.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform("sh", lambda s: F.xxhash64(s))
-        ).alias("_h"),
-        F.size("sh").alias("_n"),
-        *carry.keys(),
-    ).transform(scoped_cache, "verified_pairs")
+    hsets, small_sets, small_vocab = _cached_hsets(
+        sets.select(
+            F.col(id_col),
+            _xxh_set().alias("_h"),
+            F.size("sh").alias("_n"),
+            *carry.keys(),
+        ),
+        "verified_pairs",
+    )
     if stats is not None:
         stats["docs"] = hsets.select(id_col, *carry.keys())
-    # ONE action materializes the cache and yields both broadcast
-    # decisions (doc count, and vocab bounded by total occurrences).
-    n_docs, total_sh = hsets.agg(
-        F.count("*"), F.coalesce(F.sum("_n"), F.lit(0))
-    ).first()
-    small_sets = n_docs <= _BC_MAX_DOCS
-    # Candidate generation runs entirely on 64-bit xxhash64 shingle
-    # hashes — the SAME domain exact verification already intersects in
-    # (_verified_pairs) — so freq/bucket shuffle keys are 8-byte longs,
-    # not ~30-char shingle strings. Result-identical: prefix filtering
-    # is complete under ANY consistent total order (the frozen-order
-    # theorem at frozen_order_prefix_rows), the (hash-freq asc, hash
-    # asc) order is consistent, and the prefix length computed from the
-    # STRING set size n is >= the length the (possibly collision-
-    # shrunk) hashed set requires because n - ceil(t*n) + 1 is
-    # nondecreasing in n.
-    inv = hsets.select(
-        F.col(id_col),
-        F.col("_n").alias("n"),
-        F.explode("_h").alias("s"),
-    )
-    # Fold the frequency table to freq >= 2 entries before it is
-    # broadcast/joined (guide §3.1, smaller build side): on a web corpus
-    # MOST shingles are unique, so the folded table is a small fraction
-    # of the vocabulary. A LEFT join + coalesce(_f, 1) reproduces the
-    # full (_f asc, s asc) rarest-first order exactly — every absent
-    # shingle has frequency exactly 1, and the ties it creates were
-    # already broken by the hash order.
-    freq = (
-        inv.groupBy("s")
-        .agg(F.count("*").alias("_f"))
-        .filter(F.col("_f") >= 2)
-    )
-    if small_sets and total_sh <= _BC_MAX_VOCAB:
-        freq = F.broadcast(freq)
-    w = Window.partitionBy(id_col).orderBy(F.col("_f").asc(), F.col("s").asc())
-    prefix = (
-        inv.join(freq, "s", "left")
-        .withColumn("_f", F.coalesce("_f", F.lit(1)))
-        .withColumn("_r", F.row_number().over(w))
-        # prefix length = n - ceil(t*n) + 1; _r is also the shingle's rank
-        # in the doc's full rarest-first order, which the positional
-        # filter below needs.
-        .filter(F.col("_r") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1)
-        .select(F.col(id_col), "n", "s", "_r")
-    )
-    # Two exact prunes before the verify joins ever see a pair:
-    # 1. Jaccard length bound: J >= t forces min(|A|,|B|) >= t*max(|A|,|B|).
-    # 2. PPJoin positional filter: J >= t <=> overlap >= t/(1+t)*(nA+nB),
-    #    and a shared shingle at ranks (pA, pB) bounds the overlap by
-    #    1 + min(nA-pA, nB-pB) (everything before the shared shingle in
-    #    either doc's global order can't contribute more). The epsilon
-    #    keeps float round-up from ever pruning a boundary pair — too-low
-    #    alpha only admits extras, which exact verification removes.
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("_na") + F.col("_nb"))
-        - F.lit(1e-9)
-    )
-    ubound = 1 + F.least(
-        F.col("_na") - F.col("_pa"), F.col("_nb") - F.col("_pb")
-    )
+    prefix = _rarest_first_prefix(hsets, id_col, threshold, small_vocab)
     cand = (
         _bucket_pairs(prefix, ["s"], id_col, size_col="n", pos_col="_r",
                       max_bucket_size=max_bucket_size, stats=stats)
-        .filter(
-            (
-                F.least("_na", "_nb").cast("double")
-                >= F.lit(threshold) * F.greatest("_na", "_nb")
-            )
-            & (ubound >= alpha)
-        )
+        .filter(_ppjoin_filter(threshold))
         .select("id_a", "id_b")
     )
     # Candidates are NOT pre-deduped: after the length+positional prunes
@@ -419,48 +448,20 @@ def containment_pairs(
     # domain; ``_n`` stays the string set size so prefix lengths and
     # containment denominators are unchanged).
     sets = shingle_sets(df, text_col, id_col, k)
-    hsets = sets.select(
-        F.col(id_col),
-        F.array_distinct(
-            F.transform("sh", lambda s: F.xxhash64(s))
-        ).alias("_h"),
-        F.size("sh").alias("_n"),
-    ).transform(scoped_cache, "verified_pairs_hashed")
-    # ONE action: cache materialization + both broadcast decisions.
-    n_docs, total_sh = hsets.agg(
-        F.count("*"), F.coalesce(F.sum("_n"), F.lit(0))
-    ).first()
-    small_sets = n_docs <= _BC_MAX_DOCS
-    # Hashed candidate generation — same exactness argument as
-    # dedup_ngram_jaccard: verification already intersects xxhash64
-    # hashes, prefix completeness holds under any consistent total
-    # order, and the string-size prefix length over-covers the hashed
-    # set. Inverted-index join keys become 8-byte longs.
-    inv = hsets.select(
-        F.col(id_col),
-        F.col("_n").alias("n"),
+    hsets, small_sets, small_vocab = _cached_hsets(
+        sets.select(
+            F.col(id_col), _xxh_set().alias("_h"), F.size("sh").alias("_n")
+        ),
+        "verified_pairs_hashed",
+    )
+    probe = _rarest_first_prefix(hsets, id_col, threshold, small_vocab).select(
+        F.col(id_col).alias("id_a"), F.col("n").alias("_pna"), "s"
+    )
+    index = hsets.select(
+        F.col(id_col).alias("id_b"),
+        F.col("_n").alias("_pnb"),
         F.explode("_h").alias("s"),
     )
-    # freq >= 2 fold + left join/coalesce: same rarest-first order with a
-    # much smaller broadcast build side (see dedup_ngram_jaccard).
-    freq = (
-        inv.groupBy("s")
-        .agg(F.count("*").alias("_f"))
-        .filter(F.col("_f") >= 2)
-    )
-    if small_sets and total_sh <= _BC_MAX_VOCAB:
-        freq = F.broadcast(freq)
-    w = Window.partitionBy(id_col).orderBy(F.col("_f").asc(), F.col("s").asc())
-    probe = (
-        inv.join(freq, "s", "left")
-        .withColumn("_f", F.coalesce("_f", F.lit(1)))
-        .withColumn("_r", F.row_number().over(w))
-        .filter(
-            F.col("_r") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
-        )
-        .select(F.col(id_col).alias("id_a"), F.col("n").alias("_pna"), "s")
-    )
-    index = inv.select(F.col(id_col).alias("id_b"), F.col("n").alias("_pnb"), "s")
     cand = (
         probe.join(index, "s")
         .filter(F.col("id_a") != F.col("id_b"))
@@ -525,7 +526,8 @@ def _cc_two_phase(
     component-min) star edges.
 
     Input ``edges``: bidirectional (src, dst), no self-loops required.
-    Output: (node, label) for every node present in the input.
+    Output: (doc_id, cluster_id) for every node present in the input.
+    Raises RuntimeError when ``max_iter`` rounds pass without a fixpoint.
     """
     # undirected edge set in max->min orientation (u > v), deduped
     E = (
@@ -538,9 +540,7 @@ def _cc_two_phase(
         .localCheckpoint(eager=True)
     )
     prev = _edge_checksum(E)
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, max_iter + 1):
         # LARGE-STAR over the bidirectional view: for each u, attach
         # strictly-larger neighbors to min(N(u) ∪ {u})
         B = E.unionByName(
@@ -577,14 +577,20 @@ def _cc_two_phase(
         if cur == prev:
             break
         prev = cur
+    else:
+        # labels short of the fixpoint are silently wrong (a chain's tail
+        # still points at a non-minimal id): fail closed
+        raise RuntimeError(
+            f"connected components did not converge in {max_iter} rounds "
+            "(edge set still changing); raise max_iter"
+        )
     if stats is not None:
         stats["rounds"] = rounds
-        stats["method"] = "star"
     # fixpoint edges are (node -> component-min); roots carry no out-edge
-    nodes = edges.select(F.col("src").alias("node")).distinct()
+    nodes = edges.select(F.col("src").alias("doc_id")).distinct()
     return (
-        nodes.join(E, nodes["node"] == E["u"], "left")
-        .select("node", F.coalesce("v", "node").alias("label"))
+        nodes.join(E, nodes["doc_id"] == E["u"], "left")
+        .select("doc_id", F.coalesce("v", "doc_id").alias("cluster_id"))
     )
 
 
@@ -594,8 +600,8 @@ def _cc_two_phase(
 # actions (measured ~1.5-2 s of driver round-trips per clustering query
 # at sf0.1). The decision is made from the MEASURED count of the
 # already-checkpointed edge frame (the same adaptive-broadcast
-# discipline as _BC_MAX_DOCS) — at 100 TB edge sets exceed it and the
-# distributed rounds run unchanged.
+# discipline as the set-table broadcast gates) — at 100 TB edge sets
+# exceed it and the distributed rounds run unchanged.
 _DRIVER_CC_MAX_EDGES = 500_000
 
 
@@ -604,8 +610,6 @@ def duplicate_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    probe_every: int = 2,
-    method: str = "label",
     stats: dict | None = None,
     driver_cutover: int | None = _DRIVER_CC_MAX_EDGES,
 ) -> DataFrame:
@@ -615,147 +619,89 @@ def duplicate_clusters(
     decisions; transitive closure does (a~b, b~c => one survivor of
     {a,b,c}).
 
-    Min-label propagation: labels start as own id; each round every node
-    takes the min label among itself and its neighbors; converged when no
-    label changes. Rounds needed = graph diameter (near-dup clusters are
-    shallow — boilerplate stars, chains of revisions — so this converges
-    in a handful of rounds; ``max_iter`` guards degenerate chains).
+    Two lanes, chosen from the MEASURED edge count, produce the identical
+    (min id per component) labeling (property-tested against a
+    union-find model):
 
-    Scale notes: each round is one join + one min-aggregation on the edge
-    list — no driver-side graph. ``localCheckpoint`` truncates the plan
-    lineage per round (an iterative plan otherwise grows by two shuffles
-    per round and chokes the optimizer). The convergence probe (labels
-    only decrease, so a tiny ``sum(label)`` over the checkpointed labels
-    is complete) runs every ``probe_every`` rounds, not every round —
-    near-dup graphs converge in 1-3 rounds, so probing at round 2 then
-    every other round costs at most one redundant (stable, cheap)
-    propagation round while halving driver round-trips.
+    - **driver**: when the edge list has at most ``driver_cutover`` rows
+      (16 B/edge x 2 directions — a few MB), one bounded collect and a
+      union-find pass on the driver, zero distributed rounds;
+    - **star**: above the cutover (or with ``driver_cutover=None``, which
+      the scale-contract tests use to pin it), the alternating
+      large-star/small-star rounds of :func:`_cc_two_phase` — O(log^2 n)
+      rounds on ANY graph shape, so a 1,000-link revision chain closes
+      in ~10 rounds. ``max_iter`` bounds the rounds; reaching it without
+      a fixpoint raises RuntimeError rather than return unconverged
+      labels.
 
-    ``method``: ``"label"`` (default) is min-label propagation — rounds
-    = graph DIAMETER, cheapest per round, right for the shallow
-    star/short-chain graphs near-dup pairs actually form. ``"star"`` is
-    the alternating large-star/small-star algorithm (Kiveris et al.) —
-    O(log^2 n) rounds on ANY shape, the safe choice when long revision
-    chains are possible (a 1,000-link chain: ~10 rounds vs ~500). Both
-    produce IDENTICAL output (min id per component, property-tested).
-    ``stats``, if given, records {"rounds", "method"} for round-count
-    assertions and ops telemetry.
+    ``stats``, if given, records ``{"rounds"}`` (0 on the driver lane)
+    for round-count assertions and ops telemetry.
     """
-    if probe_every < 1:
-        raise ValueError(f"probe_every must be >= 1, got {probe_every}")
-    if method not in ("label", "star"):
-        raise ValueError(f"method must be 'label' or 'star', got {method!r}")
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        # materialize once: every round joins the edge list, and without
-        # this the whole upstream candidate/verify pipeline re-executes
-        # per round
+        # materialize once: the cutover collect and every distributed
+        # round read the edge list, and without this the whole upstream
+        # candidate/verify pipeline re-executes per read
         .localCheckpoint(eager=True)
     )
-    # Small-graph cutover (r12): counting the checkpointed frame is a
-    # local-block scan, and when the edge list fits the driver budget a
-    # single union-find pass produces the identical (node, min-id)
-    # labeling with ZERO iterative rounds — the per-round
-    # join/aggregate/localCheckpoint/probe actions are where a
-    # small-graph clustering query spends most of its time. Both
-    # methods produce min-label components, so the cutover serves both;
-    # pass ``driver_cutover=None`` to pin the distributed lanes (the
-    # scale-contract tests do).
     rows = None
     if driver_cutover is not None:
         # ONE bounded action instead of count-then-collect: fetch at
         # most cutover+1 rows — if the limit row arrives, the edge list
-        # exceeds the driver budget and the distributed lanes run; the
+        # exceeds the driver budget and the distributed lane runs; the
         # driver never holds more than the dial allows either way.
         rows = edges.limit(driver_cutover + 1).collect()
         if len(rows) > driver_cutover:
             rows = None
-    if rows is not None:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in rows:
-            ra, rb = find(r[0]), find(r[1])
-            if ra != rb:
-                parent[ra] = rb
-        nodes = {r[0] for r in rows}
-        comp_min: dict = {}
-        for n in nodes:
-            root = find(n)
-            cur = comp_min.get(root)
-            if cur is None or n < cur:
-                comp_min[root] = n
+    if rows is None:
+        labeled = _cc_two_phase(edges, max_iter, stats)
+    else:
+        labeled = _union_find_labels(edges, rows)
         if stats is not None:
             stats["rounds"] = 0
-            stats["method"] = "driver"
-        from pyspark.sql.types import StructField, StructType
-
-        node_t = edges.schema["src"].dataType
-        out_schema = StructType(
-            [
-                StructField("doc_id", node_t, True),
-                StructField("cluster_id", node_t, True),
-            ]
-        )
-        spark = pairs.sparkSession
-        labeled = spark.createDataFrame(
-            [(n, comp_min[find(n)]) for n in sorted(nodes)], out_schema
-        )
-        return labeled.select(
-            "doc_id",
-            "cluster_id",
-            (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
-        )
-    if method == "star":
-        labels = _cc_two_phase(edges, max_iter, stats)
-        return labels.select(
-            F.col("node").alias("doc_id"),
-            F.col("label").alias("cluster_id"),
-            (F.col("node") == F.col("label")).alias("is_canonical"),
-        )
-    # Round 0 folded into initialization: label = min(self, neighbors)
-    # directly from the edge list — one aggregation instead of the first
-    # join+union round (star clusters converge here immediately).
-    labels = (
-        edges.groupBy(F.col("src").alias("node"))
-        .agg(F.least(F.min("dst"), F.first("src")).alias("label"))
-        .localCheckpoint(eager=True)
+    return labeled.select(
+        "doc_id",
+        "cluster_id",
+        (F.col("doc_id") == F.col("cluster_id")).alias("is_canonical"),
     )
-    prev_sum = labels.agg(F.sum("label")).first()[0]
-    rounds = 0
-    for i in range(max_iter):
-        rounds += 1
-        neighbor_labels = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .select(F.col("dst").alias("node"), "label")
-        )
-        labels = (
-            labels.unionByName(neighbor_labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)
-        )
-        if (i + 1) % probe_every and i + 1 < max_iter:
-            continue
-        cur_sum = labels.agg(F.sum("label")).first()[0]
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["method"] = "label"
-    return labels.select(
-        F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
+
+
+def _union_find_labels(edges: DataFrame, rows: list) -> DataFrame:
+    """(doc_id, cluster_id = component min) from the collected edge
+    ``rows`` of ``edges`` — the driver lane of :func:`duplicate_clusters`."""
+    from pyspark.sql.types import StructField, StructType
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for r in rows:
+        ra, rb = find(r[0]), find(r[1])
+        if ra != rb:
+            parent[ra] = rb
+    nodes = {r[0] for r in rows}
+    comp_min: dict = {}
+    for n in nodes:
+        root = find(n)
+        cur = comp_min.get(root)
+        if cur is None or n < cur:
+            comp_min[root] = n
+    node_t = edges.schema["src"].dataType
+    out_schema = StructType(
+        [
+            StructField("doc_id", node_t, True),
+            StructField("cluster_id", node_t, True),
+        ]
+    )
+    return edges.sparkSession.createDataFrame(
+        [(n, comp_min[find(n)]) for n in sorted(nodes)], out_schema
     )
 
 
@@ -859,17 +805,14 @@ def dedup_minhash_lsh(
     shingle sets (e.g. to recompute signatures for calibration) read
     the cache instead of re-tokenizing the corpus.
     """
-    sets = (
+    sets, small_sets, _ = _cached_hsets(
         shingle_sets(df, text_col, id_col, k)
-        .withColumn(
-            "_h", F.array_distinct(F.transform("sh", lambda s: F.xxhash64(s)))
-        )
-        .withColumn("_n", F.size("sh"))
-        .transform(scoped_cache, "minhash_lsh")
+        .withColumn("_h", _xxh_set())
+        .withColumn("_n", F.size("sh")),
+        "minhash_lsh",
     )
     if stats is not None:
         stats["sets"] = sets
-    n_docs = sets.count()
     bands = minhash_band_keys(
         df, text_col, id_col, k, sets=sets.select(id_col, "sh")
     )
@@ -882,7 +825,7 @@ def dedup_minhash_lsh(
         sets.select(id_col, "_h", "_n"),
         id_col,
         threshold,
-        broadcast_sets=n_docs <= _BC_MAX_DOCS,
+        broadcast_sets=small_sets,
     )
 
 
@@ -989,10 +932,12 @@ def dedup_incremental(
     bucket expansion: only the batch's prefix rows join the combined
     prefix index on shingle, so corpus-side rows pair exclusively with
     batch rows — corpus x corpus pairs are never generated (the full
-    operator's quadratic term). Same exact filters as
-    ``dedup_ngram_jaccard`` (rarest-first prefix, length bound, PPJoin
-    positional bound, exact-Jaccard verification); returns
-    (id_a < id_b, jaccard) where at least one side is a batch document.
+    operator's quadratic term). Same hashed-set cache and exact filters
+    as ``dedup_ngram_jaccard`` (rarest-first prefix, length bound, PPJoin
+    positional bound, exact-Jaccard verification), and none of the
+    streaming lane's helpers, so the streaming index tests can use it
+    as an independent reference; returns (id_a < id_b, jaccard) where
+    at least one side is a batch document.
 
     This form rebuilds the corpus-side prefix index per call — O(corpus)
     — which is fine for a batch nightly job but the wrong asymptote per
@@ -1007,71 +952,40 @@ def dedup_incremental(
     ).unionByName(
         batch.select(F.col(id_col), F.col(text_col), F.lit(True).alias("_new"))
     )
-    # Fan the tokenize+shingle pass out when the union scans fewer
-    # splits than cores (guide §2.5); no-op at scale.
-    tagged = spread(tagged, id_col)
-    sets = tagged.select(
-        F.col(id_col),
-        F.col("_new"),
-        shingles_of_tokens(tokens(text_col), k).alias("sh"),
-    ).transform(scoped_cache, "dedup_incremental")
-    n_docs, total_sh = sets.agg(
-        F.count("*"), F.coalesce(F.sum(F.size("sh")), F.lit(0))
-    ).first()
-    small = n_docs <= _BC_MAX_DOCS
-    inv = sets.select(
-        F.col(id_col), "_new", F.size("sh").alias("n"), F.explode("sh").alias("s")
+    sets = shingle_sets(tagged, text_col, id_col, k, carry={"_new": F.col("_new")})
+    hsets, small_sets, small_vocab = _cached_hsets(
+        sets.select(
+            F.col(id_col), "_new", _xxh_set().alias("_h"), F.size("sh").alias("_n")
+        ),
+        "dedup_incremental",
     )
-    # freq >= 2 fold + left join/coalesce: same rarest-first order with a
-    # much smaller broadcast build side (see dedup_ngram_jaccard).
-    freq = (
-        inv.groupBy("s")
-        .agg(F.count("*").alias("_f"))
-        .filter(F.col("_f") >= 2)
-    )
-    if small and total_sh <= _BC_MAX_VOCAB:
-        freq = F.broadcast(freq)
-    w = Window.partitionBy(id_col).orderBy(F.col("_f").asc(), F.col("s").asc())
-    prefix = (
-        inv.join(freq, "s", "left")
-        .withColumn("_f", F.coalesce("_f", F.lit(1)))
-        .withColumn("_r", F.row_number().over(w))
-        .filter(F.col("_r") <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1)
-        .select(F.col(id_col), "_new", "n", "s", "_r")
+    # ONE prefix window over the tagged union: the index side IS
+    # corpus ∪ batch, and the probe side is its ``_new`` slice.
+    prefix = _rarest_first_prefix(
+        hsets, id_col, threshold, small_vocab, keep=("_new",)
     )
     probe = prefix.filter(F.col("_new")).select(
-        F.col("s"), F.col(id_col).alias("_i1"), F.col("n").alias("_n1"),
-        F.col("_r").alias("_p1"),
+        "s", F.col(id_col).alias("_ia"), F.col("n").alias("_na"),
+        F.col("_r").alias("_pa"),
     )
     index = prefix.select(
-        F.col("s"), F.col(id_col).alias("_i2"), F.col("n").alias("_n2"),
-        F.col("_r").alias("_p2"),
+        "s", F.col(id_col).alias("_ib"), F.col("n").alias("_nb"),
+        F.col("_r").alias("_pb"),
     )
-    alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("_n1") + F.col("_n2"))
-        - F.lit(1e-9)
-    )
-    ubound = 1 + F.least(F.col("_n1") - F.col("_p1"), F.col("_n2") - F.col("_p2"))
     cand = (
         probe.join(index, "s")
-        .filter(F.col("_i1") != F.col("_i2"))
-        .filter(
-            (
-                F.least("_n1", "_n2").cast("double")
-                >= F.lit(threshold) * F.greatest("_n1", "_n2")
-            )
-            & (ubound >= alpha)
-        )
+        .filter(F.col("_ia") != F.col("_ib"))
+        .filter(_ppjoin_filter(threshold))
         # orient after the symmetric filters: batch-batch pairs arrive in
         # both directions and collapse in the distinct
         .select(
-            F.least("_i1", "_i2").alias("id_a"),
-            F.greatest("_i1", "_i2").alias("id_b"),
+            F.least("_ia", "_ib").alias("id_a"),
+            F.greatest("_ia", "_ib").alias("id_b"),
         )
         .distinct()
     )
-    return _verified_pairs(
-        cand, sets.select(id_col, "sh"), id_col, threshold, broadcast_sets=small
+    return _verified_pairs_hashed(
+        cand, hsets, id_col, threshold, broadcast_sets=small_sets
     )
 
 
@@ -1230,23 +1144,17 @@ def dedup_incremental_frozen(
     ).unionByName(
         batch.select(F.col(id_col), F.col(text_col), F.lit(True).alias("_new"))
     )
-    sets = (
+    sets, _, small_vocab = _cached_hsets(
         spread(tagged, id_col)
         .select(
             F.col(id_col),
             F.col("_new"),
             shingles_of_tokens(tokens(text_col), k).alias("sh"),
         )
-        .withColumn(
-            "_h", F.array_distinct(F.transform("sh", lambda s: F.xxhash64(s)))
-        )
-        .withColumn("_n", F.size("sh"))
-        .transform(scoped_cache, "incremental_frozen")
+        .withColumn("_h", _xxh_set())
+        .withColumn("_n", F.size("sh")),
+        "incremental_frozen",
     )
-    n_docs, total_sh = sets.agg(
-        F.count("*"), F.coalesce(F.sum("_n"), F.lit(0))
-    ).first()
-    small = n_docs <= _BC_MAX_DOCS and total_sh <= _BC_MAX_VOCAB
     ap = frozen_order_prefix_rows(
         sets.select(id_col, "_new", "sh"),
         id_col,
@@ -1263,7 +1171,7 @@ def dedup_incremental_frozen(
         sets.select(id_col, "_h", "_n"),
         id_col,
         threshold,
-        broadcast_sets=small,
+        broadcast_sets=small_vocab,
     )
 
 

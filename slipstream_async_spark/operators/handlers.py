@@ -182,15 +182,6 @@ def as_udtf(fn: Callable, schema: str):
     return udtf(_Handler, returnType=schema)
 
 
-def fan_out(df: DataFrame, *sinks: Callable[[DataFrame], None]) -> None:
-    """Route one DataFrame to every sink in order (slipstream
-    _sink_output loop, core.py:626-635). For batch sinks; streaming uses
-    ``foreachBatch`` multi-write (see streaming.pipeline).
-    """
-    for sink in sinks:
-        sink(df)
-
-
 def grouped_zscore(
     df: DataFrame,
     key_cols: list[str],

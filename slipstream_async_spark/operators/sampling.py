@@ -1,18 +1,15 @@
 """Sampling operators for training-data pipelines.
 
-Two families:
-
-- **Deterministic hash sampling** — the reproducible form: membership is
-  a pure function of the row's id (md5-derived bucket in [0, 10000)), so
-  the same document set survives on any cluster, any partitioning, any
-  engine, any rerun — the property training-data curation actually needs
-  (rerun the pipeline, get the same corpus; audit membership years
-  later). Also the basis for stable train/validation/test splits.
-- **Randomized sampling** — thin wrappers over Spark's native
-  ``sample``/``sampleBy`` (Bernoulli per partition, seeded): right for
-  statistics (skew probes, cardinality estimates), wrong for
-  reproducible corpus membership (resilient to neither repartitioning
-  nor engine change).
+Every sampler here is **deterministic hash sampling** — the reproducible
+form: membership is a pure function of the row's id (md5-derived bucket
+in [0, 10000)), so the same document set survives on any cluster, any
+partitioning, any engine, any rerun — the property training-data
+curation actually needs (rerun the pipeline, get the same corpus; audit
+membership years later). Also the basis for stable train/validation/test
+splits. Spark's native ``sample``/``sampleBy`` (Bernoulli per partition,
+seeded) stay right for statistics (skew probes, cardinality estimates)
+and wrong for reproducible corpus membership (resilient to neither
+repartitioning nor engine change).
 
 The reference has no sampling surface (single-stream, no corpus ops);
 this extends SURVEY §2's M7 inventory.
@@ -63,15 +60,6 @@ def train_test_split(
     bucket = hash_bucket(id_col, salt)
     cut = round(test_rate * _BUCKETS)
     return df.filter(bucket >= cut), df.filter(bucket < cut)
-
-
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Per-stratum Bernoulli sample (native ``sampleBy``) — statistics
-    use only; see module docstring for why corpus membership should use
-    ``deterministic_sample`` instead."""
-    return df.sampleBy(strata_col, fractions, seed)
 
 
 def deterministic_stratified_sample(

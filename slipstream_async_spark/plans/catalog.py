@@ -198,7 +198,7 @@ def _join_drops(df: DataFrame, drops: DataFrame, how: str) -> DataFrame:
     components lineage; ``localCheckpoint`` materializes it ONCE so the
     sizing count and the join both read the pinned copy — neither branch
     re-derives the corpus pair stage (same measured-count discipline as
-    operators.dedup._BC_MAX_DOCS, dedup.py:136-171)."""
+    the set-table gates of operators.dedup._cached_hsets)."""
     drops = drops.localCheckpoint(eager=True)
     if drops.count() <= _BC_MAX_DROPS:
         drops = F.broadcast(drops)
@@ -1751,9 +1751,9 @@ FROM cc GROUP BY node
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive duplicate clusters over the n-gram Jaccard pairs
-    (operators.dedup.duplicate_clusters): min-label propagation to a
-    fixpoint — the keep/drop decision layer of corpus dedup. Oracle =
-    DuckDB recursive CTE over the same pairs."""
+    (operators.dedup.duplicate_clusters): min-id connected components —
+    the keep/drop decision layer of corpus dedup. Oracle = DuckDB
+    recursive CTE over the same pairs."""
     (docs,) = _t(spark, sf_dir, "documents")
     pairs = DD.dedup_ngram_jaccard(docs, "text", "doc_id")
     return DD.duplicate_clusters(pairs)
@@ -2748,7 +2748,7 @@ FROM cc GROUP BY node
 )
 def emb_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic-duplicate clusters: embedding-cosine near-dup pairs
-    (sign-LSH blocked) fed into the same min-label-propagation connected
+    (sign-LSH blocked) fed into the same min-id connected
     components used for text dedup — the embedding-space keep/drop layer
     (e.g. paraphrase collapse) next to the lexical one. Demonstrates that
     the clustering operator is pairing-method agnostic: any (id_a, id_b)
@@ -4021,7 +4021,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of ~60-char strings (measured sf0.1: identical 39-row
     # output, >3x faster end-to-end). Collision risk is the
     # |test shingles| x |train vocab| / 2^64 ~ 1e-8 bound already
-    # adjudicated for operators.dedup._verified_pairs.
+    # adjudicated for operators.dedup._verified_pairs_hashed.
     hx = lambda c: F.xxhash64(c)  # noqa: E731
     # Tokenize+8-gram+hash is the query's dominant cost and BOTH split
     # sides consume it: spread the scan (guide §2.5 — single-row-group
@@ -7519,7 +7519,7 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedups cheaply; a few giant clusters mean templated spam and a very
     different removal ratio).
 
-    Shape: composes duplicate_clusters (min-label propagation over the
+    Shape: composes duplicate_clusters (min-id components over the
     PPJoin-filtered pair set) with two tiny re-aggregations — members
     per cluster, then clusters per size. Everything after the pair
     stage is cluster-count-sized."""
@@ -7614,7 +7614,7 @@ def quality_gate_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the two text gates are scan-fused expressions computed in
     the SAME tokenize pass the pair stage already pays and carried
     through its narrow per-doc cache (dedup_ngram_jaccard ``carry``) —
-    ONE documents scan total; the dedup drop-list (min-label connected
+    ONE documents scan total; the dedup drop-list (min-id connected
     components over the PPJoin pair set) joins in as an
     adaptively-broadcast left join on doc_id (_join_drops); the result
     is an 8-row aggregate."""
@@ -11363,7 +11363,7 @@ def nation_trade_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstration of the iterative-centrality pattern (the full-scale
     path is the same loop over an (src, dst, share) edge table keyed
     by any id, with localCheckpoint truncating lineage per iteration —
-    duplicate_clusters' label-propagation discipline).
+    the discipline of duplicate_clusters' distributed rounds).
 
     Determinism across engines, the hard part of iterating in floats:
     ranks live in MICRO-UNITS (integers); edge shares quantize once to
@@ -19681,22 +19681,24 @@ FROM sizes
 
 @register("dedup_star_components", oracle=_STAR_COMPONENTS)
 def dedup_star_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via the ALTERNATING LARGE-STAR/SMALL-STAR
-    algorithm (Kiveris et al., SoCC'14; operators.dedup._cc_two_phase)
-    over the standard near-dup pair set — the O(log^2 n)-round CC that
-    stays fast when duplicate graphs degenerate into long revision
-    chains (min-label propagation needs diameter rounds: ~500 for a
-    1,000-link chain vs ~10 here; tests/test_scale_ops.py asserts the
-    bound). Output is the cluster summary the curation owner reads:
-    cluster count, docs covered, largest cluster, keep-one removals.
+    """Cluster summary of the standard near-dup pair set — the readout
+    the curation owner reads: cluster count, docs covered, largest
+    cluster, keep-one removals.
+
+    The components come from duplicate_clusters. At oracle scale the
+    edge list is under the driver cutover, so its union-find lane
+    answers; above the cutover the ALTERNATING LARGE-STAR/SMALL-STAR
+    rounds (Kiveris et al., SoCC'14; operators.dedup._cc_two_phase)
+    run, O(log^2 n) rounds even on long revision chains
+    (tests/test_scale_ops.py pins that lane and its round bound). Both
+    lanes land on IDENTICAL min-id-per-component labels
+    (property-tested on random graphs against a union-find model).
 
     Oracle = the same recursive-CTE transitive closure that certifies
-    the propagation method (dedup_clusters) — both algorithms must land
-    on IDENTICAL min-id-per-component labels (also property-tested on
-    random graphs against a union-find model)."""
+    dedup_clusters."""
     (docs,) = _t(spark, sf_dir, "documents")
     pairs = DD.dedup_ngram_jaccard(docs, "text", "doc_id")
-    members = DD.duplicate_clusters(pairs, method="star")
+    members = DD.duplicate_clusters(pairs)
     sizes = members.groupBy("cluster_id").agg(F.count("*").alias("sz"))
     return sizes.agg(
         F.count("*").cast("bigint").alias("n_clusters"),
@@ -23605,8 +23607,8 @@ def dedup_recluster_tighter(spark: SparkSession, sf_dir: str) -> DataFrame:
     governance loop: detect over-merge, price the cutoffs, measure the
     recovery.
 
-    Shape: ONE PPJoin pair pass; two min-label CC runs over pair
-    subsets (equi-join label propagation, localCheckpoint-truncated);
+    Shape: ONE PPJoin pair pass; two min-id CC runs over pair
+    subsets (duplicate_clusters, each sized by its measured edge count);
     a doc-grain left join aligns the two labelings (0.7-singletons
     keep their own id); cluster-grain partial aggs to one row."""
     (docs,) = _t(spark, sf_dir, "documents")

@@ -27,12 +27,6 @@ def json_encode(*cols) -> Column:
     return F.to_json(F.struct(*cols))
 
 
-def json_get(col: Column | str, path: str) -> Column:
-    """Single-path JSON extraction (cheaper than full from_json)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.get_json_object(c, f"$.{path}")
-
-
 def avro_decode(col: Column | str, json_format_schema: str) -> Column:
     """Decode an Avro binary column (reference cookbook.rst:174-208 custom
     Avro codec). Requires the external ``spark-avro`` connector jar

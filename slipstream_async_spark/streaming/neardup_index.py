@@ -173,7 +173,7 @@ class NearDupPrefixIndex:
     def _hset_rows(self, sets: DataFrame, id_col: str) -> DataFrame:
         """``(key=doc, value="n|h1,h2,...")`` rows for the sets table —
         the stored verification payload (xxhash64 per shingle; exact
-        within one pair's union at ~|u|^2/2^64, the _verified_pairs
+        within one pair's union at ~|u|^2/2^64, the _verified_pairs_hashed
         argument)."""
         return sets.select(
             F.col(id_col).alias("key"),

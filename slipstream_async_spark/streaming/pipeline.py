@@ -158,7 +158,3 @@ _default = Pipeline()
 
 def handle(*sources: DataFrame, **kwargs):
     return _default.handle(*sources, **kwargs)
-
-
-def default_pipeline() -> Pipeline:
-    return _default

@@ -268,17 +268,15 @@ def test_duplicate_clusters_matches_union_find(spark, edges):
     pairs = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "id_a long, id_b long"
     )
-    got = {
-        r["doc_id"]: r["cluster_id"] for r in duplicate_clusters(pairs).collect()
-    }
-    assert got == expect
-    # the alternating large-star/small-star method is output-IDENTICAL
-    # (same min-id-per-component labels) on any graph shape
-    got_star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in duplicate_clusters(pairs, method="star").collect()
-    }
-    assert got_star == expect
+    # both lanes: the default takes the driver union-find lane (at most
+    # 25 edges, far under the cutover); driver_cutover=None pins the
+    # distributed large-star/small-star lane
+    for cutover in ({}, {"driver_cutover": None}):
+        got = {
+            r["doc_id"]: r["cluster_id"]
+            for r in duplicate_clusters(pairs, **cutover).collect()
+        }
+        assert got == expect, cutover
 
 
 @given(

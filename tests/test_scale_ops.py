@@ -734,22 +734,22 @@ def test_fuzzy_segment_pairs_substitution_complete(spark):
 
 
 def test_cc_two_phase_logarithmic_on_chains(spark):
-    """Large-cluster CC hardening: min-label propagation needs DIAMETER
-    rounds (a 1,000-link revision chain => ~500 — degenerate), while the
-    alternating large-star/small-star method (Kiveris et al.) closes the
-    same chain in O(log^2 n) rounds. Assert the star method converges to
-    the exact component labels on a 1,000-node chain well inside a
-    logarithmic round budget the propagation loop could never meet."""
+    """Large-cluster CC hardening: min-label propagation would need
+    DIAMETER rounds (a 1,000-link revision chain => ~500 — degenerate),
+    while the alternating large-star/small-star lane (Kiveris et al.)
+    closes the same chain in O(log^2 n) rounds. Assert the distributed
+    lane converges to the exact component labels on a 1,000-node chain
+    well inside a logarithmic round budget."""
     from slipstream_async_spark.operators.dedup import duplicate_clusters
 
     n = 1_000
     chain = spark.range(n - 1).selectExpr("id as id_a", "id + 1 as id_b")
     stats: dict = {}
     # driver_cutover=None pins the DISTRIBUTED star lane — this test's
-    # contract is the round count of the scale algorithm, which the r12
+    # contract is the round count of the scale algorithm, which the
     # small-graph driver cutover would otherwise short-circuit.
     labels = duplicate_clusters(
-        chain, max_iter=30, method="star", stats=stats, driver_cutover=None
+        chain, max_iter=30, stats=stats, driver_cutover=None
     )
     rows = labels.collect()
     assert len(rows) == n
@@ -758,3 +758,14 @@ def test_cc_two_phase_logarithmic_on_chains(spark):
     # ~10 observed; 2*ceil(log2(1000)) = 20 is the generous bound — vs
     # ~500 diameter rounds for label propagation
     assert stats["rounds"] <= 20, stats
+
+
+def test_duplicate_clusters_fails_closed_without_fixpoint(spark):
+    """Labels short of the large-star/small-star fixpoint are wrong (the
+    chain's tail still points at non-minimal ids), so running out of
+    rounds raises, naming the rounds run, instead of returning them."""
+    from slipstream_async_spark.operators.dedup import duplicate_clusters
+
+    chain = spark.range(999).selectExpr("id as id_a", "id + 1 as id_b")
+    with pytest.raises(RuntimeError, match="in 2 rounds"):
+        duplicate_clusters(chain, max_iter=2, driver_cutover=None)

@@ -3,8 +3,10 @@
 Usage: python tools/dump_plans.py <out_dir> <suffix> [query ...]
 
 Writes <out_dir>/<query>_<suffix>.txt for each query (all queries when
-none named). The optimization-round deliverable: plans/r12/<q>_before.txt
-and _after.txt come from running this at the pre- and post-change trees.
+none named). To compare plans across a change, run it once in a checkout
+of each tree (suffixes ``before`` and ``after``) and diff the two
+directories; the dumps are regenerated on demand, not committed.
+Tables are read from the directory named by ``SPARK_GRAFT_SF_DIR``.
 """
 
 from __future__ import annotations
