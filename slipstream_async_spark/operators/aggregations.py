@@ -24,6 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DecimalType, IntegralType
 
 
 def tumbling_window_agg(
@@ -144,66 +145,95 @@ def top_k_per_group(
     )
 
 
-def global_rank(
-    df: DataFrame,
-    order_cols: list,
-    rank_col: str = "rank",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Distributed total-order row_number: 1..n over ``order_cols``
-    without funnelling the table through one task.
+def ordered_scan(df: DataFrame, order_cols: list, folds: dict) -> DataFrame:
+    """Distributed running folds over the total order of ``order_cols``
+    without funnelling the table through one task: a by-less
+    ``row_number()`` / ``SUM`` / ``MAX`` ``OVER (ORDER BY ...)`` sorts the
+    whole input in a single partition, the classic 100x scale-killer on
+    unbounded-grain (customer/document) rows.
 
-    ``Window.orderBy`` with no ``partitionBy`` sorts the WHOLE input in
-    a single partition — the classic 100x scale-killer on unbounded-
-    grain (customer/document) rows. This is the two-phase prefix-rank
-    instead (operators.packing.contiguous_pack's shape, generalized to
-    arbitrary sort keys): range-repartition on the sort key, rank
-    locally per partition, then add broadcast per-partition row-count
-    offsets. The only by-less window left runs over the per-partition
-    COUNTS — bounded by the partition count, never by the data.
+    ``folds`` maps each output column to ``"count"`` (the 1..n row
+    number), ``("sum", col)`` (running sum) or ``("max", col)`` (running
+    max, a high-water mark). All folds share one two-phase pass:
+    range-repartition on the sort key into ``spark.sql.shuffle.partitions``
+    ranges, fold locally per range, then merge in the broadcast fold of
+    all EARLIER ranges. The only by-less window left runs over the
+    per-range partials, bounded by the partition count, never by the
+    data. Each output column is appended to ``df``'s columns.
 
-    Callers must end ``order_cols`` with a unique tie-break key: the
-    rank is then a pure function of the total order, independent of
-    partitioning. The range-partitioned frame is localCheckpoint'd so
-    the offsets branch and the local-rank branch provably read the SAME
+    Callers must end ``order_cols`` with a unique tie-break key: every
+    fold is then a pure function of the total order, independent of
+    partitioning. The range-partitioned frame is checkpointed locally so
+    the offsets branch and the local branch provably read the SAME
     ``spark_partition_id`` assignment (re-derived lineage could
-    re-sample range boundaries).
+    re-sample range boundaries). NULL inputs fold like the single-
+    partition window: skipped, and NULL only while nothing was seen.
+    Sum weights must be integer or DECIMAL (else ``TypeError``): the
+    regrouping reorders additions, which only exact types survive
+    bit-identically. Max takes any comparable type.
     """
-    sess = df.sparkSession
-    n = partitions or int(sess.conf.get("spark.sql.shuffle.partitions"))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    lw = Window.partitionBy("_pid").orderBy(*cols)
+    run = lw.rowsBetween(Window.unboundedPreceding, 0)
+    ow = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
+    local, partials, offsets, merged = {}, [], [], {}
+    for i, (out, fold) in enumerate(folds.items()):
+        # a lone fold keeps the bare internal names; later ones get a suffix
+        sfx = str(i) if i else ""
+        off = F.col(f"_off{sfx}")
+        if fold == "count":
+            local[f"_lrn{sfx}"] = F.row_number().over(lw)
+            partials.append(F.count("*").alias(f"_c{sfx}"))
+            offsets.append(
+                F.coalesce(F.sum(f"_c{sfx}").over(ow), F.lit(0))
+                .cast("bigint")
+                .alias(f"_off{sfx}")
+            )
+            merged[out] = (off + F.col(f"_lrn{sfx}")).cast("bigint")
+        elif fold[0] == "sum":
+            dt = df.schema[fold[1]].dataType
+            if not isinstance(dt, (IntegralType, DecimalType)):
+                raise TypeError(
+                    f"sum fold over {fold[1]} needs an integer or DECIMAL "
+                    f"column, not {dt.simpleString()}"
+                )
+            lcs = F.col(f"_lcs{sfx}")
+            local[f"_lcs{sfx}"] = F.sum(fold[1]).over(run)
+            partials.append(F.sum(fold[1]).alias(f"_t{sfx}"))
+            offsets.append(F.sum(f"_t{sfx}").over(ow).alias(f"_off{sfx}"))
+            # NULL only when both halves saw nothing but NULLs
+            merged[out] = F.coalesce(off + lcs, lcs, off)
+        elif fold[0] == "max":
+            local[f"_lm{sfx}"] = F.max(fold[1]).over(run)
+            partials.append(F.max(fold[1]).alias(f"_m{sfx}"))
+            offsets.append(F.max(f"_m{sfx}").over(ow).alias(f"_off{sfx}"))
+            merged[out] = F.greatest(F.col(f"_lm{sfx}"), off)
+        else:
+            raise ValueError(f"unknown fold for {out}: {fold!r}")
     part = (
         df.repartitionByRange(n, *cols)
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint()
     )
-    counts = part.groupBy("_pid").agg(F.count("*").alias("_c"))
-    ow = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_pid",
-        F.coalesce(F.sum("_c").over(ow), F.lit(0))
-        .cast("bigint")
-        .alias("_off"),
-    )
-    lw = Window.partitionBy("_pid").orderBy(*cols)
+    offs = part.groupBy("_pid").agg(*partials).select("_pid", *offsets)
     return (
-        part.withColumn("_lrn", F.row_number().over(lw))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn(
-            rank_col, (F.col("_off") + F.col("_lrn")).cast("bigint")
-        )
-        .drop("_pid", "_lrn", "_off")
+        part.withColumns(local)
+        .join(F.broadcast(offs), "_pid")
+        .withColumns(merged)
+        .drop(*offs.columns, *local)
     )
 
 
 def exact_ntile(rank_col: str, n_col: str, k: int):
     """SQL ``NTILE(k)`` reconstructed from a precomputed global rank and
     total row count: the first ``n % k`` tiles get ``ceil(n/k)`` rows,
-    the rest ``floor(n/k)`` — bit-identical to the window function, so a
-    :func:`global_rank` + this expression replaces a single-partition
-    NTILE window. Divisions run in double but stay exact: every operand
-    is an integer far below 2^53, and non-multiples sit >= 1/(q+1) away
-    from the next integer while the quotient is correctly rounded."""
+    the rest ``floor(n/k)`` — bit-identical to the window function, so
+    an :func:`ordered_scan` ``count`` fold + this expression replaces a
+    single-partition NTILE window. Divisions run in double but stay
+    exact: every operand is an integer far below 2^53, and non-multiples
+    sit >= 1/(q+1) away from the next integer while the quotient is
+    correctly rounded."""
     r, n = F.col(rank_col), F.col(n_col)
     q = F.floor(n / k)
     rem = n % k
@@ -216,15 +246,11 @@ def exact_ntile(rank_col: str, n_col: str, k: int):
 
 
 def exact_quantiles(
-    df: DataFrame,
-    value_col: str,
-    probs: list[int],
-    tie_cols: list[str] | None = None,
-    partitions: int | None = None,
+    df: DataFrame, value_col: str, probs: list[int]
 ) -> DataFrame:
     """EXACT nearest-rank percentiles of ``value_col`` — the value at
     rank ``ceil(p/100 * n)`` of the ascending sort — without funnelling
-    the table through a single-partition sort: :func:`global_rank`
+    the table through a single-partition sort: :func:`ordered_scan`
     assigns the total order distributedly, the (scalar) row count joins
     in as a broadcast, and only the ``len(probs)`` target ranks survive
     the final join. ``approx_percentile`` answers the same question
@@ -233,17 +259,14 @@ def exact_quantiles(
 
     ``probs`` are integer percents in (0, 100]. Ties in ``value_col``
     make the rank->row mapping ambiguous but the VALUE at each rank is
-    unique, so ``tie_cols`` are optional and only stabilize plans.
-    Returns ``(pct int, value)`` rows.
+    unique, so no tie-break key is needed. Returns ``(pct int, value)``
+    rows.
     """
     if not probs or any(not 0 < p <= 100 for p in probs):
         raise ValueError(f"probs must be integer percents in (0, 100]: {probs}")
-    tie_cols = list(tie_cols or [])
     sess = df.sparkSession
-    slim = df.select(value_col, *tie_cols)
-    r = global_rank(
-        slim, [value_col, *tie_cols], rank_col="_rk", partitions=partitions
-    )
+    slim = df.select(value_col)
+    r = ordered_scan(slim, [value_col], {"_rk": "count"})
     total = slim.agg(F.count("*").alias("_n"))
     pcts = sess.createDataFrame([(int(p),) for p in probs], "pct int")
     # ceil(p*n/100) in integer-safe form: (p*n + 99) stays exact in a
@@ -259,110 +282,6 @@ def exact_quantiles(
         r.join(F.broadcast(targets), "_rk")
         .groupBy("pct")
         .agg(F.min(value_col).alias("value"))
-    )
-
-
-def global_prefix_sum(
-    df: DataFrame,
-    order_cols: list,
-    weight_col: str,
-    out_col: str = "cum",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Distributed running sum of ``weight_col`` over the total order
-    given by ``order_cols`` — :func:`global_rank`'s shape generalized
-    from counting rows to accumulating a weight, the primitive behind
-    weighted quantiles, Lorenz curves, and cumulative-capacity cuts.
-
-    ``SUM(w) OVER (ORDER BY ...)`` with no PARTITION BY funnels the
-    whole input through one task; this is the two-phase form instead:
-    range-repartition on the sort key, running-sum locally per
-    partition, then add broadcast per-partition total offsets. The only
-    by-less window left runs over the per-partition TOTALS — bounded by
-    the partition count, never by the data.
-
-    Callers must end ``order_cols`` with a unique tie-break key so the
-    running sum is a pure function of the total order. The
-    range-partitioned frame is localCheckpoint'd so the offsets branch
-    and the local-cumsum branch provably read the SAME
-    ``spark_partition_id`` assignment. The weight should be an integer
-    (or DECIMAL) column: the two-phase regrouping reorders additions,
-    which only exact types survive bit-identically.
-    """
-    sess = df.sparkSession
-    n = partitions or int(sess.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    totals = part.groupBy("_pid").agg(F.sum(weight_col).alias("_t"))
-    ow = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid",
-        F.coalesce(F.sum("_t").over(ow), F.lit(0)).alias("_off"),
-    )
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        part.withColumn("_lcs", F.sum(weight_col).over(lw))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_off") + F.col("_lcs"))
-        .drop("_pid", "_lcs", "_off")
-    )
-
-
-def global_running_max(
-    df: DataFrame,
-    order_cols: list,
-    value_col: str,
-    out_col: str = "run_max",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Distributed running maximum of ``value_col`` over the total order
-    given by ``order_cols`` — the high-water-mark / record-tracking
-    primitive (all-time-high detection, watermark simulation, drawdown
-    analysis), :func:`global_prefix_sum`'s shape with MAX instead of SUM.
-
-    ``MAX(v) OVER (ORDER BY ...)`` with no PARTITION BY funnels the
-    whole input through one task; this is the two-phase form: range-
-    repartition on the sort key, running-max locally per partition,
-    then fold in the broadcast prefix-max of all EARLIER partitions
-    (``greatest`` skips the NULL offset of the first partition). The
-    only by-less window left runs over the per-partition maxima —
-    bounded by the partition count, never by the data. Unlike the sum
-    twin, max is order-insensitive, so any comparable type (numeric,
-    timestamp, string) is safe.
-
-    Callers must end ``order_cols`` with a unique tie-break key. The
-    range-partitioned frame is localCheckpoint'd so the offsets branch
-    and the local branch provably read the same partition assignment.
-    """
-    sess = df.sparkSession
-    n = partitions or int(sess.conf.get("spark.sql.shuffle.partitions"))
-    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
-    part = (
-        df.repartitionByRange(n, *cols)
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    tops = part.groupBy("_pid").agg(F.max(value_col).alias("_m"))
-    ow = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = tops.select("_pid", F.max("_m").over(ow).alias("_off"))
-    lw = (
-        Window.partitionBy("_pid")
-        .orderBy(*cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        part.withColumn("_lm", F.max(value_col).over(lw))
-        .join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.greatest(F.col("_lm"), F.col("_off")))
-        .drop("_pid", "_lm", "_off")
     )
 
 
@@ -437,8 +356,8 @@ def exact_auc(
     n^2 pair join by collapsing pairwise comparisons onto the score
     VALUE GRAIN: per distinct score, positive/negative counts; the
     cumulative negatives strictly below each value come from the
-    distributed prefix sum (:func:`global_prefix_sum` — no single-
-    partition sort), and the numerator folds exactly in DECIMAL.
+    distributed prefix sum (:func:`ordered_scan` — no single-partition
+    sort), and the numerator folds exactly in DECIMAL.
 
     ``score_col`` must be integer-valued (quantize floats to fixed
     point first — the house determinism discipline). Returns one row:
@@ -463,7 +382,7 @@ def exact_auc(
             .cast("bigint")
             .alias("_m"),
         )
-    cum = global_prefix_sum(vg, [score_col], "_m", out_col="_cum_m").withColumn(
+    cum = ordered_scan(vg, [score_col], {"_cum_m": ("sum", "_m")}).withColumn(
         "_neg_below", F.col("_cum_m") - F.col("_m")
     )
     return cum.agg(

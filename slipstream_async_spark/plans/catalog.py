@@ -4101,15 +4101,15 @@ def win_ntile_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ntile(4) balance quartiles (unique tie-break => deterministic),
     then per-quartile stats. The oracle states the semantics as SQL
     NTILE; the Spark plan reconstructs the identical bucketing from
-    AGG.global_rank + AGG.exact_ntile (bit-identical tile assignment
+    AGG.ordered_scan + AGG.exact_ntile (bit-identical tile assignment
     by construction, tests/test_scale_ops.py) — a bare NTILE() OVER
     (ORDER BY ...) is a single-partition sort of the whole customer
     table, the r6-retired scale shape."""
     (cust,) = _t(spark, sf_dir, "customer")
-    r = AGG.global_rank(
+    r = AGG.ordered_scan(
         cust.select("c_custkey", "c_acctbal"),
         ["c_acctbal", "c_custkey"],
-        rank_col="rk",
+        {"rk": "count"},
     )
     n = r.agg(F.count("*").cast("bigint").alias("n"))
     q = r.crossJoin(F.broadcast(n)).select(
@@ -6488,7 +6488,7 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: orders collapse to one row per customer first (partial
     agg); each quartile is the two-phase distributed rank + exact
-    NTILE reconstruction (AGG.global_rank/exact_ntile), chained three
+    NTILE reconstruction (AGG.ordered_scan/exact_ntile), chained three
     times — three parallel range-shuffles of the customer table, never
     a single-partition NTILE window funnelling every customer through
     one task."""
@@ -6498,16 +6498,16 @@ def orders_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("freq"),
         F.sum("o_totalprice").alias("monetary"),
     )
-    ranked = AGG.global_rank(
-        AGG.global_rank(
-            AGG.global_rank(
-                cust, ["last_order", "o_custkey"], rank_col="_rr"
+    ranked = AGG.ordered_scan(
+        AGG.ordered_scan(
+            AGG.ordered_scan(
+                cust, ["last_order", "o_custkey"], {"_rr": "count"}
             ),
             ["freq", "o_custkey"],
-            rank_col="_rf",
+            {"_rf": "count"},
         ),
         ["monetary", "o_custkey"],
-        rank_col="_rm",
+        {"_rm": "count"},
     )
     n_tot = ranked.agg(F.count("*").cast("bigint").alias("_n"))
     scored = ranked.crossJoin(F.broadcast(n_tot)).select(
@@ -6632,7 +6632,7 @@ def quality_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFram
     Shape: training is the same 5 partial-aggregated passes over the
     checkpointed feature frame; the calibration readout is the
     two-phase distributed rank + exact-NTILE reconstruction
-    (AGG.global_rank/exact_ntile — document-grain input, so a
+    (AGG.ordered_scan/exact_ntile — document-grain input, so a
     single-partition NTILE window is the 100x scale-killer here) and a
     10-group agg."""
     from slipstream_async_spark.operators.learn import logistic_fit
@@ -6646,10 +6646,10 @@ def quality_classifier_calibration(spark: SparkSession, sf_dir: str) -> DataFram
         + F.lit(w[2]) * F.col("x2")
         + F.lit(w[3]) * F.col("x3")
     )
-    ranked = AGG.global_rank(
+    ranked = AGG.ordered_scan(
         feats.select("doc_id", "y", z.alias("z")),
         ["z", "doc_id"],
-        rank_col="_r",
+        {"_r": "count"},
     )
     n_tot = ranked.agg(F.count("*").cast("bigint").alias("_n"))
     deciled = ranked.crossJoin(F.broadcast(n_tot)).withColumn(
@@ -7207,7 +7207,7 @@ def revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: orders collapse to one DECIMAL-exact row per customer; the
     decile comes from the two-phase distributed rank + exact-NTILE
-    reconstruction (AGG.global_rank/exact_ntile — never a
+    reconstruction (AGG.ordered_scan/exact_ntile — never a
     single-partition NTILE window over the customer table); the share
     windows run over exactly 10 rows. Ties break on the customer key
     so decile boundaries are engine-identical."""
@@ -7217,8 +7217,8 @@ def revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = orders.groupBy("o_custkey").agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
     )
-    ranked = AGG.global_rank(
-        cust, [F.desc("rev"), F.asc("o_custkey")], rank_col="_r"
+    ranked = AGG.ordered_scan(
+        cust, [F.desc("rev"), F.asc("o_custkey")], {"_r": "count"}
     )
     n_tot = ranked.agg(F.count("*").cast("bigint").alias("_n"))
     d = ranked.crossJoin(F.broadcast(n_tot)).select(
@@ -9902,7 +9902,7 @@ def orders_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: spend collapses to customer grain in one DECIMAL-exact
     partial agg and is quantized to EXACT integer cents (the *100 of a
     DECIMAL(18,2) is lossless); the rank is the two-phase distributed
-    prefix-rank (AGG.global_rank) with a unique tie-break — never a
+    prefix-rank (AGG.ordered_scan) with a unique tie-break — never a
     single-partition window over customer-grain rows; every sum in the
     formula is exact — the rank-weighted sum grows as n^2 * mean, so
     it runs in DECIMAL(38,0) (a BIGINT wraps silently around sf100
@@ -9913,7 +9913,7 @@ def orders_gini_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    r = AGG.global_rank(s, ["cents", "o_custkey"], rank_col="i")
+    r = AGG.ordered_scan(s, ["cents", "o_custkey"], {"i": "count"})
     iw = (
         F.col("i").cast("decimal(38,0)")
         * F.col("cents").cast("decimal(38,0)")
@@ -10510,7 +10510,7 @@ def lineitem_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     error bars are fine for dashboards, not for an SLA number that
     lands in a contract), computed WITHOUT a single-partition sort:
     AGG.exact_quantiles = the two-phase distributed prefix-rank
-    (global_rank) + a broadcast scalar row count + a 5-row broadcast of
+    (ordered_scan) + a broadcast scalar row count + a 5-row broadcast of
     target ranks. The oracle's row_number() OVER (ORDER BY ...) is the
     semantic spec; the Spark plan never funnels the table through one
     task.
@@ -10561,7 +10561,7 @@ def brand_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-brand price quartiles — the grouped companion to
     lineitem_exact_quantiles: here the rank window is PARTITIONED by
     brand, so the sort distributes across the group keyspace and no
-    global_rank machinery is needed (the single-partition hazard only
+    ordered_scan machinery is needed (the single-partition hazard only
     exists for by-less windows; a 25-brand partitioning spreads 25
     ways, and a high-cardinality group key spreads further).
 
@@ -12128,7 +12128,7 @@ def layout_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips all but ~1/64 + boundary files — the number that justifies
     Z-order/sort-on-write before a 100 TB scan-heavy workload.
 
-    Shape: the sorted assignment is AGG.global_rank + AGG.exact_ntile
+    Shape: the sorted assignment is AGG.ordered_scan + AGG.exact_ntile
     (never a single-partition NTILE window over the fact table); both
     zone-map passes are partial-aggregated groupBys to 64 rows."""
     (li,) = _t(spark, sf_dir, "lineitem")
@@ -12140,8 +12140,8 @@ def layout_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("f")
         .agg(F.min("l_shipdate").alias("lo"), F.max("l_shipdate").alias("hi"))
     )
-    r = AGG.global_rank(
-        slim, ["l_shipdate", "l_orderkey", "l_linenumber"], rank_col="rk"
+    r = AGG.ordered_scan(
+        slim, ["l_shipdate", "l_orderkey", "l_linenumber"], {"rk": "count"}
     )
     n = slim.agg(F.count("*").alias("n"))
     s = r.crossJoin(F.broadcast(n)).select(
@@ -13028,16 +13028,16 @@ def quality_length_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a curation pipeline.
 
     Shape: BOTH quartile assignments are the distributed two-phase
-    global_rank + exact-NTILE reconstruction (bit-identical to the
+    ordered_scan + exact-NTILE reconstruction (bit-identical to the
     oracle's NTILE windows, no single-partition sort over doc-grain
     rows); the contingency and marginals run at 16-cell grain."""
     (docs,) = _t(spark, sf_dir, "documents")
     q = spread(docs, "doc_id").select(
         "doc_id", "n_chars", TXT.quality_score("text").alias("quality")
     )
-    rq = AGG.global_rank(q, ["quality", "doc_id"], rank_col="_rq")
-    rl = AGG.global_rank(
-        q.select("doc_id", "n_chars"), ["n_chars", "doc_id"], rank_col="_rl"
+    rq = AGG.ordered_scan(q, ["quality", "doc_id"], {"_rq": "count"})
+    rl = AGG.ordered_scan(
+        q.select("doc_id", "n_chars"), ["n_chars", "doc_id"], {"_rl": "count"}
     )
     n = q.agg(F.count("*").alias("_n"))
     j = (
@@ -13120,7 +13120,7 @@ def stats_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: the oracle's two by-less row_number windows are the
     semantic spec; the Spark plan assigns BOTH total orders with
-    AGG.global_rank (two-phase distributed prefix-rank — range
+    AGG.ordered_scan (two-phase distributed prefix-rank — range
     partition, local rank, broadcast offsets), so no customer-grain
     row ever funnels through one task. sum(d^2) <= n^3 overflows
     BIGINT near 2^21 rows per... at 1.5e9 customers, so it accumulates
@@ -13136,15 +13136,15 @@ def stats_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("spend_c"),
     )
-    rx = AGG.global_rank(
+    rx = AGG.ordered_scan(
         c.select("o_custkey", "n_orders"),
         ["n_orders", "o_custkey"],
-        rank_col="rx",
+        {"rx": "count"},
     ).select("o_custkey", "rx")
-    ry = AGG.global_rank(
+    ry = AGG.ordered_scan(
         c.select("o_custkey", "spend_c"),
         ["spend_c", "o_custkey"],
-        rank_col="ry",
+        {"ry": "count"},
     ).select("o_custkey", "ry")
     d = rx.join(ry, "o_custkey").select(
         ((F.col("rx") - F.col("ry")) * (F.col("rx") - F.col("ry")))
@@ -13208,7 +13208,7 @@ def lineitem_weighted_median_price(
     quantities.
 
     Shape: the oracle's by-less ``SUM(w) OVER (ORDER BY price)`` is the
-    semantic spec; the Spark plan is AGG.global_prefix_sum — the
+    semantic spec; the Spark plan is AGG.ordered_scan — the
     two-phase distributed running sum (range partition on the sort key,
     local cumsum, broadcast per-partition total offsets), so no
     lineitem-grain row funnels through one task. Weights and prices are
@@ -13224,8 +13224,8 @@ def lineitem_weighted_median_price(
         "l_orderkey",
         "l_linenumber",
     )
-    cum = AGG.global_prefix_sum(
-        s, ["cents", "l_orderkey", "l_linenumber"], "w", out_col="cum"
+    cum = AGG.ordered_scan(
+        s, ["cents", "l_orderkey", "l_linenumber"], {"cum": ("sum", "w")}
     )
     t = s.agg(F.sum("w").cast("bigint").alias("w_total"))
     target = F.floor((F.col("w_total") + 1) / F.lit(2.0)).cast("bigint")
@@ -15384,7 +15384,7 @@ def events_user_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the curve the orders Gini summarizes for revenue).
 
     Shape: user-grain collapse first; the global rank is
-    AGG.global_rank's two-phase distributed prefix-rank (range
+    AGG.ordered_scan's two-phase distributed prefix-rank (range
     partition, local rank, broadcast offsets — never a single-
     partition sort over the user table); the decile rollup is 10 rows
     and its cumulative window is constant-size."""
@@ -15394,7 +15394,7 @@ def events_user_lorenz(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = events.groupBy("user_id").agg(
         F.count("*").cast("bigint").alias("c")
     )
-    r = AGG.global_rank(u, ["c", "user_id"], rank_col="rk")
+    r = AGG.ordered_scan(u, ["c", "user_id"], {"rk": "count"})
     tot = u.agg(
         F.sum("c").cast("bigint").alias("tot"),
         F.count("*").cast("bigint").alias("n"),
@@ -15848,12 +15848,11 @@ def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     much less).
 
     Shape: customer-grain collapse first; the descending rank AND the
-    running revenue sum both come from AGG.global_prefix_sum's
-    two-phase distributed prefix machinery (range partition, local
-    prefix, broadcast offsets) — never a single-partition window over
-    the customer table; the 80% crossing survives as ONE row via an
-    ordered limit. The crossing test is exact integer (cum*5 >=
-    tot*4)."""
+    running revenue sum both come from ONE AGG.ordered_scan pass (range
+    partition, local prefix, broadcast offsets) — never a
+    single-partition window over the customer table; the 80% crossing
+    survives as ONE row via an ordered limit. The crossing test is
+    exact integer (cum*5 >= tot*4)."""
     (orders,) = _t(spark, sf_dir, "orders")
     cust = orders.groupBy("o_custkey").agg(
         F.sum(
@@ -15866,13 +15865,11 @@ def orders_pareto_8020(spark: SparkSession, sf_dir: str) -> DataFrame:
     neg = cust.select(
         "o_custkey", "cents", (-F.col("cents")).alias("neg_cents")
     )
-    pre = AGG.global_prefix_sum(
-        neg, ["neg_cents", "o_custkey"], "cents", out_col="cum"
+    pre = AGG.ordered_scan(
+        neg,
+        ["neg_cents", "o_custkey"],
+        {"rk": "count", "cum": ("sum", "cents")},
     )
-    rk = AGG.global_rank(
-        neg, ["neg_cents", "o_custkey"], rank_col="rk"
-    ).select("o_custkey", "rk")
-    pre = pre.join(rk, "o_custkey")
     tot = cust.agg(
         F.sum("cents").cast("bigint").alias("tot"),
         F.count("*").cast("bigint").alias("n"),
@@ -15933,7 +15930,7 @@ def orders_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: day-grain collapse first, so the pair set is calendar x
     calendar (bounded at any corpus size); each slope is ONE exact
     integer division in double; the median comes from
-    AGG.global_rank's two-phase distributed rank over the slope table
+    AGG.ordered_scan's two-phase distributed rank over the slope table
     — never a single-partition sort of the n^2/2 pairs. Lower-median
     (rank floor((m+1)/2)) with a (slope, adn, bdn) total order keeps
     the picked value engine-deterministic."""
@@ -15967,7 +15964,7 @@ def orders_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("slope"),
         )
     )
-    r = AGG.global_rank(p, ["slope", "adn", "bdn"], rank_col="rk")
+    r = AGG.ordered_scan(p, ["slope", "adn", "bdn"], {"rk": "count"})
     # m is C(n, 2) by construction (one pair per unordered day pair with
     # bdn > adn over DISTINCT day grains): derive it from the day count
     # instead of re-materializing the ~n^2/2-row pair table a second
@@ -18510,7 +18507,7 @@ def orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary drift.
 
     Shape: customer-grain collapse first; the descending running
-    revenue sum is AGG.global_prefix_sum (range-shuffle + broadcast
+    revenue sum is AGG.ordered_scan (range-shuffle + broadcast
     offsets — never a single-partition ORDER BY window over every
     customer); the total is a one-row broadcast cross; 3 rows out."""
     (orders,) = _t(spark, sf_dir, "orders")
@@ -18525,8 +18522,8 @@ def orders_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
     neg = cust.select(
         "o_custkey", "cents", (-F.col("cents")).alias("neg_cents")
     )
-    pre = AGG.global_prefix_sum(
-        neg, ["neg_cents", "o_custkey"], "cents", out_col="cum"
+    pre = AGG.ordered_scan(
+        neg, ["neg_cents", "o_custkey"], {"cum": ("sum", "cents")}
     )
     tot = cust.agg(F.sum("cents").cast("bigint").alias("total"))
     cls = (
@@ -18768,7 +18765,7 @@ def orders_gaps_and_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator family (sessionize-by-identity rather than by time gap)
     that interviews call "gaps and islands".
 
-    Shape: day-grain distinct FIRST; the rank is AGG.global_rank
+    Shape: day-grain distinct FIRST; the rank is AGG.ordered_scan
     (range-shuffle + broadcast offsets, never one task sorting every
     day... and days are calendar-bounded anyway — belt and braces);
     the longest-island pick is a 1-row TakeOrdered crossed onto the
@@ -18783,7 +18780,7 @@ def orders_gaps_and_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    r = AGG.global_rank(daily, ["day_no"], rank_col="rk")
+    r = AGG.ordered_scan(daily, ["day_no"], {"rk": "count"})
     isl = (
         r.select("day_no", (F.col("day_no") - F.col("rk")).alias("island"))
         .groupBy("island")
@@ -19220,7 +19217,7 @@ def customer_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     whales; (0, q) columns are acquisition intake by entry tier.
 
     Shape: customer-period grain collapses first; each period's
-    quartile is the distributed global_rank + exact NTILE
+    quartile is the distributed ordered_scan + exact NTILE
     reconstruction (never a single-partition NTILE window over every
     customer — but note the per-period rank IS partitioned by period
     here, 2 bounded partitions, so plain rank windows would still
@@ -19234,7 +19231,7 @@ def customer_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Spread the single-split scan (guide §2.5) and materialize the
     # bounded customer-period spend table ONCE: both per-period
-    # quartile branches (each a global_rank + a count) re-executed the
+    # quartile branches (each an ordered_scan + a count) re-executed the
     # scan+aggregate lineage. Measured sf0.1 interleaved min-of-4:
     # 3.27 -> 2.39 s, identical output.
     o32 = spread(orders, "o_orderkey")
@@ -19265,7 +19262,9 @@ def customer_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         part = spend.filter(F.col("period") == period).select(
             "o_custkey", "cents"
         )
-        ranked = AGG.global_rank(part, ["cents", "o_custkey"], rank_col="_r")
+        ranked = AGG.ordered_scan(
+            part, ["cents", "o_custkey"], {"_r": "count"}
+        )
         n_tot = part.agg(F.count("*").cast("bigint").alias("_n"))
         return ranked.crossJoin(F.broadcast(n_tot)).select(
             "o_custkey",
@@ -19792,7 +19791,7 @@ def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing decisions (which deciles carry the token mass; where a
     min/max-length gate actually cuts).
 
-    Shape: ``AGG.global_rank`` (range-repartitioned two-phase
+    Shape: ``AGG.ordered_scan`` (range-repartitioned two-phase
     row_number — NO single-partition sort) + the closed-form
     ``AGG.exact_ntile`` reconstruction from rank and total count; the
     only by-less window runs over per-partition counts, bounded by the
@@ -19801,7 +19800,7 @@ def doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select(
         "doc_id", "n_chars", TXT.token_count("text").alias("toks")
     )
-    ranked = AGG.global_rank(d, ["n_chars", "doc_id"], rank_col="r")
+    ranked = AGG.ordered_scan(d, ["n_chars", "doc_id"], {"r": "count"})
     total = d.agg(F.count("*").cast("bigint").alias("n"))
     tiled = ranked.crossJoin(F.broadcast(total)).withColumn(
         "decile", AGG.exact_ntile("r", "n", 10)
@@ -20070,7 +20069,7 @@ def orders_record_revenue_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     AT the high-water mark — the record/drawdown primitive behind
     peak-detection, high-water-mark fees, and freshness SLOs.
 
-    Shape: ``AGG.global_running_max`` — the two-phase distributed
+    Shape: ``AGG.ordered_scan`` — the two-phase distributed
     running max (range-repartition, per-partition running max,
     broadcast prefix-max offsets) instead of the single-partition
     ``MAX() OVER (ORDER BY ...)``; DECIMAL revenue so the max/compare
@@ -20079,7 +20078,7 @@ def orders_record_revenue_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
     )
-    m = AGG.global_running_max(daily, ["day"], "rev", out_col="run_max")
+    m = AGG.ordered_scan(daily, ["day"], {"run_max": ("max", "rev")})
     return m.select(
         "day",
         F.col("rev").cast("double").alias("revenue"),
@@ -20169,7 +20168,7 @@ def vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-economics battery.
 
     Shape: type frequencies are one partial-agg groupBy on an UNBOUNDED
-    domain, so the frequency ranking uses ``AGG.global_rank`` (two-phase
+    domain, so the frequency ranking uses ``AGG.ordered_scan`` (two-phase
     distributed row_number — no single-partition sort over the vocab);
     coverage per k is a conditional sum against a 3-row broadcast dim."""
     (docs,) = _t(spark, sf_dir, "documents")
@@ -20178,7 +20177,7 @@ def vocab_coverage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t")
         .agg(F.count("*").alias("f"))
     )
-    rk = AGG.global_rank(tf, [F.col("f").desc(), F.col("t")], rank_col="r")
+    rk = AGG.ordered_scan(tf, [F.col("f").desc(), F.col("t")], {"r": "count"})
     tot = tf.agg(F.sum("f").alias("n"))
     ks = spark.createDataFrame([(4,), (16,), (64,)], "k long")
     hit = F.when(F.col("r") <= F.col("k"), 1).otherwise(0)
@@ -20227,7 +20226,7 @@ def orders_drawdown_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     readout to orders_record_revenue_days, collapsed to the grain a
     capacity/risk review actually reads.
 
-    Shape: one ``AGG.global_running_max`` pass (distributed two-phase
+    Shape: one ``AGG.ordered_scan`` pass (distributed two-phase
     running max over the day grain), then a 7-row year rollup; DECIMAL
     revenue keeps the max/ratio arithmetic exact until the final
     rounded division."""
@@ -20235,7 +20234,7 @@ def orders_drawdown_by_year(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(F.col("o_orderdate").alias("day")).agg(
         F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("rev")
     )
-    m = AGG.global_running_max(daily, ["day"], "rev", out_col="run_max")
+    m = AGG.ordered_scan(daily, ["day"], {"run_max": ("max", "rev")})
     dd = (F.col("run_max") - F.col("rev")).cast("double") / F.col(
         "run_max"
     ).cast("double")
@@ -20811,7 +20810,7 @@ def vocab_pruning_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiple of the average OOV cost; this is the readout that catches
     it before the tokenizer ships).
 
-    Shape: corpus type frequencies ranked with ``AGG.global_rank``
+    Shape: corpus type frequencies ranked with ``AGG.ordered_scan``
     (distributed — no single-partition vocab sort), joined back to the
     token stream on the type key (rank table is vocab-sized), crossed
     with the 3-row size dim, rolled up to |sources| x 3 rows."""
@@ -20822,7 +20821,7 @@ def vocab_pruning_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source", F.explode(TXT.tokens("text")).alias("t")
     ).transform(scoped_cache, "vocab_pruning_fairness")
     tf = tok.groupBy("t").agg(F.count("*").alias("f"))
-    rk = AGG.global_rank(tf, [F.col("f").desc(), F.col("t")], rank_col="r")
+    rk = AGG.ordered_scan(tf, [F.col("f").desc(), F.col("t")], {"r": "count"})
     ks = spark.createDataFrame([(4,), (16,), (64,)], "k long")
     oov = F.when(F.col("r") > F.col("k"), 1).otherwise(0)
     return (
@@ -23281,7 +23280,7 @@ def quality_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: one scan to a micro-quantized value grain; the AUC's
     pairwise comparisons collapse onto that grain via a DISTRIBUTED
-    prefix sum (AGG.global_prefix_sum — range-repartitioned two-phase,
+    prefix sum (AGG.ordered_scan — range-repartitioned two-phase,
     no single-partition sort); the 5-row threshold dim and one-row
     totals broadcast-cross onto it. All counts exact integers; ratios
     final doubles."""

@@ -311,77 +311,82 @@ def test_contiguous_pack_bucket_size_invariant(spark):
     assert sum(stats.values()) == 100
 
 
-def test_global_rank_matches_single_partition_window(spark):
-    """The two-phase distributed prefix-rank equals row_number over a
-    by-less window for every partition count (including 1 == the serial
-    form), and exact_ntile reconstructs NTILE(k) bit-for-bit — the
-    uneven-tile case (n % k != 0) included."""
+_SCAN_FOLDS = {
+    "count": {"r": "count"},
+    "sum": {"cum": ("sum", "w")},
+    "max": {"mx": ("max", "w")},
+    "count+sum": {"r": "count", "cum": ("sum", "w")},
+}
+
+
+@pytest.mark.parametrize("parts", [1, 5, 200])
+@pytest.mark.parametrize("folds", list(_SCAN_FOLDS))
+def test_ordered_scan_matches_single_partition_window(spark, folds, parts):
+    """The two-phase distributed scan equals the by-less window for
+    every fold and partition count (1 == the serial form, 200 leaves
+    ranges empty), over a descending order column and NULL weights:
+    a NULL run in mid-order makes ranges start on NULL rows, and the
+    first rows' NULLs keep the running sum/max NULL until a weight
+    is seen. exact_ntile over the count fold reconstructs NTILE(k)
+    bit-for-bit, the uneven-tile case (n % k != 0) included. A float
+    sum weight fails closed."""
     from pyspark.sql import Window
 
     from slipstream_async_spark.operators.aggregations import (
         exact_ntile,
-        global_rank,
+        ordered_scan,
     )
 
-    rows = [(i, (i * 37) % 11, (i * 13) % 7) for i in range(103)]
-    df = spark.createDataFrame(rows, "id long, a long, b long")
-    w = Window.orderBy("a", F.desc("b"), "id")
+    def weight(i, a):
+        return None if a in (0, 4, 5, 6) or i % 7 == 0 else 1 + (i * i) % 9
+
+    rows = [
+        (i, (i * 37) % 11, (i * 13) % 7, weight(i, (i * 37) % 11))
+        for i in range(103)
+    ]
+    df = spark.createDataFrame(rows, "id long, a long, b long, w long")
+    order = ["a", F.desc("b"), "id"]
+    w = Window.orderBy(*order)
+    run = w.rowsBetween(Window.unboundedPreceding, 0)
+    want_cols = {
+        "r": F.row_number().over(w),
+        "cum": F.sum("w").over(run),
+        "mx": F.max("w").over(run),
+        "t3": F.ntile(3).over(w),
+        "t4": F.ntile(4).over(w),
+    }
+    fold = _SCAN_FOLDS[folds]
+    cols = list(fold) + (["t3", "t4"] if "r" in fold else [])
     want = {
-        r["id"]: (r["rn"], r["t3"], r["t4"])
+        r["id"]: tuple(r[c] for c in cols)
         for r in df.select(
-            "id",
-            F.row_number().over(w).alias("rn"),
-            F.ntile(3).over(w).alias("t3"),
-            F.ntile(4).over(w).alias("t4"),
+            "id", *(want_cols[c].alias(c) for c in cols)
         ).collect()
     }
-    for parts in (1, 5, 64):
-        ranked = global_rank(
-            df, ["a", F.desc("b"), "id"], rank_col="r", partitions=parts
+    with pytest.raises(TypeError):
+        ordered_scan(
+            df.withColumn("wf", F.col("w").cast("double")),
+            order,
+            {"cum": ("sum", "wf")},
         )
-        n_tot = ranked.agg(F.count("*").cast("bigint").alias("_n"))
-        got = {
-            r["id"]: (r["r"], r["t3"], r["t4"])
-            for r in ranked.crossJoin(F.broadcast(n_tot))
-            .select(
-                "id",
-                "r",
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+    try:
+        scanned = ordered_scan(df, order, fold)
+        if "r" in fold:
+            n_tot = scanned.agg(F.count("*").cast("bigint").alias("_n"))
+            scanned = scanned.crossJoin(F.broadcast(n_tot)).select(
+                "*",
                 exact_ntile("r", "_n", 3).alias("t3"),
                 exact_ntile("r", "_n", 4).alias("t4"),
             )
-            .collect()
-        }
-        assert got == want, parts
-
-
-def test_global_prefix_sum_matches_single_partition_window(spark):
-    """The two-phase distributed running sum equals SUM(w) OVER a
-    by-less window for every partition count, including weights that
-    force uneven per-partition totals and a partition count above the
-    row count (empty ranges)."""
-    from pyspark.sql import Window
-
-    from slipstream_async_spark.operators.aggregations import (
-        global_prefix_sum,
-    )
-
-    rows = [(i, (i * 37) % 11, 1 + (i * i) % 9) for i in range(103)]
-    df = spark.createDataFrame(rows, "id long, a long, w long")
-    w = Window.orderBy("a", "id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    want = {
-        r["id"]: r["cum"]
-        for r in df.select("id", F.sum("w").over(w).alias("cum")).collect()
-    }
-    for parts in (1, 5, 200):
         got = {
-            r["id"]: r["cum"]
-            for r in global_prefix_sum(
-                df, ["a", "id"], "w", partitions=parts
-            ).collect()
+            r["id"]: tuple(r[c] for c in cols) for r in scanned.collect()
         }
-        assert got == want, parts
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert got == want
 
 
 def test_brute_force_topk_pandas_matches_expression_lane(spark):

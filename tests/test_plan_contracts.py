@@ -302,7 +302,7 @@ def test_gate_attribution_drop_list_join_is_adaptive(q):
 )
 def test_no_global_window_over_unbounded_grain(q, name):
     """The customer/document-grain rank queries must use the two-phase
-    distributed prefix-rank (AGG.global_rank), never a by-less window
+    distributed ordered scan (AGG.ordered_scan), never a by-less window
     that funnels the whole keyspace through one task: every window over
     data-grain rows is partitioned by the range-partition id (_pid),
     and the materialized (localCheckpoint) rank frame is what the plan
@@ -344,8 +344,8 @@ def test_backlog_is_interval_decomposed(q):
 
 def test_exact_quantiles_no_single_partition_data_sort(q):
     """lineitem_exact_quantiles: the total order must come from the
-    two-phase global_rank (range repartition + local rank + broadcast
-    offsets over the checkpointed frame) — the plan reads the
+    two-phase ordered_scan count fold (range repartition + local rank +
+    broadcast offsets over the checkpointed frame) — the plan reads the
     materialized index and contains no single-partition Exchange over
     data-grain rows (the only SinglePartition branch is the bounded
     per-partition-counts offsets window)."""
@@ -396,20 +396,43 @@ def test_pagerank_solves_bounded_graph_on_driver(q):
 
 def test_weighted_median_prefix_sum_distributed(q):
     """lineitem_weighted_median_price: the running sum must come from
-    the two-phase global_prefix_sum (range repartition + local cumsum +
-    broadcast offsets over the checkpointed frame) — the plan reads the
-    materialized frame and the only SinglePartition branches are the
-    per-partition-totals offsets window and the scalar half-total
-    aggregate, never the lineitem-grain rows."""
+    the two-phase ordered_scan sum fold (range repartition + local
+    cumsum + broadcast offsets over the checkpointed frame) — the plan
+    reads the materialized frame and the only SinglePartition branches
+    are the per-partition-totals offsets window and the scalar
+    half-total aggregate, never the lineitem-grain rows."""
     plan = _plan(q["lineitem_weighted_median_price"], "formatted")
     assert "Scan ExistingRDD" in plan, plan
     assert plan.count("SinglePartition") <= 2, plan
     assert "SortMergeJoin" not in plan, plan
 
 
+def test_pareto_rank_and_sum_share_one_scan(q):
+    """orders_pareto_8020: the descending rank and the running revenue
+    sum are two folds of ONE AGG.ordered_scan over the same order — the
+    plan reads exactly one checkpointed range-partitioned frame, and no
+    join on o_custkey stitches a second copy back on."""
+    import re
+
+    plan = _plan(q["orders_pareto_8020"], "formatted")
+    rdds = set(
+        re.findall(
+            r"\) Scan ExistingRDD\nOutput .*\n"
+            r"Arguments: \[[^\]]*\], (\w+\[\d+\])",
+            plan,
+        )
+    )
+    assert len(rdds) == 1, plan
+    joins = [
+        ln for ln in _plan(q["orders_pareto_8020"], "simple").splitlines()
+        if "Join" in ln
+    ]
+    assert not [ln for ln in joins if "o_custkey" in ln], joins
+
+
 def test_key_skew_percentiles_distributed(q):
     """events_key_skew_report: the exact p50/p99 of per-key counts run
-    through AGG.exact_quantiles' two-phase rank — the plan reads the
+    through AGG.exact_quantiles' ordered_scan rank — the plan reads the
     checkpointed rank frame, and every SinglePartition branch takes
     aggregate-grain input (offsets window, scalar maxima, the pivoted
     2-value percentile frame, the final 1-row assembly), bounded at 4."""
@@ -434,7 +457,7 @@ def test_burstiness_topk_is_take_ordered(q):
 
 def test_spearman_ranks_distributed(q):
     """stats_spearman_rank: BOTH total orders (by order count, by
-    spend) must come from AGG.global_rank's checkpointed two-phase
+    spend) must come from AGG.ordered_scan's checkpointed two-phase
     frames — the plan reads materialized rank frames and keeps
     SinglePartition branches to the two offsets windows plus the final
     scalar aggregate (3), never a customer-grain global sort."""

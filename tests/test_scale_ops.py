@@ -609,14 +609,19 @@ def test_exact_quantiles_matches_sorted_python(spark):
         p: sorted(vals)[-(-p * len(vals) // 100) - 1]
         for p in (1, 25, 50, 75, 100)
     }
-    for parts in (1, 4, 32):
-        got = {
-            r["pct"]: r["value"]
-            for r in exact_quantiles(
-                df, "v", [1, 25, 50, 75, 100], partitions=parts
-            ).collect()
-        }
-        assert got == want, (parts, got, want)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in (1, 4, 32):
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            got = {
+                r["pct"]: r["value"]
+                for r in exact_quantiles(
+                    df, "v", [1, 25, 50, 75, 100]
+                ).collect()
+            }
+            assert got == want, (parts, got, want)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
     with pytest.raises(ValueError):
         exact_quantiles(df, "v", [0, 50])

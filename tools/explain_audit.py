@@ -165,7 +165,7 @@ ALLOW_BNLJ = {
     "part_bigram_pmi",
     # 5-row percentile dim crossed with the one-row total count to
     # derive target ranks — scalar-subquery shape; the rank itself is
-    # the distributed global_rank, never a single-partition sort
+    # the distributed ordered_scan, never a single-partition sort
     "lineitem_exact_quantiles",
     # 5-row lag dim broadcast-crossed onto the day-grain aggregate —
     # calendar-sized sides, the orders_revenue_ewma shape
@@ -188,7 +188,7 @@ ALLOW_BNLJ = {
     # 2-NN rank window; CONSTANT broadcast side at any size (r8 fix)
     "emb_intrinsic_dimension",
     # one-row half-total target crossed onto the prefix-sum frame —
-    # the scalar-subquery shape over global_prefix_sum's output
+    # the scalar-subquery shape over ordered_scan's sum fold
     "lineitem_weighted_median_price",
     # one-row (p5, p95) threshold frame crossed onto the fact scan
     # before the clamp — the emb_outlier_gate shape
@@ -233,7 +233,7 @@ ALLOW_BNLJ = {
     "orders_seasonal_decompose",
     "orders_dow_index",
     # one-row global-total scalars crossed onto bounded aggregates —
-    # the scalar-subquery shape across the global_rank rewrites
+    # the scalar-subquery shape across the ordered_scan rewrites
     "orders_rfm_segments",
     "win_ntile_quartiles",
     "quality_classifier_calibration",
@@ -272,7 +272,7 @@ ALLOW_BNLJ = {
     # one-row dim-count scalar crossed onto the one-row pair summary
     "emb_covariance_offdiag",
     # one-row revenue total crossed onto the prefix-sum frame — the
-    # scalar-subquery shape over global_prefix_sum's output
+    # scalar-subquery shape over ordered_scan's sum fold
     "orders_abc_class",
     # three one-row location scalars crossed onto the day-grain frame,
     # one per IRLS iteration — control-plane rows, not data
@@ -389,8 +389,7 @@ PY_STAGE_OK = {
 # broadcast shapes. Anything NOT listed here that plans a
 # SinglePartition window is the classic 100 TB killer (a global sort
 # funneling an unbounded grain through one task) and fails the audit;
-# the distributed alternative is AGG.global_rank / exact_ntile /
-# global_prefix_sum (aggregations.py:147-316).
+# the distributed alternative is AGG.ordered_scan / exact_ntile.
 ALLOW_GLOBAL_WINDOW: dict[str, str] = {
     # day-grain series (bounded by the calendar):
     "orders_cusum_changepoint": "day-grain prefix stats",
@@ -466,9 +465,9 @@ def singlepartition_window(plan: str) -> bool:
                 continue
             d = pd_
             if pt.startswith(("Window", "WindowGroupLimit", "RunningWindowFunction")):
-                # The two-phase global_rank / global_prefix_sum /
-                # contiguous_pack machinery (aggregations.py:147-316,
-                # packing.py) deliberately runs ONE by-less window —
+                # The two-phase ordered_scan / contiguous_pack
+                # machinery (aggregations.ordered_scan, packing.py)
+                # deliberately runs ONE by-less window —
                 # over a per-partition/per-bucket TOTALS frame bounded
                 # by the partition or bucket count, never by data. Its
                 # signature is an INTERNAL underscore-prefixed sort key
