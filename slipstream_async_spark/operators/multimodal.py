@@ -218,9 +218,8 @@ def _decode_payload(kind: str, payload: bytes):
 
 
 def _payload_stats(kind: str, payload: bytes) -> tuple:
-    """Shared per-payload decode + stats for both decode lanes — ONE
-    definition so the mapInPandas and mapInArrow lanes cannot drift
-    (their equivalence is a tested contract)."""
+    """Decode one payload and return its (n_bytes, mean_byte_x10000,
+    min_byte, max_byte, hist_csv) statistics for ``decode_features``."""
     import numpy as np
 
     a = _decode_payload(kind, payload)
@@ -365,54 +364,4 @@ def embed_media(media: DataFrame, dim: int = N_HIST_BINS) -> DataFrame:
 
     return media.select("media_id", "kind", "payload").mapInPandas(
         _batches, MEDIA_EMBED_TYPE
-    )
-
-
-def decode_features_arrow(media: DataFrame) -> DataFrame:
-    """`decode_features`, Arrow-native lane: ``mapInArrow`` hands the
-    task raw ``pyarrow.RecordBatch``es, skipping the Arrow->pandas block
-    conversion entirely — on BINARY-heavy rows that conversion is pure
-    overhead (payloads copy into object-dtype cells just to be read back
-    out). Same output schema and values as decode_features; prefer this
-    lane when batches are large and payload-dominated."""
-
-    def _batches(it):
-        import pyarrow as pa
-
-        for rb in it:
-            ids = rb.column(0).to_pylist()
-            kinds = rb.column(1).to_pylist()
-            payloads = rb.column(2)
-            out = {k: [] for k in (
-                "media_id", "kind", "n_bytes", "mean_byte_x10000",
-                "min_byte", "max_byte", "hist_csv",
-            )}
-            for mid, kind, pay in zip(ids, kinds, payloads):
-                n, mean_x, mn, mx, hist_csv = _payload_stats(
-                    kind, pay.as_py()
-                )
-                out["media_id"].append(mid)
-                out["kind"].append(kind)
-                out["n_bytes"].append(n)
-                out["mean_byte_x10000"].append(mean_x)
-                out["min_byte"].append(mn)
-                out["max_byte"].append(mx)
-                out["hist_csv"].append(hist_csv)
-            yield pa.RecordBatch.from_pydict(
-                out,
-                schema=pa.schema(
-                    [
-                        ("media_id", pa.int64()),
-                        ("kind", pa.string()),
-                        ("n_bytes", pa.int64()),
-                        ("mean_byte_x10000", pa.int64()),
-                        ("min_byte", pa.int32()),
-                        ("max_byte", pa.int32()),
-                        ("hist_csv", pa.string()),
-                    ]
-                ),
-            )
-
-    return media.select("media_id", "kind", "payload").mapInArrow(
-        _batches, DECODE_FEATURES_TYPE
     )

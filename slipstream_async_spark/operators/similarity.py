@@ -1,30 +1,41 @@
 """Similarity search over embedding columns (ARRAY<FLOAT>).
 
-Two paths, both pure DataFrame/expression plans:
+Exact lanes. Each has a pure-expression form (JVM higher-order-function
+folds; the reference) and, while the anchor side fits
+``_ARROW_TOPK_MAX_QUERIES`` rows, an Arrow/numpy form that is
+bit-identical to it: one shared kernel collects the anchors, splits each
+batch by the expression lane's NULL rule and computes the exact
+index-ordered cosine; each operator adds only its selection rule.
 
-- ``brute_force_topk`` — exact cosine top-k: broadcast the query set
-  against the corpus (one pass over the corpus, no corpus shuffle), rank
-  per query. The right baseline, and the right *final* step of any ANN
-  scheme. Scale: O(|corpus| * |queries|) dot products but a single corpus
-  scan; for thousands of queries at 100 TB, batch the queries.
-- ``lsh_bucket_topk`` — sign-LSH bucketed approximate top-k: bucket key =
-  sign bits of ``n_planes`` leading dimensions (axis-aligned hyperplanes —
-  constant-free, so the DuckDB oracle reproduces it; swap in seeded
-  random planes via ``planes=`` for better recall). Candidates are only
-  corpus rows sharing the query's bucket, then exact cosine rank. The
-  classic recall/cost dial: more planes = smaller buckets = cheaper +
-  lower recall.
+- ``brute_force_topk`` (expression form ``brute_force_topk_expr``) —
+  cosine top-k per query: one corpus scan against the broadcast query
+  set, per-batch top-k pre-selection, Spark's rank window decides.
+- ``anchor_cosine_scores`` — every (corpus, anchor) cosine, for queries
+  that aggregate over all pairs.
+- ``l2sq_topn`` — the n smallest squared L2 distances per anchor.
+- ``assign_nearest_centroid`` — max-cosine centroid per vector (the IVF
+  and k-means assignment step).
 
+Approximate lanes, all pure expression plans:
+
+- ``lsh_bucket_topk`` — sign-LSH bucketed top-k: bucket key = sign bits
+  of ``n_planes`` dimensions (axis-aligned hyperplanes — constant-free,
+  so the DuckDB oracle reproduces it), multi-table recall dial
+  ``n_tables``; candidates share the query's bucket, then exact cosine
+  rank. Sign-LSH follows Charikar's rounding-hyperplane scheme (STOC
+  2002); ``embedding_near_dup_pairs`` reuses the bucketing for
+  cosine >= threshold pairs.
 - ``ivf_topk`` — inverted-file (IVF) ANN: a coarse quantizer assigns each
   corpus vector to one of ``n_lists`` lists; queries probe the nearest
-  ``n_probe`` lists (the IVFADC family without the PQ compression step —
-  Jégou et al., "Product quantization for nearest neighbor search",
-  TPAMI 2011). Deterministic sampled centroids keep it one-pass and
-  oracle-reproducible; swap in trained centroids for recall.
+  ``n_probe`` lists. Deterministic sampled centroids keep it one-pass and
+  oracle-reproducible; ``ivf_index_write`` materializes the index once
+  for partition-pruned probes.
+- ``pq_encode`` / ``pq_topk`` / ``ivfadc_topk`` — product quantization
+  and the composed IVFADC(+R) pipeline (Jégou et al., "Product
+  quantization for nearest neighbor search", TPAMI 2011).
 
-Embedding near-duplicate detection (cosine >= threshold pairs) reuses the
-same bucketing via ``embedding_near_dup_pairs``. Sign-LSH follows
-Charikar's rounding-hyperplane scheme (STOC 2002).
+``semdedup`` (SemDeDup, arXiv:2303.09540) prunes near-duplicates inside
+IVF clusters with a grouped Arrow kernel on the same exact cosine.
 """
 
 from __future__ import annotations
@@ -84,8 +95,8 @@ def brute_force_topk_expr(
     return _ranked_topk(scored, k, query_id_col, id_col)
 
 
-# Bound on the driver-collected query side of the Arrow brute-force lane.
-# Catalog anchor sets are LIMIT 128; anything past this cap stays on the
+# Bound on the driver-collected anchor side of the Arrow lanes. Catalog
+# anchor sets are LIMIT 128; anything past this cap stays on the
 # expression lane (a broadcast there, a closure here — both bounded).
 _ARROW_TOPK_MAX_QUERIES = 4096
 # Per-batch candidate margin. Spark's round(x, 6) moves a cosine by at
@@ -125,6 +136,118 @@ def _exact_sq_norm(mat):
     return acc
 
 
+def _exact_cosine(mat, sq, q_mat, q_norm):
+    """(n, m) cosines of ``functions.vectors.cosine_similarity``: the
+    index-ordered dot over ``sqrt(sq) * q_norm`` (``sqrt`` and division
+    are single IEEE ops in both engines), and 0.0 wherever that norm
+    product is 0.0 — the expression's zero-norm guard, which fires
+    before its dot product is looked at."""
+    import numpy as np
+
+    dots = _exact_pair_dots(mat, q_mat)
+    denom = np.sqrt(sq)[:, None] * q_norm[None, :]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, 0.0, dots / denom)
+
+
+def _collect_anchor_rows(queries: DataFrame, cols: list[str]):
+    """Driver-collect a bounded anchor frame for the Arrow lanes; None
+    when it is too big / empty / holds a null, NaN or infinite vector
+    element / mixes vector lengths (callers then fall back to the
+    expression lane). ``cols`` starts with the id and the vector."""
+    import math
+
+    rows = queries.select(*cols).limit(_ARROW_TOPK_MAX_QUERIES + 1).collect()
+    if not rows or len(rows) > _ARROW_TOPK_MAX_QUERIES:
+        return None
+    vecs = [r[1] for r in rows]
+    if any(
+        v is None or any(x is None or not math.isfinite(x) for x in v)
+        for v in vecs
+    ):
+        return None
+    if len({len(v) for v in vecs}) != 1:
+        return None
+    return rows
+
+
+def _batch_matrix(vecs, dim):
+    """The float64 matrix of one batch's vectors and each row's squared
+    norm, under the expression lane's NULL rule.
+
+    A null vector, or one whose length is not ``dim`` (``zip_with`` pads
+    the shorter side with nulls, so its dot products are NULL), becomes a
+    row of NaN, and every score it enters is NaN. The Arrow lanes treat
+    every NaN score as NULL: mapInPandas' Arrow conversion writes NaN out
+    as NULL, and a null vector element comes in as NaN, so a NaN element
+    cannot be told from a null one and scores NULL too (the expression
+    lane gives NaN for it). A wrong-length row keeps the squared norm of
+    its own elements, so the zero-norm guard still scores it 0.0 against
+    a zero anchor, as the expression does."""
+    import numpy as np
+
+    vecs = [None if v is None else np.asarray(v, dtype=np.float64) for v in vecs]
+    mat = np.array(
+        [
+            v if v is not None and len(v) == dim else np.full(dim, np.nan)
+            for v in vecs
+        ],
+        dtype=np.float64,
+    ).reshape(len(vecs), dim)
+    sq = _exact_sq_norm(mat)
+    for i, v in enumerate(vecs):
+        if v is not None and len(v) != dim:
+            sq[i] = _exact_sq_norm(v[None, :])[0]
+    return mat, sq
+
+
+def _field(df: DataFrame, col: str, name: str | None = None):
+    from pyspark.sql.types import StructField
+
+    return StructField(name or col, df.schema[col].dataType, True)
+
+
+def _arrow_lane(corpus, id_col, vec_col, row_cols, anchor_cols, dim,
+                score, select, out_schema):
+    """One exact Arrow lane over ``corpus``.
+
+    Per batch, ``score(mat, sq)`` turns :func:`_batch_matrix`'s output
+    into (rows x anchors) float64 scores (NaN = NULL) and
+    ``select(scores, ids)`` picks the (row, anchor) index pairs to emit.
+    Each ``out_schema`` column is a corpus column (``row_cols``), an
+    anchor column (``anchor_cols``: name -> one value per anchor) or,
+    for any other name, the score."""
+    def run(batches):
+        import pandas as pd
+
+        for b in batches:
+            if len(b) == 0:
+                continue
+            scores = score(*_batch_matrix(b[vec_col], dim))
+            rix, cix = select(scores, b[id_col].to_numpy())
+            yield pd.DataFrame(
+                {
+                    c: anchor_cols[c][cix] if c in anchor_cols
+                    else b[c].to_numpy()[rix] if c in row_cols
+                    else scores[rix, cix]
+                    for c in out_schema.names
+                }
+            )
+
+    return corpus.select(
+        *[F.col(c) for c in dict.fromkeys([id_col, vec_col, *row_cols])]
+    ).mapInPandas(run, out_schema)
+
+
+def _anchor_matrix(rows):
+    """(ids, float64 matrix) of collected anchor rows."""
+    import numpy as np
+
+    return np.array([r[0] for r in rows]), np.array(
+        [r[1] for r in rows], dtype=np.float64
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -135,155 +258,68 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k per query vector (Arrow lane).
 
-    Bit-identical to :func:`brute_force_topk_expr` by construction, not
-    by luck: the per-pair cosine is computed in numpy with the exact
-    index-ordered float64 fold the JVM expression performs (multiply
-    then accumulate, dimension by dimension — see ``_exact_pair_dots``),
-    ``sqrt``/division are single IEEE ops in both engines, the zero-norm
-    guard maps to the same 0.0, and Spark itself applies the final
+    Bit-identical to :func:`brute_force_topk_expr`: the per-pair cosine
+    is :func:`_exact_cosine`, and Spark itself applies the final
     ``round(_, 6)`` and the global rank window. The Python stage only
     *scores* and *pre-selects*: each batch emits every non-self row
     within ``_ARROW_TOPK_MARGIN`` of its own k-th best unrounded cosine
     — a provable superset of the global rounded top-k (margin argument
     above) — so the rank window sees ~|batches|*m*k rows instead of
     n*m (map-side top-k: shuffle rows collapse before the exchange).
+    NULL cosines (NaN here) rank last in Spark and are always emitted,
+    so an under-filled query still sees them.
 
-    Falls back to the expression lane when the query side exceeds
-    ``_ARROW_TOPK_MAX_QUERIES`` rows or carries null vectors (the
-    catalog's anchor sets are LIMIT <= 128 and non-null). Corpus rows
-    with a null embedding are emitted with a null cosine for every
-    query, exactly as the expression lane's fold yields null.
+    Falls back to the expression lane when :func:`_collect_anchor_rows`
+    refuses the query side (the catalog's anchor sets are LIMIT <= 128
+    and clean).
     """
-    qrows = (
-        queries.select(F.col(query_id_col), F.col(vec_col))
-        .limit(_ARROW_TOPK_MAX_QUERIES + 1)
-        .collect()
-    )
-    if (
-        not qrows
-        or len(qrows) > _ARROW_TOPK_MAX_QUERIES
-        or any(r[1] is None or any(x is None for x in r[1]) for r in qrows)
-    ):
+    rows = _collect_anchor_rows(queries, [query_id_col, vec_col])
+    if rows is None:
         return brute_force_topk_expr(
             corpus, queries, k, id_col, vec_col, query_id_col
         )
     import numpy as np
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    dims = {len(r[1]) for r in qrows}
-    if len(dims) != 1:
-        return brute_force_topk_expr(
-            corpus, queries, k, id_col, vec_col, query_id_col
-        )
-    (dim,) = dims
-    q_ids = [r[0] for r in qrows]
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
+    q_ids, q_mat = _anchor_matrix(rows)
     q_norm = np.sqrt(_exact_sq_norm(q_mat))
     m = len(q_ids)
 
-    corpus_fields = {f.name: f for f in corpus.schema.fields}
-    query_fields = {f.name: f for f in queries.schema.fields}
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField(
-                query_id_col,
-                query_fields[query_id_col].dataType,
-                True,
-            ),
-            StructField(id_col, corpus_fields[id_col].dataType, True),
-            StructField("cosine", DoubleType(), True),
-        ]
-    )
-    margin = _ARROW_TOPK_MARGIN
-    q_ids_arr = np.array(q_ids)
-
-    def score(batches):
-        import pandas as pd
-
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ids = b[id_col].to_numpy()
-            vecs = b[vec_col]
-            # Row-level nulls and ragged vectors are where the JVM fold
-            # yields NULL (zip_with pads length mismatches with nulls):
-            # emit (row x every query) with a genuine NULL cosine.
-            null_mask = np.array(
-                [v is None or len(v) != dim for v in vecs], dtype=bool
-            )
-            if null_mask.any():
-                bad_ids = ids[null_mask]
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.repeat(q_ids_arr, len(bad_ids)),
-                        id_col: np.tile(bad_ids, m),
-                        "cosine": pd.array(
-                            [None] * (len(bad_ids) * m), dtype="Float64"
-                        ),
-                    }
-                )
-                if null_mask.all():
-                    continue
-                ids = ids[~null_mask]
-                vecs = vecs[~null_mask]
-            mat = np.array(
-                [np.asarray(v, dtype=np.float64) for v in vecs],
-                dtype=np.float64,
-            )
-            dots = _exact_pair_dots(mat, q_mat)
-            c_norm = np.sqrt(_exact_sq_norm(mat))
-            denom = c_norm[:, None] * q_norm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom == 0.0, 0.0, dots / denom)
-            sel = sims.copy()
-            self_mask = ids[:, None] == q_ids_arr[None, :]
-            sel[self_mask] = -np.inf
-            # NaN payloads compute through to NaN, which a descending
-            # Spark sort ranks FIRST — they must always survive
-            # pre-selection, and must not poison the k-th threshold.
-            nan_mask = np.isnan(sel)
-            sel[nan_mask] = -np.inf
-            n = sel.shape[0]
-            if n > k:
-                kth = np.partition(sel, n - k, axis=0)[n - k, :]
-            else:
-                kth = np.full(m, -np.inf)
-            keep = (
-                (sel >= (kth - margin)[None, :]) | nan_mask
-            ) & ~self_mask
-            rows, cols = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    query_id_col: q_ids_arr[cols],
-                    id_col: ids[rows],
-                    "cosine": sims[rows, cols],
-                }
-            )
+    def top_k_margin(sims, ids):
+        sel = sims.copy()
+        self_mask = ids[:, None] == q_ids[None, :]
+        sel[self_mask] = -np.inf
+        nan_mask = np.isnan(sel)
+        sel[nan_mask] = -np.inf
+        n = sel.shape[0]
+        if n > k:
+            kth = np.partition(sel, n - k, axis=0)[n - k, :]
+        else:
+            kth = np.full(m, -np.inf)
+        keep = (
+            (sel >= (kth - _ARROW_TOPK_MARGIN)[None, :]) | nan_mask
+        ) & ~self_mask
+        return np.nonzero(keep)
 
     scored = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .mapInPandas(score, out_schema)
+        _arrow_lane(
+            corpus, id_col, vec_col, [id_col], {query_id_col: q_ids},
+            q_mat.shape[1],
+            lambda mat, sq: _exact_cosine(mat, sq, q_mat, q_norm),
+            top_k_margin,
+            StructType(
+                [
+                    _field(queries, query_id_col),
+                    _field(corpus, id_col),
+                    StructField("cosine", DoubleType(), True),
+                ]
+            ),
+        )
         .filter(F.col(id_col) != F.col(query_id_col))
         .withColumn("cosine", F.round("cosine", 6))
         .select(query_id_col, id_col, "cosine")
     )
     return _ranked_topk(scored, k, query_id_col, id_col)
-
-
-def _collect_anchor_rows(queries: DataFrame, cols: list[str]):
-    """Driver-collect a bounded anchor frame for the Arrow lanes; None
-    when it is too big / empty / null-bearing (callers then fall back to
-    the expression lane)."""
-    rows = queries.select(*cols).limit(_ARROW_TOPK_MAX_QUERIES + 1).collect()
-    if not rows or len(rows) > _ARROW_TOPK_MAX_QUERIES:
-        return None
-    vecs = [r[1] for r in rows]
-    if any(v is None or any(x is None for x in v) for v in vecs):
-        return None
-    if len({len(v) for v in vecs}) != 1:
-        return None
-    return rows
 
 
 def anchor_cosine_scores(
@@ -303,9 +339,8 @@ def anchor_cosine_scores(
     attributes and the UNROUNDED exact cosine (callers apply their own
     ``F.round``). Bit-identical to the
     ``crossJoin(broadcast(queries))`` + ``cosine_similarity`` expression
-    shape for non-null, equal-length vectors: same index-ordered fold
-    (see ``_exact_pair_dots``), same zero-norm guard; falls back to that
-    exact expression shape when the anchor side is unbounded/null.
+    shape (:func:`_exact_cosine`), which it falls back to when
+    :func:`_collect_anchor_rows` refuses the anchor side.
     """
     corpus_cols = corpus_cols or []
     query_cols = query_cols or []
@@ -337,74 +372,30 @@ def anchor_cosine_scores(
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    q_ids_arr = np.array([r[0] for r in rows])
-    q_mat = np.array([r[1] for r in rows], dtype=np.float64)
+    q_ids, q_mat = _anchor_matrix(rows)
     q_norm = np.sqrt(_exact_sq_norm(q_mat))
     q_attrs = {c: np.array([r[2 + i] for r in rows])
                for i, c in enumerate(query_cols)}
-    m = len(rows)
-    dim = q_mat.shape[1]
 
-    cf = {f.name: f for f in corpus.schema.fields}
-    qf = {f.name: f for f in queries.schema.fields}
-    out_schema = StructType(
-        [
-            StructField(query_id_col, qf[query_id_col].dataType, True),
-            StructField(id_col, cf[id_col].dataType, True),
-            *[StructField(c, cf[c].dataType, True) for c in corpus_cols],
-            *[StructField(c, qf[c].dataType, True) for c in query_cols],
-            StructField("cosine", DoubleType(), True),
-        ]
-    )
+    def all_pairs(sims, ids):
+        return np.nonzero(ids[:, None] != q_ids[None, :])
 
-    def score(batches):
-        import pandas as pd
-
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ids = b[id_col].to_numpy()
-            vecs = b[vec_col]
-            n = len(b)
-            null_mask = np.array(
-                [v is None or len(v) != dim for v in vecs], dtype=bool
-            )
-            mat = np.array(
-                [
-                    np.zeros(dim)
-                    if null_mask[i]
-                    else np.asarray(vecs.iloc[i], dtype=np.float64)
-                    for i in range(n)
-                ],
-                dtype=np.float64,
-            )
-            dots = _exact_pair_dots(mat, q_mat)
-            c_norm = np.sqrt(_exact_sq_norm(mat))
-            denom = c_norm[:, None] * q_norm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom == 0.0, 0.0, dots / denom)
-            self_mask = ids[:, None] == q_ids_arr[None, :]
-            keep = ~self_mask
-            rows_ix, cols_ix = np.nonzero(keep)
-            # object dtype: None -> Arrow null for null/ragged corpus
-            # rows, while genuine NaN cosines stay NaN (a nullable
-            # Float64 array would fold NaN into NA).
-            cos = sims[rows_ix, cols_ix].astype(object)
-            if null_mask.any():
-                cos[null_mask[rows_ix]] = None
-            out = {query_id_col: q_ids_arr[cols_ix], id_col: ids[rows_ix]}
-            for c in corpus_cols:
-                out[c] = b[c].to_numpy()[rows_ix]
-            for c in query_cols:
-                out[c] = q_attrs[c][cols_ix]
-            out["cosine"] = cos
-            yield pd.DataFrame(out)
-
-    return (
-        corpus.select(F.col(id_col), F.col(vec_col), *corpus_cols)
-        .mapInPandas(score, out_schema)
-        .filter(F.col(id_col) != F.col(query_id_col))
-    )
+    return _arrow_lane(
+        corpus, id_col, vec_col, [id_col, *corpus_cols],
+        {query_id_col: q_ids, **q_attrs},
+        q_mat.shape[1],
+        lambda mat, sq: _exact_cosine(mat, sq, q_mat, q_norm),
+        all_pairs,
+        StructType(
+            [
+                _field(queries, query_id_col),
+                _field(corpus, id_col),
+                *[_field(corpus, c) for c in corpus_cols],
+                *[_field(queries, c) for c in query_cols],
+                StructField("cosine", DoubleType(), True),
+            ]
+        ),
+    ).filter(F.col(id_col) != F.col(query_id_col))
 
 
 def l2sq_topn(
@@ -424,16 +415,19 @@ def l2sq_topn(
     per-batch pre-selection needs NO margin: every batch keeps exactly
     the rows at or below its n-th order statistic of l2sq (ties kept
     whole), a provable superset of the global top-n under any id
-    tie-break, and the global rank window finishes the job.
+    tie-break, and the global rank window finishes the job. NULL
+    distances (NaN here) rank FIRST under Spark's ascending sort and are
+    always emitted.
 
-    Falls back to the crossJoin expression shape when the anchor side
-    is unbounded/null-bearing.
+    Falls back to the crossJoin expression shape when
+    :func:`_collect_anchor_rows` refuses the anchor side.
     """
     rows = _collect_anchor_rows(queries, [query_id_col, vec_col])
-    e, v = F.col(vec_col), F.col("_qvec")
+    w = Window.partitionBy(query_id_col).orderBy("l2sq", id_col)
     if rows is None:
         from slipstream_async_spark.functions import vectors as VECF
 
+        e, v = F.col(vec_col), F.col("_qvec")
         p = (
             corpus.crossJoin(
                 F.broadcast(
@@ -451,90 +445,43 @@ def l2sq_topn(
                 ).alias("l2sq"),
             )
         )
-        w = Window.partitionBy(query_id_col).orderBy("l2sq", id_col)
         return p.withColumn("rk", F.row_number().over(w)).filter(
             F.col("rk") <= n
         )
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    q_ids_arr = np.array([r[0] for r in rows])
-    q_mat = np.array([r[1] for r in rows], dtype=np.float64)
+    q_ids, q_mat = _anchor_matrix(rows)
     q_sq = _exact_sq_norm(q_mat)
-    m = len(rows)
-    dim = q_mat.shape[1]
+    m = len(q_ids)
 
-    cf = {f.name: f for f in corpus.schema.fields}
-    qf = {f.name: f for f in queries.schema.fields}
-    out_schema = StructType(
-        [
-            StructField(query_id_col, qf[query_id_col].dataType, True),
-            StructField(id_col, cf[id_col].dataType, True),
-            StructField("l2sq", DoubleType(), True),
-        ]
-    )
+    def l2sq(mat, sq):
+        return (sq[:, None] - 2.0 * _exact_pair_dots(mat, q_mat)) + q_sq[None, :]
 
-    def score(batches):
-        import pandas as pd
+    def bottom_n(l2, ids):
+        sel = l2.copy()
+        self_mask = ids[:, None] == q_ids[None, :]
+        sel[self_mask] = np.inf
+        nan_mask = np.isnan(sel)
+        sel[nan_mask] = np.inf
+        nrows = sel.shape[0]
+        if nrows > n:
+            vn = np.partition(sel, n - 1, axis=0)[n - 1, :]
+        else:
+            vn = np.full(m, np.inf)
+        return np.nonzero(((sel <= vn[None, :]) | nan_mask) & ~self_mask)
 
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ids = b[id_col].to_numpy()
-            vecs = b[vec_col]
-            null_mask = np.array(
-                [x is None or len(x) != dim for x in vecs], dtype=bool
-            )
-            if null_mask.any():
-                bad_ids = ids[null_mask]
-                yield pd.DataFrame(
-                    {
-                        query_id_col: np.repeat(q_ids_arr, len(bad_ids)),
-                        id_col: np.tile(bad_ids, m),
-                        "l2sq": pd.array(
-                            [None] * (len(bad_ids) * m), dtype="Float64"
-                        ),
-                    }
-                )
-                if null_mask.all():
-                    continue
-                ids = ids[~null_mask]
-                vecs = vecs[~null_mask]
-            mat = np.array(
-                [np.asarray(x, dtype=np.float64) for x in vecs],
-                dtype=np.float64,
-            )
-            c_sq = _exact_sq_norm(mat)
-            dots = _exact_pair_dots(mat, q_mat)
-            l2 = (c_sq[:, None] - 2.0 * dots) + q_sq[None, :]
-            sel = l2.copy()
-            self_mask = ids[:, None] == q_ids_arr[None, :]
-            sel[self_mask] = np.inf
-            nan_mask = np.isnan(sel)
-            # NaN l2sq ranks LAST under an ascending Spark sort (NaN is
-            # greatest) — still emitted so under-filled anchors see them.
-            sel[nan_mask] = np.inf
-            nrows = sel.shape[0]
-            if nrows > n:
-                vn = np.partition(sel, n - 1, axis=0)[n - 1, :]
-            else:
-                vn = np.full(m, np.inf)
-            keep = ((sel <= vn[None, :]) | nan_mask) & ~self_mask
-            rix, cix = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    query_id_col: q_ids_arr[cix],
-                    id_col: ids[rix],
-                    "l2sq": l2[rix, cix],
-                }
-            )
-
-    scored = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .mapInPandas(score, out_schema)
-        .filter(F.col(id_col) != F.col(query_id_col))
-    )
-    w = Window.partitionBy(query_id_col).orderBy("l2sq", id_col)
+    scored = _arrow_lane(
+        corpus, id_col, vec_col, [id_col], {query_id_col: q_ids},
+        q_mat.shape[1], l2sq, bottom_n,
+        StructType(
+            [
+                _field(queries, query_id_col),
+                _field(corpus, id_col),
+                StructField("l2sq", DoubleType(), True),
+            ]
+        ),
+    ).filter(F.col(id_col) != F.col(query_id_col))
     return scored.withColumn("rk", F.row_number().over(w)).filter(
         F.col("rk") <= n
     )
@@ -631,7 +578,7 @@ def assign_nearest_centroid(
     ``list_id``) with ties broken toward the smaller centroid id.
     Bit-identical to the ``crossJoin(broadcast(cents))`` + argmax-window
     shape (see ``ivf_index``) and usually far cheaper: cosines come from
-    the exact index-ordered numpy fold (``_exact_pair_dots``), and
+    :func:`_exact_cosine`, and
 
     - ``rounded=False`` compares UNROUNDED cosines, so the exact argmax
       (numpy first-max == smallest centroid id on exact ties) is decided
@@ -642,16 +589,12 @@ def assign_nearest_centroid(
       ``brute_force_topk``'s margin argument) and Spark's own
       ``F.round`` + rank window pick the winner over ~1 row per vector.
 
-    Null/ragged corpus vectors emit a null cosine against every
-    centroid (the JVM fold's value), so the window ranks them exactly
-    as the expression lane does. Falls back to the crossJoin expression
-    shape when the centroid side is unbounded or null-bearing.
+    NULL cosines (NaN here) rank last, as under the window's descending
+    sort, so a vector whose cosines are all NULL takes the smallest
+    centroid id. Falls back to the crossJoin expression shape when
+    :func:`_collect_anchor_rows` refuses the centroid side.
     """
     rows = _collect_anchor_rows(cents, [cent_id_col, cent_vec_col])
-    if rows is not None:
-        # Ascending centroid id so numpy's first-occurrence argmax
-        # reproduces the window's (cosine desc, cent_id asc) tie-break.
-        rows = sorted(rows, key=lambda r: r[0])
     if rows is None:
         scored = corpus.crossJoin(F.broadcast(cents)).withColumn(
             "_cc",
@@ -676,136 +619,52 @@ def assign_nearest_centroid(
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    c_ids = np.array([r[0] for r in rows])
-    c_mat = np.array([r[1] for r in rows], dtype=np.float64)
+    # Ascending centroid id so numpy's first-occurrence argmax
+    # reproduces the window's (cosine desc, cent_id asc) tie-break.
+    c_ids, c_mat = _anchor_matrix(sorted(rows, key=lambda r: r[0]))
     c_norm = np.sqrt(_exact_sq_norm(c_mat))
-    kcent = len(rows)
-    dim = c_mat.shape[1]
 
-    cf = {f.name: f for f in corpus.schema.fields}
-    centf = {f.name: f for f in cents.schema.fields}
-    id_t = cf[id_col].dataType
-    vec_t = cf[vec_col].dataType
-    cid_t = centf[cent_id_col].dataType
-    margin = _ARROW_TOPK_MARGIN
+    def cosine(mat, sq):
+        return _exact_cosine(mat, sq, c_mat, c_norm)
+
+    def nan_last(sims):
+        return np.where(np.isnan(sims), -np.inf, sims)
 
     if not rounded:
-        out_schema = StructType(
+        def argmax(sims, ids):
+            return np.arange(len(sims)), np.argmax(nan_last(sims), axis=1)
+
+        return _arrow_lane(
+            corpus, id_col, vec_col, [id_col, vec_col], {"list_id": c_ids},
+            c_mat.shape[1], cosine, argmax,
+            StructType(
+                [
+                    _field(corpus, id_col),
+                    _field(corpus, vec_col),
+                    _field(cents, cent_id_col, "list_id"),
+                ]
+            ),
+        )
+
+    def argmax_margin(sims, ids):
+        sel = nan_last(sims)
+        rowmax = sel.max(axis=1)
+        return np.nonzero(
+            (sel >= (rowmax - _ARROW_TOPK_MARGIN)[:, None]) | np.isnan(sims)
+        )
+
+    scored = _arrow_lane(
+        corpus, id_col, vec_col, [id_col, vec_col], {cent_id_col: c_ids},
+        c_mat.shape[1], cosine, argmax_margin,
+        StructType(
             [
-                StructField(id_col, id_t, True),
-                StructField(vec_col, vec_t, True),
-                StructField("list_id", cid_t, True),
+                _field(corpus, id_col),
+                _field(corpus, vec_col),
+                _field(cents, cent_id_col),
+                StructField("_cc", DoubleType(), True),
             ]
-        )
-
-        def assign(batches):
-            import pandas as pd
-
-            for b in batches:
-                if len(b) == 0:
-                    continue
-                vecs = b[vec_col]
-                null_mask = np.array(
-                    [v is None or len(v) != dim for v in vecs], dtype=bool
-                )
-                n = len(b)
-                mat = np.array(
-                    [
-                        np.zeros(dim)
-                        if null_mask[i]
-                        else np.asarray(vecs.iloc[i], dtype=np.float64)
-                        for i in range(n)
-                    ],
-                    dtype=np.float64,
-                )
-                dots = _exact_pair_dots(mat, c_mat)
-                nrm = np.sqrt(_exact_sq_norm(mat))
-                denom = nrm[:, None] * c_norm[None, :]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    sims = np.where(denom == 0.0, 0.0, dots / denom)
-                # NaN payloads: a descending Spark sort ranks NaN first,
-                # ties toward the smaller centroid id -> centroid 0 of
-                # the NaN set; numpy argmax also returns the first NaN.
-                # All-null rows: every cosine null -> order falls to
-                # cent_id asc -> the smallest centroid id, == argmax of
-                # an all-equal row here.
-                best = np.argmax(sims, axis=1)
-                yield pd.DataFrame(
-                    {
-                        id_col: b[id_col],
-                        vec_col: vecs,
-                        "list_id": c_ids[best],
-                    }
-                )
-
-        return corpus.select(F.col(id_col), F.col(vec_col)).mapInPandas(
-            assign, out_schema
-        )
-
-    out_schema = StructType(
-        [
-            StructField(id_col, id_t, True),
-            StructField(vec_col, vec_t, True),
-            StructField(cent_id_col, cid_t, True),
-            StructField("_cc", DoubleType(), True),
-        ]
-    )
-
-    def cand(batches):
-        import pandas as pd
-
-        for b in batches:
-            if len(b) == 0:
-                continue
-            vecs = b[vec_col]
-            n = len(b)
-            null_mask = np.array(
-                [v is None or len(v) != dim for v in vecs], dtype=bool
-            )
-            if null_mask.any():
-                bad = np.nonzero(null_mask)[0]
-                yield pd.DataFrame(
-                    {
-                        id_col: b[id_col].iloc[np.repeat(bad, kcent)].to_numpy(),
-                        vec_col: vecs.iloc[np.repeat(bad, kcent)],
-                        cent_id_col: np.tile(c_ids, len(bad)),
-                        "_cc": pd.array(
-                            [None] * (len(bad) * kcent), dtype="Float64"
-                        ),
-                    }
-                )
-                if null_mask.all():
-                    continue
-            good = np.nonzero(~null_mask)[0]
-            mat = np.array(
-                [np.asarray(vecs.iloc[i], dtype=np.float64) for i in good],
-                dtype=np.float64,
-            )
-            dots = _exact_pair_dots(mat, c_mat)
-            nrm = np.sqrt(_exact_sq_norm(mat))
-            denom = nrm[:, None] * c_norm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                sims = np.where(denom == 0.0, 0.0, dots / denom)
-            sel = sims.copy()
-            nan_mask = np.isnan(sel)
-            sel[nan_mask] = -np.inf
-            rowmax = sel.max(axis=1)
-            keep = (sel >= (rowmax - margin)[:, None]) | nan_mask
-            rix, cix = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    id_col: b[id_col].iloc[good[rix]].to_numpy(),
-                    vec_col: vecs.iloc[good[rix]],
-                    cent_id_col: c_ids[cix],
-                    "_cc": sims[rix, cix],
-                }
-            )
-
-    scored = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .mapInPandas(cand, out_schema)
-        .withColumn("_cc", F.round("_cc", 6))
-    )
+        ),
+    ).withColumn("_cc", F.round("_cc", 6))
     w = Window.partitionBy(id_col).orderBy(
         F.col("_cc").desc(), F.col(cent_id_col).asc()
     )
@@ -1324,12 +1183,8 @@ def semdedup(
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    idt = {f.name: f for f in corpus.schema.fields}[id_col].dataType
     drop_schema = StructType(
-        [
-            StructField(id_col, idt, True),
-            StructField("_maxcos", DoubleType(), True),
-        ]
+        [_field(corpus, id_col), StructField("_maxcos", DoubleType(), True)]
     )
     margin = _ARROW_TOPK_MARGIN
 
@@ -1367,11 +1222,8 @@ def semdedup(
             [np.asarray(v, dtype=np.float64) for v in sub[vec_col]],
             dtype=np.float64,
         )
-        dots = _exact_pair_dots(mat, mat)
-        nrm = np.sqrt(_exact_sq_norm(mat))
-        denom = nrm[:, None] * nrm[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            sims = np.where(denom == 0.0, 0.0, dots / denom)
+        sq = _exact_sq_norm(mat)
+        sims = _exact_cosine(mat, sq, mat, np.sqrt(sq))
         sims[np.isnan(sims)] = -np.inf
         n = sims.shape[0]
         # only x earlier in priority order may drop y
@@ -1680,76 +1532,3 @@ def ivfadc_topk(
         ),
     )
     return _ranked_topk(exact, k, query_id_col, id_col)
-
-
-def brute_force_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
-    """Exact cosine top-k, Arrow/numpy lane: the query matrix ships to
-    every task inside the UDF closure and each Arrow batch of corpus
-    vectors is scored with ONE matmul — the lane that wins once vectors
-    are wide (hundreds of dims) or queries are many, where per-element
-    expression folds lose to BLAS. Same semantics as brute_force_topk;
-    scores can differ from the expression lane only by float summation
-    order (last-ulp), so oracle-checked parity stays on the expression
-    lane and this one is asserted equivalent to it in tests.
-    """
-    import pandas as pd  # noqa: F401 (declared for the UDF contract)
-
-    qrows = queries.select(query_id_col, vec_col).collect()
-    if not qrows:
-        # Same schema as the non-empty path (long ids), so shard unions
-        # never hit an Integer-vs-Long mismatch on an empty partition.
-        return _ranked_topk(
-            corpus.select(
-                F.lit(0).cast("long").alias(query_id_col),
-                F.col(id_col).cast("long"),
-                F.lit(0.0).alias("cosine"),
-            ).limit(0),
-            k, query_id_col, id_col,
-        )
-    import numpy as np
-
-    q_ids = np.array([r[0] for r in qrows])
-    q_mat = np.array([r[1] for r in qrows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    q_norm[q_norm == 0.0] = 1.0
-
-    out_schema = (
-        f"{query_id_col} long, {id_col} long, cosine double"
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        for b in batches:
-            ids = b[id_col].to_numpy()
-            mat = np.array(list(b[vec_col]), dtype=np.float64)
-            if mat.size == 0:
-                continue
-            norms = np.sqrt((mat * mat).sum(axis=1))
-            norms[norms == 0.0] = 1.0
-            sims = (mat @ q_mat.T) / norms[:, None] / q_norm[None, :]
-            n, m = sims.shape
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(q_ids, n),
-                    id_col: np.tile(ids, m),
-                    "cosine": sims.T.ravel(),
-                }
-            )
-
-    scored = (
-        corpus.select(id_col, vec_col)
-        # NULL embeddings would poison the whole batch matmul
-        .filter(F.col(vec_col).isNotNull())
-        .mapInPandas(score, out_schema)
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn("cosine", F.round("cosine", 6))
-    )
-    return _ranked_topk(scored, k, query_id_col, id_col)

@@ -2,8 +2,10 @@
 bit-identical to the JVM expression lanes they replaced — same
 index-ordered IEEE folds, same null semantics, same tie-breaks. These
 tests compare both lanes on real testdata and on adversarial vectors
-(nulls, zero norms, duplicates) and fail on ANY difference, including
-last-ulp float divergence (struct-packed bit comparison)."""
+(nulls, zero norms, wrong lengths, duplicates) and fail on ANY
+difference, including last-ulp float divergence (struct-packed bit
+comparison); the cutover tests check that an anchor side past
+``_ARROW_TOPK_MAX_QUERIES`` takes the expression lane."""
 
 from __future__ import annotations
 
@@ -73,33 +75,37 @@ def test_brute_force_topk_with_null_and_zero_vectors(spark):
     assert a == b
 
 
-def test_l2sq_topn_matches_expression_shape(emb, anchors):
+def _l2sq_reference(corpus, anchors, n, query_id_col="query_id"):
     from pyspark.sql import Window
 
     from slipstream_async_spark.functions import vectors as VEC
 
-    qa = anchors.withColumnRenamed("query_id", "anchor_id")
-    new = _rows(SIM.l2sq_topn(emb, qa, n=2, query_id_col="anchor_id"))
     e, v = F.col("embedding"), F.col("_qvec")
     p = (
-        emb.crossJoin(
+        corpus.crossJoin(
             F.broadcast(
-                qa.select("anchor_id", F.col("embedding").alias("_qvec"))
+                anchors.select(query_id_col, F.col("embedding").alias("_qvec"))
             )
         )
-        .filter(F.col("vec_id") != F.col("anchor_id"))
+        .filter(F.col("vec_id") != F.col(query_id_col))
         .select(
-            "anchor_id",
+            query_id_col,
             "vec_id",
             (VEC.dot(e, e) - 2 * VEC.dot(e, v) + VEC.dot(v, v)).alias(
                 "l2sq"
             ),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy("l2sq", "vec_id")
-    old = _rows(
-        p.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= 2)
+    w = Window.partitionBy(query_id_col).orderBy("l2sq", "vec_id")
+    return p.withColumn("rk", F.row_number().over(w)).filter(
+        F.col("rk") <= n
     )
+
+
+def test_l2sq_topn_matches_expression_shape(emb, anchors):
+    qa = anchors.withColumnRenamed("query_id", "anchor_id")
+    new = _rows(SIM.l2sq_topn(emb, qa, n=2, query_id_col="anchor_id"))
+    old = _rows(_l2sq_reference(emb, qa, 2, "anchor_id"))
     assert new == old
 
 
@@ -254,3 +260,127 @@ def test_semdedup_matches_pair_join_reference(emb):
         )
     )
     assert new == old
+
+
+# One entry per Arrow lane and mode: each runs the lane on (vec_id,
+# embedding) corpus rows against (query_id, embedding) anchors and builds
+# the expression shape it must reproduce bit for bit.
+LANES = (
+    "brute_force_topk",
+    "anchor_cosine_scores",
+    "l2sq_topn",
+    "assign_unrounded",
+    "assign_rounded",
+)
+
+
+def _cosine_pairs_reference(corpus, anchors):
+    from slipstream_async_spark.functions import vectors as VEC
+
+    return (
+        corpus.crossJoin(
+            F.broadcast(
+                anchors.select("query_id", F.col("embedding").alias("_qvec"))
+            )
+        )
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            VEC.cosine_similarity(F.col("_qvec"), F.col("embedding")).alias(
+                "cosine"
+            ),
+        )
+    )
+
+
+def _lane_and_reference(lane, corpus, anchors):
+    if lane == "brute_force_topk":
+        return (
+            SIM.brute_force_topk(corpus, anchors, k=6),
+            SIM.brute_force_topk_expr(corpus, anchors, k=6),
+        )
+    if lane == "anchor_cosine_scores":
+        return (
+            SIM.anchor_cosine_scores(corpus, anchors),
+            _cosine_pairs_reference(corpus, anchors),
+        )
+    if lane == "l2sq_topn":
+        return (
+            SIM.l2sq_topn(corpus, anchors, n=6),
+            _l2sq_reference(corpus, anchors, 6),
+        )
+    rounded = lane == "assign_rounded"
+    cents = anchors.select(
+        F.col("query_id").alias("cent_id"),
+        F.col("embedding").alias("cent_vec"),
+    )
+    return (
+        SIM.assign_nearest_centroid(corpus, cents, rounded=rounded).select(
+            "vec_id", "list_id"
+        ),
+        _assign_reference(corpus, cents, "cent_id", "cent_vec", rounded),
+    )
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _adversarial(spark, nan_element):
+    rows = [
+        (1, [1.0, 0.0, 0.0]),
+        (2, [0.9, 0.1, 0.0]),
+        (3, None),  # null vector
+        (4, [0.0, 0.0, 0.0]),  # zero norm, also an anchor
+        (5, [1.0, 0.0, 0.0]),  # exact duplicate of 1
+        (6, [-1.0, 0.0, 0.0]),
+        (7, [0.5, None, 0.5]),  # null element
+        (8, [0.6, 0.8]),  # shorter: 0.0 against the zero anchor
+        (9, [nan_element, 0.0, 1.0]),
+        (10, [0.2, 0.7, 0.1]),
+        (11, []),  # empty: zero norm, 0.0 against every anchor
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+@pytest.mark.parametrize("lane", LANES)
+def test_exact_lanes_match_expression_on_adversarial_rows(spark, lane):
+    corpus = _adversarial(spark, float("nan"))
+    anchors = corpus.filter(F.col("vec_id").isin(1, 4, 6, 10)).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    arrow, _ = _lane_and_reference(lane, corpus, anchors)
+    # A null element reaches pandas as NaN, so the Arrow lanes cannot
+    # tell row 9's NaN element from a null one and score it NULL, as the
+    # expression lane scores a null element.
+    _, reference = _lane_and_reference(lane, _adversarial(spark, None), anchors)
+    assert "MapInPandas" in _plan(arrow)
+    assert _rows(arrow) == _rows(reference)
+
+
+def _synthetic(spark, n, id_col):
+    # Deterministic 3-dim vectors; ids 0..n-1 overlap between the two
+    # sides so the self-match filter is exercised too.
+    i = F.col("id").cast("double")
+    return spark.range(n).select(
+        F.col("id").alias(id_col),
+        F.array(F.sin(i), F.cos(i * 0.7), F.sin(i * 1.3) + 0.5).alias(
+            "embedding"
+        ),
+    )
+
+
+@pytest.mark.parametrize("lane", LANES)
+def test_anchor_cutover_falls_back_to_expression_lane(spark, lane):
+    corpus = _synthetic(spark, 20, "vec_id")
+    cap = SIM._ARROW_TOPK_MAX_QUERIES
+    at_cap, _ = _lane_and_reference(
+        lane, corpus, _synthetic(spark, cap, "query_id")
+    )
+    assert "MapInPandas" in _plan(at_cap)
+    over, reference = _lane_and_reference(
+        lane, corpus, _synthetic(spark, cap + 1, "query_id")
+    )
+    assert "MapInPandas" not in _plan(over)
+    assert _rows(over) == _rows(reference)

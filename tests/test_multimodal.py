@@ -109,19 +109,3 @@ def test_embed_media_normalized(media):
     assert 0 not in ids and len(ids) == 2  # self-match excluded
     cosines = [r["cosine"] for r in top]
     assert cosines == sorted(cosines, reverse=True)
-
-
-def test_decode_features_arrow_lane_matches_pandas_lane(spark):
-    """mapInArrow lane == mapInPandas lane, value for value."""
-    from slipstream_async_spark.operators.multimodal import (
-        attach_payloads,
-        decode_features,
-        decode_features_arrow,
-    )
-    from slipstream_async_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
-    media = attach_payloads(docs)
-    a = {r["media_id"]: tuple(r) for r in decode_features(media).collect()}
-    b = {r["media_id"]: tuple(r) for r in decode_features_arrow(media).collect()}
-    assert a == b

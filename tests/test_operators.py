@@ -389,28 +389,6 @@ def test_ordered_scan_matches_single_partition_window(spark, folds, parts):
     assert got == want
 
 
-def test_brute_force_topk_pandas_matches_expression_lane(spark):
-    """The Arrow/numpy matmul scoring lane agrees with the JVM expression
-    lane: same top-k sets on the fixture, cosines within float summation
-    noise."""
-    from slipstream_async_spark.operators.similarity import (
-        brute_force_topk,
-        brute_force_topk_pandas,
-    )
-    from slipstream_async_spark.sources.readers import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    q = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    a = brute_force_topk(emb, q, k=5)
-    b = brute_force_topk_pandas(emb, q, k=5)
-    ra = {(r["query_id"], r["vec_id"]): r["cosine"] for r in a.collect()}
-    rb = {(r["query_id"], r["vec_id"]): r["cosine"] for r in b.collect()}
-    assert set(ra) == set(rb)
-    assert all(abs(ra[k_] - rb[k_]) < 1e-6 for k_ in ra)
-
-
 def test_grouped_zscore_matches_expression_form(spark):
     """applyInPandas grouped-map lane == the window-expression z-score
     (within float noise); singleton/zero-variance groups emit 0."""
@@ -450,9 +428,7 @@ def test_operators_on_empty_inputs(spark):
     )
     from slipstream_async_spark.operators.handlers import grouped_zscore
     from slipstream_async_spark.operators.packing import contiguous_pack
-    from slipstream_async_spark.operators.similarity import (
-        brute_force_topk_pandas,
-    )
+    from slipstream_async_spark.operators.similarity import brute_force_topk
 
     empty_docs = spark.createDataFrame([], "doc_id long, text string")
     assert dedup_ngram_jaccard(empty_docs, "text", "doc_id").count() == 0
@@ -469,7 +445,7 @@ def test_operators_on_empty_inputs(spark):
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], "vec_id long, embedding array<double>"
     )
     no_queries = spark.createDataFrame([], "query_id long, embedding array<double>")
-    assert brute_force_topk_pandas(emb, no_queries, k=3).count() == 0
+    assert brute_force_topk(emb, no_queries, k=3).count() == 0
 
     one_row = spark.createDataFrame([("a", 1.0)], "k string, v double")
     z = grouped_zscore(one_row, ["k"], "v").collect()
@@ -482,7 +458,7 @@ def test_zero_norm_embeddings_rank_last_not_first(spark):
     agree and never rank the broken vector above real matches."""
     from slipstream_async_spark.operators.similarity import (
         brute_force_topk,
-        brute_force_topk_pandas,
+        brute_force_topk_expr,
     )
 
     emb = spark.createDataFrame(
@@ -496,7 +472,7 @@ def test_zero_norm_embeddings_rank_last_not_first(spark):
     q = spark.createDataFrame(
         [(1, [1.0, 0.0])], "query_id long, embedding array<double>"
     )
-    for lane in (brute_force_topk, brute_force_topk_pandas):
+    for lane in (brute_force_topk, brute_force_topk_expr):
         rows = lane(emb, q, k=2).orderBy(F.desc("cosine")).collect()
         assert [r["vec_id"] for r in rows] == [2, 3]
         assert rows[-1]["cosine"] == 0.0

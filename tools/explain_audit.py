@@ -352,19 +352,19 @@ ALLOW_BNLJ = {
 PY_STAGE_OK = {
     "mm_decode_features",
     "p3_generator_handler",
-    # r12 optimization: the similarity/embedding family's pairwise
-    # cosine/L2 scoring moved from interpreted JVM higher-order-function
-    # folds to Arrow exact-fold kernels (similarity.brute_force_topk /
-    # anchor_cosine_scores / l2sq_topn / assign_nearest_centroid /
-    # semdedup's grouped prune). The Python stage is the DELIBERATE
-    # compute lane (guide §4.2: batch-vectorized native code beats
-    # row-at-a-time JVM expression evaluation); each kernel also does
-    # map-side top-k/argmax pre-selection so the downstream exchange
-    # carries ~k rows per query instead of |corpus| x |queries|.
-    # Results are bit-identical to the expression lanes (exact
-    # index-ordered IEEE folds + margin-superset selection, Spark-side
+    # The similarity/embedding family scores pairs in Arrow kernels, not
+    # in interpreted JVM higher-order-function folds: one shared kernel
+    # in operators/similarity.py (anchor collect, NULL row rule, exact
+    # index-ordered cosine) serves brute_force_topk,
+    # anchor_cosine_scores, l2sq_topn and assign_nearest_centroid, and
+    # semdedup's grouped prune uses the same cosine. The Python stage is
+    # the DELIBERATE compute lane (guide §4.2: batch-vectorized native
+    # code beats row-at-a-time JVM expression evaluation); each lane
+    # also pre-selects its top-k/argmax map-side, so the downstream
+    # exchange carries ~k rows per query instead of |corpus| x |queries|.
+    # Results are bit-identical to the expression lanes (Spark-side
     # round and rank windows decide) — parity-tested in
-    # tests/test_operators.py and oracle-checked.
+    # tests/test_arrow_exact_lanes.py and oracle-checked.
     "sim_topk_bruteforce",
     "sim_ann_recall",
     "sim_ann_recall_2table",
