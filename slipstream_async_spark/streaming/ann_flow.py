@@ -11,10 +11,9 @@ emits the enriched event). The prepared cache here is the IVF index
 directory; the per-event lookup is a per-batch index probe.
 
 Scale: per micro-batch cost is |batch queries| x (n_probe / n_lists)
-of the corpus — never a full scan; results land in a StateTable as
-idempotent upserts (same query vector -> same neighbor list), so
-replayed epochs converge (the at-least-once argument every sink in
-this package uses).
+of the corpus — never a full scan; results land in a StateTable
+through the epoch fence every sink in this package shares, so a
+replayed epoch no-ops (exactly-once results and changelog).
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ from slipstream_async_spark.operators.similarity import (
     ivf_index_read,
     ivf_probes_mapside,
 )
-from slipstream_async_spark.streaming.state import StateTable
+from slipstream_async_spark.streaming.state import StateTable, _EpochFence
 
 
 def ann_enrich_sink(
@@ -58,10 +57,18 @@ def ann_enrich_sink(
     centroid read, no crossJoin+window shuffle, no centroid broadcast
     build; (2) the assignments DataFrame (schema already resolved) is
     reused, so no per-trigger parquet schema-inference pass runs.
+
+    Epoch-fenced under the fence query ``"ann_enrich"`` like
+    :func:`~slipstream_async_spark.streaming.state.foreach_batch_upsert`:
+    a replayed epoch commits no duplicate version or changelog events.
     """
     frames: dict[str, tuple] = {}
+    fence = _EpochFence("ann_enrich", {"results": results})
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        e = int(epoch_id)
+        if not fence.pending(e):
+            return  # replayed epoch — its commit already landed
         if "idx" not in frames:
             cents, assigned = ivf_index_read(
                 batch_df.sparkSession, index_path
@@ -129,10 +136,11 @@ def ann_enrich_sink(
                 ).alias("value")
             )
         )
-        results.upsert(
-            per_q.select(
+        fence.commit(
+            e,
+            {"results": per_q.select(
                 F.col(query_id_col).cast("string").alias("key"), "value"
-            )
+            )},
         )
 
     return sink

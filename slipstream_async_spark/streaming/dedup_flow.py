@@ -19,11 +19,12 @@ cache is a :class:`~slipstream_async_spark.streaming.state.StateTable`:
 - the batch's documents are then upserted into the corpus StateTable,
   so the NEXT micro-batch dedups against them.
 
-Exactly-once: foreachBatch is at-least-once per epoch, and both writes
-are idempotent upserts keyed deterministically (same pair key -> same
-jaccard; same doc key -> same text), so a replayed epoch converges to
-the same state — the same idempotent-upsert argument the reference's
-cache sinks rely on.
+Exactly-once: foreachBatch is at-least-once per epoch; every sink here
+commits through the epoch fence all StateTable sinks share
+(``state._EpochFence``), so a replayed epoch re-runs only the commits
+that did not land. The writes are also idempotent upserts keyed
+deterministically (same pair key -> same jaccard; same doc key -> same
+text), so even the re-run commits converge to the same state.
 
 Scale: per micro-batch cost is |batch| x (prefix-index probe), never
 |corpus|^2; the standing index is the copy-on-write StateTable, which at
@@ -44,31 +45,24 @@ from slipstream_async_spark.operators.membership import (
     bloom_merge,
     bloom_probe,
 )
-from slipstream_async_spark.streaming.state import (
-    StateTable,
-    upsert_group,
-    warn_fence_regression,
-)
+from slipstream_async_spark.streaming.state import StateTable, _EpochFence
 
 
-def _fence_gate(tables: dict[str, StateTable], query: str):
-    """Shared epoch-fence bookkeeping for multi-table foreachBatch
-    sinks: per-table last-committed epochs recovered from manifests on
-    first delivery (see StateTable.committed_epochs), so a replayed
-    epoch skips exactly the tables whose commit already landed — the
-    changelog of EVERY table stays exactly-once even when a crash fell
-    between two of the epoch's commits (partial replay)."""
-    state: dict[str, dict[str, int]] = {}
-
-    def last() -> dict[str, int]:
-        if not state:
-            state["last"] = {
-                n: t.committed_epochs().get(query, -1)
-                for n, t in tables.items()
-            }
-        return state["last"]
-
-    return last
+def _pair_rows(found: DataFrame) -> DataFrame:
+    """Verified pairs as pairs-table rows. The key is length-prefixed:
+    a bare 'id_a|id_b' concat is ambiguous when an id itself contains
+    '|' ('a|b'+'c' == 'a'+'b|c'), which would let two distinct pairs
+    overwrite one row."""
+    return found.select(
+        F.concat(
+            F.length("id_a").cast("string"),
+            F.lit("|"),
+            F.col("id_a"),
+            F.lit("|"),
+            F.col("id_b"),
+        ).alias("key"),
+        F.col("jaccard").cast("string").alias("value"),
+    )
 
 
 def incremental_dedup_sink(
@@ -98,14 +92,11 @@ def incremental_dedup_sink(
     :func:`indexed_incremental_dedup_sink` (persistent
     ``NearDupPrefixIndex``) for the O(|batch|)/trigger shape.
     """
-    last = _fence_gate({"pairs": pairs, "corpus": corpus}, query)
+    fence = _EpochFence(query, {"pairs": pairs, "corpus": corpus})
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        lo = min(last().values())
-        if e <= lo:
-            if e < lo:
-                warn_fence_regression(query, e, lo)
+        if not fence.pending(e):
             return  # fully-committed epoch replayed — nothing to do
         batch = (
             batch_df.select(
@@ -137,19 +128,6 @@ def incremental_dedup_sink(
             found = dedup_incremental(
                 standing, batch, text_col, id_col, k=k, threshold=threshold
             )
-            # length-prefixed key: a bare 'id_a|id_b' concat is ambiguous
-            # when an id itself contains '|' ('a|b'+'c' == 'a'+'b|c'),
-            # which would let two distinct pairs overwrite one row
-            pair_rows = found.select(
-                F.concat(
-                    F.length("id_a").cast("string"),
-                    F.lit("|"),
-                    F.col("id_a"),
-                    F.lit("|"),
-                    F.col("id_b"),
-                ).alias("key"),
-                F.col("jaccard").cast("string").alias("value"),
-            )
             doc_rows = batch.select(
                 F.col(id_col).alias("key"),
                 F.col(text_col).alias("value"),
@@ -164,23 +142,7 @@ def incremental_dedup_sink(
             # replay after a partial commit. Each commit is fenced;
             # under partial replay only the table whose commit was lost
             # re-runs.
-            from concurrent.futures import ThreadPoolExecutor
-
-            fences = last()
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                futs = []
-                if e > fences["pairs"]:
-                    futs.append(
-                        ex.submit(pairs.upsert, pair_rows, (query, e))
-                    )
-                if e > fences["corpus"]:
-                    futs.append(
-                        ex.submit(corpus.upsert, doc_rows, (query, e))
-                    )
-                for f in futs:
-                    f.result()
-            fences["pairs"] = max(fences["pairs"], e)
-            fences["corpus"] = max(fences["corpus"], e)
+            fence.commit(e, {"pairs": _pair_rows(found)}, {"corpus": doc_rows})
         finally:
             batch.unpersist()
 
@@ -258,14 +220,13 @@ def indexed_incremental_dedup_sink(
         # with the check disabled neither reads nor maintains it
         # (re-enabling later requires index.refresh() to rebuild it)
         tables["seen"] = index.seen
-    last = _fence_gate(tables, query)
+    fence = _EpochFence(query, tables)
     # standing-key estimate for the saturation warning: one parquet-
     # footer walk at start, then incremented from commit accounting —
     # footer_rows every epoch would re-open O(buckets x chain) files
     sat = {}
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
         from time import monotonic
 
         timing: dict[str, float] = {}
@@ -279,22 +240,9 @@ def indexed_incremental_dedup_sink(
             timing[name] = round(now - _t0, 3)
             _t0 = now
 
-        def _timed_call(name: str, fn, *args):
-            def run():
-                t = monotonic()
-                try:
-                    return fn(*args)
-                finally:
-                    timing[name] = round(monotonic() - t, 3)
-
-            return run
-
         e = int(epoch_id)
-        fences = last()
-        lo = min(fences.values())
-        if e <= lo:
-            if e < lo:
-                warn_fence_regression(query, e, lo)
+        todo = fence.pending(e)
+        if not todo:
             return  # fully-committed epoch replayed — nothing to do
         raw = (
             batch_df.select(
@@ -465,43 +413,20 @@ def indexed_incremental_dedup_sink(
             # driver actions, and two commits here bought nothing over
             # one); under partial replay the group contains only the
             # tables whose commit was lost.
-            group = []
-            if e > fences["postings"]:
-                group.append(
-                    (index.postings, index.posting_rows(bp, id_col))
-                )
-            if e > fences["sets"]:
-                group.append(
-                    (index.sets, index._hset_rows(batch_sets, id_col))
-                )
-            if redelivery_check and e > fences["seen"]:
-                group.append((index.seen, index.seen_rows(batch, id_col)))
-            pairs_ran = e > fences["pairs"]
+            group = {
+                "postings": index.posting_rows(bp, id_col),
+                "sets": index._hset_rows(batch_sets, id_col),
+            }
+            if "seen" in todo:  # seen_rows reads the standing bitmap
+                group["seen"] = index.seen_rows(batch, id_col)
             _mark("t_guard")
-            with ThreadPoolExecutor(max_workers=2) as ex:
-                futs = []
-                if e > fences["corpus"]:
-                    futs.append(
-                        ex.submit(
-                            _timed_call(
-                                "t_corpus_commit",
-                                corpus.upsert,
-                                doc_rows,
-                                (query, e),
-                            )
-                        )
-                    )
-                if group:
-                    futs.append(
-                        ex.submit(
-                            _timed_call(
-                                "t_group_commit",
-                                upsert_group,
-                                group,
-                                (query, e),
-                            )
-                        )
-                    )
+            with fence.overlap(
+                e,
+                {"corpus": doc_rows},
+                group,
+                timing=timing,
+                labels=("t_corpus_commit", "t_group_commit"),
+            ):
                 probe_stats: dict | None = {} if stats is not None else None
                 # probe(materialize=False) returns the verification
                 # plan LAZY over persisted candidate frames: the pairs
@@ -514,24 +439,11 @@ def indexed_incremental_dedup_sink(
                     buckets=buckets, materialize=False,
                 )
                 _mark("t_probe_build")
-                if pairs_ran:
-                    pair_rows = found.select(
-                        F.concat(
-                            F.length("id_a").cast("string"),
-                            F.lit("|"),
-                            F.col("id_a"),
-                            F.lit("|"),
-                            F.col("id_b"),
-                        ).alias("key"),
-                        F.col("jaccard").cast("string").alias("value"),
-                    )
-                    pairs.upsert(pair_rows, (query, e))
+                fence.commit(e, {"pairs": _pair_rows(found)})
                 _mark("t_pairs_commit")
-                for f in futs:
-                    f.result()
-                _mark("t_commit_wait")
+            _mark("t_commit_wait")
             index.finish_probe()
-            if "keys" in sat and e > fences["sets"]:
+            if "keys" in sat and "sets" in todo:
                 sat["keys"] += index.sets.last_commit_rows
             if stats is not None:
                 # footer-based accounting (no extra jobs beyond the
@@ -559,23 +471,23 @@ def indexed_incremental_dedup_sink(
                         ),
                         "n_batch": (
                             corpus.last_commit_rows
-                            if e > fences["corpus"]
+                            if "corpus" in todo
                             else None
                         ),
                         "n_prefix_rows": (
                             index.postings.last_commit_rows
-                            if e > fences["postings"]
+                            if "postings" in todo
                             else None
                         ),
                         "n_pairs": (
-                            pairs.last_commit_rows if pairs_ran else None
+                            pairs.last_commit_rows
+                            if "pairs" in todo
+                            else None
                         ),
                         "timing": dict(timing),
                         **(probe_stats or {}),
                     }
                 )
-            for name in fences:
-                fences[name] = max(fences[name], e)
             bp.unpersist()
         finally:
             if batch is not raw:
@@ -650,19 +562,14 @@ def bloom_gated_exact_dedup_sink(
     degraded to the ungated join it exists to avoid; rebuild with a
     bigger ``words``)."""
 
-    last = _fence_gate(
-        {"dupes": dupes, "fps": fingerprints, "bloom": bloom_state}, query
+    fence = _EpochFence(
+        query, {"dupes": dupes, "fps": fingerprints, "bloom": bloom_state}
     )
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        from concurrent.futures import ThreadPoolExecutor
-
         e = int(epoch_id)
-        fences = last()
-        lo = min(fences.values())
-        if e <= lo:
-            if e < lo:
-                warn_fence_regression(query, e, lo)
+        todo = fence.pending(e)
+        if not todo:
             return  # fully-committed epoch replayed — nothing to do
         keyed = (
             batch_df.select(
@@ -748,34 +655,24 @@ def bloom_gated_exact_dedup_sink(
             )
             # the three state writes hit three INDEPENDENT tables:
             # overlap their (driver-coordinated, two-job) commits so the
-            # epoch pays max not sum of their scheduling latencies
-            writes = [
-                ("dupes", dupes, all_dupes.select(
+            # epoch pays max not sum of their scheduling latencies; each
+            # commit is fenced, so under partial replay only the
+            # table(s) whose commit was lost re-run
+            fence.commit(
+                e,
+                {"dupes": all_dupes.select(
                     F.col("doc").alias("key"),
                     F.col("canonical").alias("value"),
-                )),
-                ("fps", fingerprints, canon.select(
+                )},
+                {"fps": canon.select(
                     F.col("fp").alias("key"),
                     F.col("canonical").alias("value"),
-                )),
-                ("bloom", bloom_state, updated.select(
+                )},
+                {"bloom": updated.select(
                     F.col("word").cast("string").alias("key"),
                     F.col("bm").cast("string").alias("value"),
-                )),
-            ]
-            with ThreadPoolExecutor(max_workers=3) as ex:
-                # each commit fenced; under partial replay only the
-                # table(s) whose commit was lost re-run
-                futs = [
-                    ex.submit(t.upsert, rows, (query, e))
-                    for name, t, rows in writes
-                    if e > fences[name]
-                ]
-                for f in futs:
-                    f.result()
-            dupes_ran = e > fences["dupes"]
-            for name, _, _ in writes:
-                fences[name] = max(fences[name], e)
+                )},
+            )
             if stats is not None:
                 stats.append(
                     {
@@ -788,7 +685,9 @@ def bloom_gated_exact_dedup_sink(
                         # job. None when a partial replay skipped the
                         # dupes commit (the count belongs to the
                         # original delivery's stats row).
-                        "n_dup": dupes.last_commit_rows if dupes_ran else None,
+                        "n_dup": (
+                            dupes.last_commit_rows if "dupes" in todo else None
+                        ),
                         "n_null_fp": n_keyed - n_batch,
                         "gate_fpr_est": round(gate_fpr, 6),
                     }

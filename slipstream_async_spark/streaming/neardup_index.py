@@ -33,7 +33,9 @@ O(|batch| + candidates):
   candidate count, never recall.
 - **Appends are epoch-fenced** like every other StateTable sink: a
   posting key is unique per (shingle, doc), so an append is a pure
-  O(|batch|) delta commit, and a replayed epoch no-ops.
+  O(|batch|) delta commit, and a replayed epoch no-ops. The indexed
+  sink commits postings, sets and the seen bitmap as one
+  :func:`~slipstream_async_spark.streaming.state.upsert_group`.
 
 Batch-lane twin: :func:`~slipstream_async_spark.operators.dedup.
 dedup_incremental_frozen` composes the same two helpers
@@ -382,28 +384,6 @@ class NearDupPrefixIndex:
             ),
         )
 
-    def append(
-        self,
-        batch_prefix: DataFrame,
-        id_col: str,
-        fence: tuple[str, int] | None = None,
-    ) -> None:
-        """Persist a batch's prefix rows — a pure O(|batch|) delta
-        commit (posting keys are unique per (shingle, doc)), epoch-
-        fenced like every StateTable sink commit."""
-        self.postings.upsert(self.posting_rows(batch_prefix, id_col),
-                             fence=fence)
-
-    def append_sets(
-        self,
-        batch_sets: DataFrame,
-        id_col: str,
-        fence: tuple[str, int] | None = None,
-    ) -> None:
-        """Persist a batch's verification hash arrays — O(|batch|),
-        epoch-fenced; one row per document."""
-        self.sets.upsert(self._hset_rows(batch_sets, id_col), fence=fence)
-
     def seen_bitmap_words(self) -> list[int] | None:
         """The standing seen-ids bitmap as a driver-side word array —
         read with pyarrow from the NEWEST chain file only (every seen
@@ -486,17 +466,6 @@ class NearDupPrefixIndex:
             F.col("bm").cast("string").alias("value"),
         )
 
-    def seen_fpr(self) -> float:
-        """Estimated FPR of the seen gate at the current corpus size
-        (sets footer count — driver-side, no job); the saturation
-        number behind the sink's loud warning."""
-        from slipstream_async_spark.operators.membership import bloom_fpr
-
-        return bloom_fpr(self.sets.footer_rows(), words=self.seen_words)
-
-    def committed_epochs(self) -> dict[str, int]:
-        return self.postings.committed_epochs()
-
     # -- maintenance ------------------------------------------------------
 
     def freeze_order_from(self, sets: DataFrame) -> None:
@@ -547,18 +516,8 @@ class NearDupPrefixIndex:
         # postings table is append-only), no empty-table window, one
         # single-file chain per bucket afterwards
         self.freeze_order_from(sets)
-        bp = frozen_order_prefix_rows(
-            sets, id_col, self.threshold, hot=self.hot()
-        )
         self.postings.replace_all(
-            bp.select(
-                F.concat(F.col("s"), F.lit(self.SEP), F.col(id_col)).alias(
-                    "key"
-                ),
-                F.concat_ws(
-                    "|", F.col("n"), F.col("pos"), F.col(id_col)
-                ).alias("value"),
-            )
+            self.posting_rows(self.prefix_rows(sets, id_col), id_col)
         )
         # sets content is order-independent, but refresh() doubles as
         # "build an index from an existing corpus" — rebuild them too

@@ -229,9 +229,8 @@ def test_indexed_partial_replay_finds_pairs(spark, tmp_path):
         fence=("incremental_dedup", 1),
     )
     bsets = index.sets_of(batch1, "text", "doc_id")
-    index.append(
-        index.prefix_rows(bsets, "doc_id"),
-        "doc_id",
+    index.postings.upsert(
+        index.posting_rows(index.prefix_rows(bsets, "doc_id"), "doc_id"),
         fence=("incremental_dedup", 1),
     )
     vc, vx = corpus.version, index.postings.version

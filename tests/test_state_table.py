@@ -268,14 +268,40 @@ def test_null_keys_rejected(spark, tmp_path):
     t.destroy()
 
 
-def test_legacy_layout_detected(spark, tmp_path):
-    """A v{n} dir without manifest.json (pre-manifest layout) must fail
-    loudly, not read as empty state."""
+@pytest.mark.parametrize(
+    "layout",
+    ["no_manifest", "flat_manifest", "manifest_without_fences",
+     "flat_changelog_file"],
+)
+def test_legacy_layout_detected(spark, tmp_path, layout):
+    """Layouts no commit writes any more must fail loudly, not read as
+    empty (or silently partial) state: a v{n} dir without manifest.json
+    (pre-manifest), the flat bucket->version manifest (r8), a manifest
+    without the cumulative fence map, and flat changelog files
+    (pre-segment)."""
+    import json
     import os
 
     p = tmp_path / "legacy"
     os.makedirs(p / "versions" / "v0")
-    with pytest.raises(RuntimeError, match="manifest"):
+    os.makedirs(p / "changelog")
+    manifest = {
+        "flat_manifest": {"0": 0, "3": 0},
+        "manifest_without_fences": {
+            "n_buckets": 4, "partition_sep": None, "chains": {"0": [0]}
+        },
+    }.get(layout)
+    if manifest is not None:
+        (p / "versions" / "v0" / "manifest.json").write_text(
+            json.dumps(manifest)
+        )
+    if layout == "flat_changelog_file":
+        (p / "versions" / "v0" / "manifest.json").write_text(json.dumps({
+            "n_buckets": 4, "partition_sep": None, "chains": {},
+            "fences": {},
+        }))
+        (p / "changelog" / "part-00000.parquet").write_bytes(b"")
+    with pytest.raises(RuntimeError, match="unsupported StateTable layout"):
         StateTable(spark, str(p))
 
 
@@ -334,23 +360,75 @@ def test_vacuum_preserves_chain_shared_versions(spark, tmp_path):
     t.destroy()
 
 
-def test_torn_commit_dirs_are_invisible_and_recoverable(spark, tmp_path):
+def test_torn_commit_dirs_are_invisible_and_recoverable(
+    spark, tmp_path, monkeypatch
+):
     """Crash leftovers (delta-N.tmp / vN.tmp without manifests) must
     not surface as state, break version listing, or block the next
-    commit."""
+    commit — including a killed commit's delta dir holding rows at
+    exactly the name the next commit adopts its delta into, through
+    both upsert and upsert_group (whose empty-batch side adopts
+    nothing), and the cross-filesystem adoption fallback."""
     import os
 
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from slipstream_async_spark.streaming import state as st
+
     t = StateTable(spark, str(tmp_path / "torn"))
+    u = StateTable(spark, str(tmp_path / "torn_u"))
     t.put("a", 1)
     vdir = os.path.join(t.path, "versions")
     os.makedirs(os.path.join(vdir, "delta-9.tmp", "_bucket=0"))
     os.makedirs(os.path.join(vdir, "v9.tmp", "_bucket=0"))
     assert t.version == 0  # torn dirs invisible
+
+    def leave_torn_delta(table, key):
+        d = os.path.join(
+            table.path, "versions", f"delta-{table.version + 1}.tmp",
+            f"_bucket={table._bucket_of(key)}",
+        )
+        os.makedirs(d, exist_ok=True)
+        pq.write_table(
+            pa.table({
+                "key": ["stale"], "value": ["x"],
+                "attrs": pa.array([None], pa.map_(pa.string(), pa.string())),
+                "op": ["put"],
+            }),
+            os.path.join(d, "part-stale.parquet"),
+        )
+
+    leave_torn_delta(t, "b")
     t.put("b", 2)  # next commit proceeds
     assert t.version == 1
     assert t.get("a") == 1 and t.get("b") == 2
     assert t.snapshot().count() == 2
+    leave_torn_delta(t, "c")
+    leave_torn_delta(u, "c")
+    st.upsert_group([
+        (t, spark.createDataFrame([("c", "3")], "key string, value string")),
+        (u, spark.createDataFrame([], "key string, value string")),
+    ])
+    assert t.version == 2 and u.version == 0
+    assert sorted(r["key"] for r in t.snapshot().collect()) == ["a", "b", "c"]
+    assert sorted(r["key"] for r in t.changelog().collect()) == ["a", "b", "c"]
+    assert u.snapshot().count() == 0 and u.changelog().count() == 0
+    # adoption fallback (rename impossible, e.g. across filesystems):
+    # the nested _bucket=N dirs of a group subtree are linked over
+    src = tmp_path / "grp" / "_bucket=3"
+    os.makedirs(src)
+    (src / "part-0.parquet").write_bytes(b"rows")
+
+    def no_rename(a, b):
+        raise OSError(18, "Invalid cross-device link")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", no_rename)
+        st._adopt_dir(str(tmp_path / "grp"), str(tmp_path / "adopted"))
+    assert (tmp_path / "adopted" / "_bucket=3" / "part-0.parquet").read_bytes() == b"rows"
     t.destroy()
+    u.destroy()
 
 
 def test_rebucket_resizes_and_persists(spark, tmp_path):
@@ -361,12 +439,16 @@ def test_rebucket_resizes_and_persists(spark, tmp_path):
     t.upsert(
         spark.range(200).selectExpr(
             "cast(id as string) as key", "cast(id as string) as value"
-        )
+        ),
+        fence=("q", 7),
     )
     v_before = t.version
+    n_log = t.changelog().count()
     t.rebucket(16)
     assert t.n_buckets == 16
     assert t.snapshot().count() == 200
+    assert t.committed_epochs() == {"q": 7}, "fences survive rebucket"
+    assert t.changelog().count() == n_log, "a resize is not a mutation"
     assert t.get("123") == "123"
     assert t.snapshot(v_before).count() == 200  # time travel across resize
     t2 = StateTable(spark, str(tmp_path / "rb"))  # reopen adopts 16
@@ -620,6 +702,36 @@ def test_multi_table_dedup_sink_epoch_fenced(spark, tmp_path):
     corpus.destroy()
     pairs.destroy()
 
+    # the bloom-gated sink shares the fence: epoch 1's fingerprint
+    # commit landed, the bloom and dupes commits were lost — the
+    # replay re-runs only those two
+    from slipstream_async_spark.functions.text import text_fingerprint
+    from slipstream_async_spark.streaming.dedup_flow import (
+        bloom_gated_exact_dedup_sink,
+    )
+
+    fps, bloom, dupes = (
+        StateTable(spark, str(tmp_path / n)) for n in ("fps", "bloom", "dupes")
+    )
+    bloom_gated_exact_dedup_sink(fps, bloom, dupes)(batch, 0)
+    fps.upsert(
+        batch2.select(
+            text_fingerprint("text").alias("key"),
+            F.col("doc_id").alias("value"),
+        ),
+        fence=("bloom_dedup", 1),
+    )
+    vs = (fps.version, bloom.version, dupes.version)
+    logs = fps.changelog().count()
+    bloom_gated_exact_dedup_sink(fps, bloom, dupes)(batch2, 1)
+    assert (fps.version, bloom.version, dupes.version) == (
+        vs[0], vs[1] + 1, vs[2] + 1
+    ), "only the lost bloom and dupes commits may re-run"
+    assert fps.changelog().count() == logs
+    for t in (fps, bloom, dupes):
+        assert t.committed_epochs() == {"bloom_dedup": 1}
+        t.destroy()
+
 
 def test_fences_survive_compaction_and_vacuum(spark, tmp_path):
     """The cumulative fence map rides every manifest, so epoch fencing
@@ -825,35 +937,74 @@ def test_changelog_vacuum_retention_above_log_length_keeps_all(
     t.destroy()
 
 
-def test_fence_regression_warns_on_checkpoint_reset(spark, tmp_path):
+@pytest.mark.parametrize(
+    "kind",
+    ["foreach_batch_upsert", "incremental_dedup_sink",
+     "indexed_incremental_dedup_sink", "bloom_gated_exact_dedup_sink"],
+)
+def test_fence_regression_warns_on_checkpoint_reset(spark, tmp_path, kind):
     """A delivered epoch STRICTLY below the recovered fence cannot be
     a replay (replay re-delivers at most the in-flight epoch == the
     fence) — it means the streaming checkpoint was reset while the
-    state table kept its fences. The sink must warn loudly while
-    skipping; the equal-epoch replay stays silent."""
+    state table kept its fences. Every sink (one shared fence) must
+    warn loudly while skipping; the equal-epoch replay stays silent."""
     import warnings as _w
 
+    from slipstream_async_spark.streaming import dedup_flow
+    from slipstream_async_spark.streaming.neardup_index import (
+        NearDupPrefixIndex,
+    )
     from slipstream_async_spark.streaming.state import foreach_batch_upsert
 
-    t = StateTable(spark, str(tmp_path / "reset"))
-    sink = foreach_batch_upsert(t, query="q")
-    batch = spark.createDataFrame(
-        [("a", "1")], "key string, value string"
-    )
-    sink(batch, 5)
-    v = t.version
+    def table(name):
+        return StateTable(spark, str(tmp_path / name), n_buckets=4)
+
+    if kind == "foreach_batch_upsert":
+        tables = [table("reset")]
+        batch = spark.createDataFrame(
+            [("a", "1")], "key string, value string"
+        )
+
+        def make():
+            return foreach_batch_upsert(tables[0], query="q")
+    else:
+        batch = spark.createDataFrame(
+            [("1", "aaa bbb ccc ddd"), ("2", "aaa bbb ccc eee")],
+            "doc_id string, text string",
+        )
+        if kind == "bloom_gated_exact_dedup_sink":
+            tables = [table("fps"), table("bloom"), table("dupes")]
+        else:
+            tables = [table("corpus"), table("pairs")]
+        if kind == "indexed_incremental_dedup_sink":
+            index = NearDupPrefixIndex(
+                spark, str(tmp_path / "idx"), n_buckets=4
+            )
+            tables += [index.postings, index.sets, index.seen]
+
+        def make():
+            if kind == "indexed_incremental_dedup_sink":
+                return dedup_flow.indexed_incremental_dedup_sink(
+                    tables[0], tables[1], index, query="q"
+                )
+            return getattr(dedup_flow, kind)(*tables, query="q")
+
+    def versions():
+        return [t.version for t in tables]
+
+    make()(batch, 5)
+    v = versions()
     # equal-epoch replay: silent no-op
-    sink2 = foreach_batch_upsert(t, query="q")
     with _w.catch_warnings(record=True) as rec:
         _w.simplefilter("always")
-        sink2(batch, 5)
+        make()(batch, 5)
     assert not [w for w in rec if issubclass(w.category, RuntimeWarning)]
     # checkpoint reset: epoch restarts at 0 — loud warning, still skipped
-    sink3 = foreach_batch_upsert(t, query="q")
     with pytest.warns(RuntimeWarning, match="below the committed fence"):
-        sink3(batch, 0)
-    assert t.version == v
-    t.destroy()
+        make()(batch, 0)
+    assert versions() == v
+    for t in tables:
+        t.destroy()
 
 
 def test_upsert_group_one_job_many_tables(spark, tmp_path):
@@ -1012,10 +1163,12 @@ def test_commit_write_plans_one_exchange(spark, tmp_path):
     batch = spark.createDataFrame(
         [(str(i % 5), str(i)) for i in range(20)], "key string, value string"
     )
-    single = t._bucketed(_normalize_put_batch(batch))
+    single = _grouped([(t, _normalize_put_batch(batch))])
     assert _exchanges(single) == 1
     assert single.count() == 5
-    group = _grouped([(t, batch), (u, batch)])
+    group = _grouped(
+        [(t, _normalize_put_batch(batch)), (u, _normalize_put_batch(batch))]
+    )
     assert _exchanges(group) == 1
     assert group.count() == 10
     t.upsert(batch)

@@ -1312,7 +1312,7 @@ def test_ann_enrich_sink_large_list_generic_lane(spark, stream_dir):
     generic crossJoin+window probe lane at setup (a plan-literal of
     thousands of centroids would bloat every serialized stage) — and
     the enriched results must equal the direct batch probe, exactly as
-    they do on the literal lane."""
+    they do on the literal lane. A replayed epoch commits nothing."""
     from slipstream_async_spark.operators.similarity import (
         MAPSIDE_MAX_LISTS,
         ivf_index_write,
@@ -1332,6 +1332,12 @@ def test_ann_enrich_sink_large_list_generic_lane(spark, stream_dir):
     results = StateTable(spark, os.path.join(stream_dir, "ann_big_res"))
     sink = ann_enrich_sink(index_path, results, k=3, n_probe=4)
     sink(queries, 0)
+    # epoch-fenced: a same-closure replay and a replay after a restart
+    # (a new sink) commit no duplicate version or changelog events
+    v, n_log = results.version, results.changelog().count()
+    sink(queries, 0)
+    ann_enrich_sink(index_path, results, k=3, n_probe=4)(queries, 0)
+    assert (results.version, results.changelog().count()) == (v, n_log)
     got = {r["key"]: r["value"] for r in results.snapshot().collect()}
     exp = {}
     for r in sorted(
