@@ -1,7 +1,6 @@
 from slipstream_async_spark.sources.readers import (
     TABLES,
     load_table,
-    load_tables,
     read_stream_from_parquet,
 )
 from slipstream_async_spark.sources.codecs import json_decode, json_encode
@@ -9,7 +8,6 @@ from slipstream_async_spark.sources.codecs import json_decode, json_encode
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
     "read_stream_from_parquet",
     "json_decode",
     "json_encode",

@@ -7,15 +7,27 @@ for unbounded. The Kafka wrapper is gated behind availability of the Kafka
 connector jars (not in this container) — the reader builder is real, the
 test path uses file-backed streams which exercise identical Structured
 Streaming semantics (micro-batches, watermarks, state).
+
+Every parquet read here states its schema: one memoized footer read per
+file (``_footer``) gives ``load_table`` its schema and ``spread`` its
+row-group count, so building a frame runs no Spark job and sets no session
+config. The one schema-less read is ``load_table``'s fallback for a footer
+the Arrow mapping cannot match exactly.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JError
+from pyspark.errors import PySparkTypeError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -31,52 +43,96 @@ TABLES = (
 )
 
 
-def _nanos_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS), which Spark cannot read
-    as timestamps. Footer-only read — O(KB) regardless of table size.
-    """
-    try:
-        import pyarrow.parquet as pq
-        import pyarrow as pa
+# Parquet footers, memoized per file version (path, size, mtime_ns), so a
+# file rewritten in place is read again. One driver-side O(KB) read per
+# file gives ``load_table`` its schema and ``spread`` its row-group count.
+_FOOTERS: dict[tuple[str, int, int], tuple[pa.Schema | None, int]] = {}
 
-        schema = pq.read_schema(path)
-        return [
-            f.name
-            for f in schema
-            if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-        ]
-    except Exception:
-        return []
+# Spark type names whose Arrow mapping equals Spark's parquet inference;
+# Arrow durations, times and nulls map to types Spark does not infer.
+_EXACT_TYPE = re.compile(
+    r"boolean|byte|short|integer|long|float|double|decimal\(\d+,\d+\)"
+    r"|string|binary|date|timestamp(_ntz)?|array|map|struct"
+)
+
+
+def _footer(path: str) -> tuple[pa.Schema | None, int]:
+    """A local parquet file's Arrow schema and row-group count. The schema
+    is None when a column is INT96 (which Arrow reports as
+    ``timestamp[ns]`` but Spark infers as a timestamp) or a nanosecond
+    timestamp below the top level. Raises for any other input."""
+    path = path.removeprefix("file://").removeprefix("file:")
+    st = os.stat(path)
+    key = (path, st.st_size, st.st_mtime_ns)
+    if key not in _FOOTERS:
+        pf = pq.ParquetFile(path)
+        inexact = any(
+            c.physical_type == "INT96"
+            or ("." in c.path and "nanoseconds" in str(c.logical_type))
+            for c in map(pf.schema.column, range(len(pf.schema)))
+        )
+        _FOOTERS[key] = (
+            None if inexact else pf.schema_arrow,
+            pf.metadata.num_row_groups,
+        )
+    return _FOOTERS[key]
+
+
+def _footer_schema(
+    spark: SparkSession, path: str
+) -> tuple[StructType, list[str]] | None:
+    """The schema Spark's own inference gives a local parquet file, and
+    its TIMESTAMP(NANOS) columns, typed ``LongType`` as
+    ``spark.sql.legacy.parquet.nanosAsLong`` would. Zoneless timestamps
+    follow ``spark.sql.parquet.inferTimestampNTZ.enabled``, as inference
+    does. None when the footer cannot be read or holds a type this
+    mapping cannot match exactly."""
+    try:
+        arrow = _footer(path)[0]
+    except (OSError, pa.ArrowException):
+        return None
+    if arrow is None:
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    nanos = [
+        f.name for f in arrow if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
+    ]
+    arrow = pa.schema(
+        [f.with_type(pa.int64()) if f.name in nanos else f for f in arrow]
+    )
+    try:
+        schema = from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
+    except PySparkTypeError:
+        return None
+    names = re.findall(
+        r'"(?:type|elementType|keyType|valueType)":"([^"]+)"', schema.json()
+    )
+    if not all(_EXACT_TYPE.fullmatch(t) for t in names):
+        return None
+    return schema, nanos
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one synthetic table (columnar scan; Catalyst prunes/pushes).
+    """Read one synthetic table (columnar scan; Catalyst prunes/pushes)
+    with the schema from its footer: no Spark job, no session config set.
 
-    TIMESTAMP(NANOS) parquet columns (illegal for Spark's vectorized
-    reader) are read as epoch-nano longs and floor-converted to
-    microsecond timestamps — matching DuckDB's ns->us truncation so the
-    oracle comparison sees identical values.
+    TIMESTAMP(NANOS) parquet columns (illegal for Spark's readers) are
+    read as epoch-nano longs and floor-converted to microsecond
+    timestamps — matching DuckDB's ns->us truncation so the oracle
+    comparison sees identical values. A footer ``_footer_schema`` cannot
+    map takes Spark's inferred read, one job.
     """
     path = f"{sf_dir}/{name}.parquet"
-    ns_cols = _nanos_timestamp_columns(path)
-    if not ns_cols:
+    footer = _footer_schema(spark, path)
+    if footer is None:
         return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
+    schema, nanos = footer
+    df = spark.read.schema(schema).parquet(path)
+    for c in nanos:
         # Integer `div`, not `/`: float division of epoch-nanos (~1.7e18)
         # exceeds double's 2^53 integer range and drifts by ±1us.
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
-
-
-# Parquet-footer row-group counts, memoized per file version: (path,
-# size, mtime_ns), so a file rewritten in place is probed again. The
-# probe is driver-side O(KB) footer reads, paid once per distinct file
-# per process — never a plan->RDD conversion (which re-runs physical
-# planning on every call and, under AQE, would eagerly execute upstream
-# shuffle stages if a caller ever passed a post-exchange frame).
-_ROW_GROUPS: dict[tuple[str, int, int], int] = {}
 
 
 def _carrying_tasks(df: DataFrame) -> int:
@@ -86,26 +142,13 @@ def _carrying_tasks(df: DataFrame) -> int:
     number when the inputs are not inspectable local parquet — the
     conservative answer, making ``spread`` a no-op."""
     try:
-        files = tuple(sorted(df.inputFiles()))
+        files = df.inputFiles()
     except Exception:
-        return 1 << 30
-    if not files:
         return 1 << 30
     try:
-        import pyarrow.parquet as pq
-
-        n = 0
-        for f in files:
-            path = f[7:] if f.startswith("file://") else f
-            path = path[5:] if path.startswith("file:") else path
-            st = os.stat(path)
-            key = (path, st.st_size, st.st_mtime_ns)
-            if key not in _ROW_GROUPS:
-                _ROW_GROUPS[key] = pq.ParquetFile(path).metadata.num_row_groups
-            n += _ROW_GROUPS[key]
-    except Exception:
+        return sum(_footer(f)[1] for f in files) if files else 1 << 30
+    except (OSError, pa.ArrowException):
         return 1 << 30
-    return n
 
 
 # Logical nodes that keep their child's partitioning: a Repartition
@@ -148,9 +191,9 @@ def spread(df: DataFrame, *key_cols: str) -> DataFrame:
     shuffle at 100 TB.
 
     Contract: apply to scan-side frames only (a bare ``load_table`` scan
-    plus narrow projections/filters). The probe reads parquet footers of
-    the plan's input files; anything else (no files, non-parquet,
-    unreadable) is treated as already-parallel and passes through.
+    plus narrow projections/filters). The probe reads the memoized
+    footers (``_footer``) of the plan's input files; anything else (no
+    files, non-parquet, unreadable) is treated as already-parallel.
 
     With ``key_cols`` the fan-out hash-partitions on those columns —
     deterministic row placement (retry-safe without the round-robin
@@ -207,37 +250,22 @@ def scoped_cache(df: DataFrame, label: str, storage_level=None) -> DataFrame:
     return tagged.select(*cols)
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Read all driver tables and register each as a temp view.
-
-    Registering views makes the SQL surface (spark.sql) usable with the
-    same table names the DuckDB oracle sees.
-    """
-    dfs: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        dfs[name] = df
-    return dfs
-
-
 def read_stream_from_parquet(
-    spark: SparkSession, path: str, schema=None, max_files_per_trigger: int = 1
+    spark: SparkSession, path: str, schema, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """Unbounded DataFrame over a parquet directory (test/stream harness).
 
     Stands in for the reference's generic async-iterable source
     (slipstream/core.py:173-175): a bounded fixture replayed as a stream.
+    ``schema`` is required: file streams need one, and a batch peek to
+    infer it would run a hidden job.
     """
-    reader = spark.readStream.format("parquet").option(
-        "maxFilesPerTrigger", str(max_files_per_trigger)
+    return (
+        spark.readStream.format("parquet")
+        .schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .load(path)
     )
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        # Streaming readers need an explicit schema; infer from a batch peek.
-        reader = reader.schema(spark.read.parquet(path).schema)
-    return reader.load(path)
 
 
 def kafka_source(

@@ -57,7 +57,7 @@ from slipstream_async_spark.operators.dedup import (
     frozen_order_prefix_rows,
     ppjoin_probe_candidates,
 )
-from slipstream_async_spark.streaming.state import StateTable
+from slipstream_async_spark.streaming.state import _FILE_SCHEMA, StateTable
 
 
 class NearDupPrefixIndex:
@@ -431,7 +431,7 @@ class NearDupPrefixIndex:
                 [], "word int, bm bigint"
             )
         newest = self.seen._chain_paths(chain, 0)[-1]
-        return self.spark.read.parquet(newest).select(
+        return self.spark.read.schema(_FILE_SCHEMA).parquet(newest).select(
             F.col("key").cast("int").alias("word"),
             F.col("value").cast("bigint").alias("bm"),
         )

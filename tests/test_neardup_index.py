@@ -343,6 +343,27 @@ def test_redelivery_guard_safe_under_partial_replay(spark, tmp_path):
     index.destroy()
 
 
+def test_seen_bloom_builds_without_a_job(spark, tmp_path, count_jobs):
+    """``seen_bloom`` reads the newest seen file with the StateTable file
+    schema, so building it after a seen commit runs no inference job
+    (one per trigger through ``seen_rows`` before)."""
+    index = NearDupPrefixIndex(
+        spark, str(tmp_path / "idx"), k=3, threshold=0.5, n_buckets=4,
+        seen_words=64,
+    )
+    batch = _mk(spark, [("a", "p q r"), ("b", "x y z")])
+    index.seen.upsert(index.seen_rows(batch, "doc_id"), fence=("seen", 0))
+    bloom, jobs = count_jobs(index.seen_bloom)
+    assert jobs == 0
+    assert bloom.schema.simpleString() == "struct<word:int,bm:bigint>"
+    got = {(r["word"], r["bm"]) for r in bloom.collect()}
+    want = {
+        (int(r["key"]), int(r["value"]))
+        for r in index.seen.snapshot().collect()
+    }
+    assert got == want and got
+    index.destroy()
+
 def test_refresh_and_stale_hot_order_stay_exact(spark, tmp_path):
     """refresh() re-freezes the hot-shingle order and rebuilds the
     postings; ingesting MORE docs without refreshing (a stale hot set)

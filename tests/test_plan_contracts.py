@@ -18,6 +18,9 @@ SF = "/root/testdata/sf0.001"
 
 
 def _plan(df, mode: str = "formatted") -> str:
+    """``df``'s plan string; a ``q`` entry already holds both modes."""
+    if isinstance(df, dict):
+        return df[mode]
     return df._jdf.queryExecution().explainString(
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             mode
@@ -26,10 +29,10 @@ def _plan(df, mode: str = "formatted") -> str:
 
 
 @pytest.fixture(scope="module")
-def q(spark):
-    from slipstream_async_spark.plans.catalog import _QUERIES
-
-    return {name: fn(spark, SF) for name, fn in _QUERIES.items()}
+def q(catalog_build):
+    """Every catalog query's formatted and simple plans, from the one
+    session-wide catalog build."""
+    return catalog_build
 
 
 def test_filter_and_projection_pushed_to_scan(q):

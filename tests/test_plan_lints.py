@@ -18,13 +18,17 @@ import re
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _audit():
+def _tool(name: str):
     spec = importlib.util.spec_from_file_location(
-        "explain_audit", os.path.join(REPO, "tools", "explain_audit.py")
+        name, os.path.join(REPO, "tools", f"{name}.py")
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
+
+
+def _audit():
+    return _tool("explain_audit")
 
 
 def _simple_plan(df) -> str:
@@ -91,7 +95,7 @@ def test_bnlj_whitelist_names_real_queries():
     assert not stale, f"whitelist entries with no catalog query: {stale}"
 
 
-def test_audit_covers_entire_catalog(spark):
+def test_audit_covers_entire_catalog(catalog_build):
     """The r7 escape: orders_hurst_rs shipped between two PARTIAL audit
     runs and nothing asserted audit coverage == catalog coverage, so its
     SP-WINDOW/BNLJ flags went unadjudicated for a round. This test IS
@@ -105,14 +109,11 @@ def test_audit_covers_entire_catalog(spark):
     from slipstream_async_spark.plans.catalog import _QUERIES
 
     audit = _audit()
-    sf_dir = "/root/testdata/sf0.001"
+    assert set(catalog_build) == set(_QUERIES)
     flagged: dict[str, list[str]] = {}
-    for name, fn in _QUERIES.items():
-        df = fn(spark, sf_dir)
-        je = df._jdf.queryExecution()
-        mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode
-        plan = je.explainString(mode.fromString("formatted"))
-        plan_simple = je.explainString(mode.fromString("simple"))
+    for name, built in catalog_build.items():
+        plan = built["formatted"]
+        plan_simple = built["simple"]
         flags = []
         if (
             audit.singlepartition_window(plan_simple)
@@ -134,6 +135,44 @@ def test_audit_covers_entire_catalog(spark):
         f"unadjudicated plan flags (rewrite or whitelist with a "
         f"justification in tools/explain_audit.py): {flagged}"
     )
+
+
+def test_dump_is_independent_of_distinct_group_order():
+    """Spark's distinct-aggregate rewrite numbers its groups in an order
+    that follows the session's expression-id history. Two masked dumps
+    of one plan that differ only in that order must come out identical,
+    and a real difference (another literal) must survive."""
+    dump = _tool("dump_plans")
+    template = "\n".join([
+        "(13) Expand",
+        "Input [2]: [source#12, t#13]",
+        "Arguments: [[CASE WHEN (source#12 = {a}) THEN t#13 END, null, null, "
+        "1], [null, t#13, null, 2], [null, null, CASE WHEN (source#12 = {b}) "
+        "THEN t#13 END, 3]], [CASE WHEN {a} END#40, t#41, CASE WHEN {b} "
+        "END#42, gid#43]",
+        "Keys [4]: [CASE WHEN {a} END#40, t#41, CASE WHEN {b} END#42, gid#43]",
+        "Arguments: hashpartitioning(CASE WHEN {a} END#40, t#41, CASE WHEN "
+        "{b} END#42, gid#43, 4), ENSURE_REQUIREMENTS, [plan_id=7]",
+        "Functions [2]: [partial_count(CASE WHEN src0 END#40) FILTER (WHERE "
+        "(gid#43 = {g0})), partial_count(CASE WHEN src1 END#42) FILTER "
+        "(WHERE (gid#43 = {g1}))]",
+    ])
+
+    def plan(a: str, b: str) -> str:
+        g0, g1 = (1, 3) if a == "src0" else (3, 1)
+        return template.format(a=a, b=b, g0=g0, g1=g1)
+
+    def canonical(text: str) -> str:
+        return dump.sort_distinct_groups(dump.mask_ids(text))
+
+    one, other = plan("src0", "src1"), plan("src1", "src0")
+    assert dump.mask_ids(one) != dump.mask_ids(other)
+    assert canonical(one) == canonical(other)
+    assert canonical(one) != canonical(plan("src0", "src2"))
+    assert canonical(one).split("\n")[:2] == [
+        "(13) Expand",
+        "Input [2]: [source#N, t#N]",
+    ]
 
 
 def test_hash32_never_an_unbounded_identity():

@@ -5,14 +5,19 @@ explicitly — the single-pass form the readers document for scale).
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from slipstream_async_spark.sources.readers import (
+    TABLES,
     _carrying_tasks,
+    _footer,
+    _footer_schema,
     load_table,
     read_csv,
     read_json,
@@ -165,3 +170,64 @@ def test_row_group_probe_sees_a_rewritten_file(spark, tmp_path):
     assert _carrying_tasks(spark.read.parquet(path)) == 1
     _write_ints(path, row_group_size=4)
     assert _carrying_tasks(spark.read.parquet(path)) == 16
+
+
+def test_load_table_floors_nanos_without_touching_the_session(spark, tmp_path):
+    """An INT64 TIMESTAMP(NANOS) column reads through its footer schema
+    as epoch-nano longs and floor-converts to microseconds; the session's
+    ``nanosAsLong`` flag is neither needed nor set."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    before = spark.conf.get(key)
+    ns = [1704164645123456789, 1704164645000000999, None]
+    pq.write_table(
+        pa.table({"ts": pa.array(ns, pa.timestamp("ns")), "k": [1, 2, 3]}),
+        os.path.join(str(tmp_path), "ticks.parquet"),
+    )
+    df = load_table(spark, str(tmp_path), "ticks")
+    assert df.schema["ts"].dataType.simpleString() == "timestamp"
+    got = df.orderBy("k").select(F.unix_micros("ts").alias("us")).collect()
+    assert [r["us"] for r in got] == [1704164645123456, 1704164645000000, None]
+    assert spark.conf.get(key) == before
+
+
+def test_footer_schema_matches_spark_inference(spark):
+    """For every table under the sf dirs that exist, the schema mapped
+    from the footer equals Spark's own inferred read, nullability
+    included."""
+    paths = sorted(glob.glob(os.path.join(os.path.dirname(SF), "sf*", "*.parquet")))
+    assert paths
+    for path in paths:
+        footer = _footer_schema(spark, path)
+        assert footer is not None, path
+        assert footer[0] == spark.read.parquet(path).schema, path
+
+
+def test_int96_footer_takes_the_inferred_read(spark, tmp_path):
+    """Spark writes timestamps as INT96, which Arrow reports as
+    ``timestamp[ns]``: such a file must not take the nanos rule, so it
+    falls back to Spark's inferred read and reads as before."""
+    src = spark.createDataFrame(
+        [(1, "2024-01-02 03:04:05.123456"), (2, None)], "k int, ts string"
+    ).withColumn("ts", F.to_timestamp("ts"))
+    out = os.path.join(str(tmp_path), "spark_out")
+    src.coalesce(1).write.parquet(out)
+    (part,) = glob.glob(os.path.join(out, "part-*.parquet"))
+    path = os.path.join(str(tmp_path), "stamped.parquet")
+    shutil.move(part, path)
+    leaf = pq.ParquetFile(path).schema.column(1)
+    assert leaf.physical_type == "INT96"
+    assert _footer(path)[0] is None
+    assert _footer_schema(spark, path) is None
+    df = load_table(spark, str(tmp_path), "stamped")
+    assert df.schema == spark.read.parquet(path).schema
+    assert sorted(map(tuple, df.collect()), key=lambda r: r[0]) == sorted(
+        map(tuple, src.collect()), key=lambda r: r[0]
+    )
+
+
+def test_load_table_runs_no_spark_job(spark, count_jobs):
+    """Building a table frame reads the schema from the footer: no
+    inference job, for every table."""
+    dfs, jobs = count_jobs(lambda: [load_table(spark, SF, t) for t in TABLES])
+    assert jobs == 0
+    assert all(df.columns for df in dfs)

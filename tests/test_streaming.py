@@ -64,6 +64,33 @@ def test_pipeline_end_to_end(spark, stream_dir):
     p.stop()
 
 
+def test_read_stream_from_parquet_explicit_schema(spark, stream_dir):
+    """S5: two pyarrow-written files stream through
+    ``read_stream_from_parquet`` under the caller's schema, one file per
+    trigger, into a memory sink."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from slipstream_async_spark.sources.readers import read_stream_from_parquet
+
+    src_path = os.path.join(stream_dir, "src")
+    os.makedirs(src_path)
+    for i, keys in enumerate(([1, 2], [3])):
+        pq.write_table(
+            pa.table({"k": keys, "s": [f"r{k}" for k in keys]}),
+            os.path.join(src_path, f"part-{i}.parquet"),
+        )
+    df = read_stream_from_parquet(spark, src_path, "k bigint, s string")
+    q = df.writeStream.format("memory").queryName("out_s5").start()
+    try:
+        q.processAllAvailable()
+        batches = [p["numInputRows"] for p in q.recentProgress]
+    finally:
+        q.stop()
+    got = sorted(map(tuple, spark.sql("SELECT k, s FROM out_s5").collect()))
+    assert got == [(1, "r1"), (2, "r2"), (3, "r3")]
+    assert sorted(n for n in batches if n) == [1, 2]
+
 def test_stateful_fold_count(spark, stream_dir):
     """A1 streaming: running per-key count via applyInPandasWithState —
     the reference's emoji counter (getting_started.rst:113-123)."""
