@@ -650,8 +650,11 @@ def duplicate_clusters(
         # ONE bounded action instead of count-then-collect: fetch at
         # most cutover+1 rows — if the limit row arrives, the edge list
         # exceeds the driver budget and the distributed lane runs; the
-        # driver never holds more than the dial allows either way.
-        rows = edges.limit(driver_cutover + 1).collect()
+        # driver never holds more than the dial allows either way. The
+        # coalesce(1) plans one local+global limit over every partition
+        # instead of Spark's incremental take (one job per scan round,
+        # so the job count grew with the partition count).
+        rows = edges.limit(driver_cutover + 1).coalesce(1).collect()
         if len(rows) > driver_cutover:
             rows = None
     if rows is None:

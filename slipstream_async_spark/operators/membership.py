@@ -6,23 +6,31 @@ dedup probes, "have we seen this id" gates).
 
 Design (all public Spark API, reproducible in any engine with md5):
 
-- k hash positions per key: ``hash32(key || '#i') % (words * 62)`` —
-  the first 8 hex chars of md5 read base-16 (functions.text.hash32).
+- ``K`` hash positions per key: ``hash32(key || '#i') % (words * 62)``
+  — the first 8 hex chars of md5 read base-16 (functions.text.hash32).
 - The bitmap is ``words`` rows of (word, 64-bit mask) built by ONE
   partial-aggregated groupBy + ``bit_or`` — mergeable across
   partitions, batches, and days by construction (bit_or again).
 - Only 62 bits per word are used (bit 63 and 62 never set), so signed
   shifts and sign-extension behave identically in Spark, DuckDB, and
   any two's-complement engine.
-- Probing is a broadcast join on the word index (<= ``words`` rows)
-  plus pure bit arithmetic; a key is a member iff all k probed bits
-  are set. False negatives are impossible; the false-positive rate is
-  the standard (1 - e^{-kn/m})^k.
+- Probing takes the bitmap as a DRIVER-HELD word list and inlines it
+  as ONE ``array<bigint>`` constant (a single string literal the
+  optimizer folds), so the probe is a pure projection: element_at +
+  bit arithmetic at the scan, no join, no shuffle, no job. A key is a
+  member iff all K probed bits are set. False negatives are
+  impossible; the false-positive rate is the standard
+  (1 - e^{-Kn/m})^K.
+- A persistent gate keeps its bitmap in a StateTable, one row per
+  word, and every commit writes the FULL merged bitmap
+  (:func:`bitmap_rows`), so the newest file of each bucket holds that
+  bucket's whole state: :func:`read_bitmap` reads the word list with
+  pyarrow, no Spark job.
 
 At 100 TB: the build side aggregates to ``words`` rows no matter how
-many keys feed it; the probe side never shuffles (the bitmap
-broadcasts). Tune ``words`` to the expected key count (m ~ 10-15 bits
-per key for ~1% FPR at k=4); the plumbing is identical at any size.
+many keys feed it; the probe side never shuffles (the bitmap is a plan
+constant). Tune ``words`` to the expected key count (m ~ 10-15 bits
+per key for ~1% FPR at K=4); the plumbing is identical at any size.
 
 Reference parity: the reference's cache layer answers the same
 "might this key exist" question with RocksDB bloom/key_may_exist
@@ -32,196 +40,175 @@ relational operator instead of a storage-engine internal.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from slipstream_async_spark.functions.text import hash32
 
+if TYPE_CHECKING:
+    from slipstream_async_spark.streaming.state import StateTable
+
 BITS_PER_WORD = 62
+#: hash positions per key — fixed, so every bitmap ever written probes
+#: with the same scheme (~10-15 bits per key gives ~1% FPR at K=4)
+K = 4
 
 
-def _positions(key: Column, k: int, m_bits: int) -> Column:
-    """Array of k bit positions in [0, m_bits) for a key."""
+def _positions(key: Column, m_bits: int) -> Column:
+    """Array of K bit positions in [0, m_bits) for a key."""
     return F.array(
-        *[hash32(F.concat(key, F.lit(f"#{i}"))) % F.lit(m_bits) for i in range(k)]
+        *[hash32(F.concat(key, F.lit(f"#{i}"))) % F.lit(m_bits) for i in range(K)]
     )
 
 
-def bloom_build(
-    df: DataFrame, key: str, *, words: int = 16, k: int = 4
-) -> DataFrame:
+def _bitmap_literal(bitmap: list[int]) -> Column:
+    """The word list as ONE ``array<bigint>`` constant: a single string
+    literal split and cast, which constant folding turns into one array
+    literal — one py4j call at any ``words`` (a literal per word cost
+    seconds at thousands of words)."""
+    return F.split(F.lit(",".join(map(str, bitmap))), ",").cast("array<bigint>")
+
+
+def _key_bits(df: DataFrame, key: str, words: int) -> DataFrame:
+    """``(word, bm)`` with one single-bit row per probed position of
+    each key — unaggregated, for :func:`bloom_merge` to fold."""
+    return df.select(
+        F.explode(_positions(F.col(key), words * BITS_PER_WORD)).alias("idx")
+    ).select(
+        (F.col("idx") / BITS_PER_WORD).cast("int").alias("word"),
+        F.expr(f"shiftleft(1L, idx % {BITS_PER_WORD})").alias("bm"),
+    )
+
+
+def bloom_build(df: DataFrame, key: str, *, words: int = 16) -> DataFrame:
     """Fold ``df[key]`` into a Bloom bitmap: a DataFrame of
     ``(word: int, bm: bigint)`` with at most ``words`` rows.
 
-    One explode of k positions per key, one groupBy(word)/bit_or —
+    One explode of K positions per key, one groupBy(word)/bit_or —
     partial-aggregated and mergeable: union two builds and re-run
     ``groupBy("word").agg(bit_or("bm"))`` to merge them.
     """
-    m_bits = words * BITS_PER_WORD
-    return (
-        df.select(F.explode(_positions(F.col(key), k, m_bits)).alias("idx"))
-        .groupBy((F.col("idx") / BITS_PER_WORD).cast("int").alias("word"))
-        .agg(
-            F.bit_or(F.expr(f"shiftleft(1L, idx % {BITS_PER_WORD})")).alias("bm")
-        )
-    )
+    return bloom_merge(_key_bits(df, key, words))
 
 
 def bloom_merge(*blooms: DataFrame) -> DataFrame:
-    """OR-merge bitmaps built with identical (words, k) parameters."""
+    """OR-merge bitmaps built with the same ``words``."""
     merged = blooms[0]
     for b in blooms[1:]:
         merged = merged.unionByName(b)
     return merged.groupBy("word").agg(F.bit_or("bm").alias("bm"))
 
 
-def bloom_probe(
-    df: DataFrame, key: str, bloom: DataFrame, *, words: int = 16, k: int = 4
-) -> DataFrame:
-    """Append boolean ``bloom_hit`` to ``df``: True iff all k probed
-    bits for ``df[key]`` are set (definitely-absent keys get False —
-    no false negatives; some absent keys get True at the FPR).
+def collect_bitmap(bloom: DataFrame, words: int) -> list[int]:
+    """A built bitmap as the driver-held word list :func:`bloom_probe`
+    takes: one bounded collect (at most ``words`` rows by
+    construction); absent words read as 0."""
+    out = [0] * words
+    for r in bloom.collect():
+        out[r["word"]] = r["bm"]
+    return out
 
-    The bitmap is collected (bounded: at most ``words`` rows by
-    construction) and inlined as plan literals — the PQ-codebook
-    pattern — so the probe is a PURE PROJECTION evaluated at the scan:
-    no join, no shuffle, no row-multiplicity hazards; duplicate input
-    rows each get their own verdict. (An earlier join+re-aggregate
-    formulation collapsed duplicate rows and mis-counted their probe
-    hits — caught by the hypothesis property test.)
-    """
-    m_bits = words * BITS_PER_WORD
-    bm = {int(r["word"]): int(r["bm"]) for r in bloom.collect()}
-    words_arr = F.array(
-        *[F.lit(bm.get(w, 0)).cast("bigint") for w in range(words)]
-    )
+
+def bloom_probe(df: DataFrame, key: str, bitmap: list[int]) -> DataFrame:
+    """Append boolean ``bloom_hit`` to ``df``: True iff all K probed
+    bits for ``df[key]`` are set in ``bitmap`` (``bitmap[i]`` = word
+    i's 62-bit mask; ``words = len(bitmap)``). Definitely-absent keys
+    get False — no false negatives; some absent keys get True at the
+    FPR.
+
+    The bitmap is one plan constant (:func:`_bitmap_literal`), so the
+    probe is a PURE PROJECTION evaluated at the scan: no join, no
+    shuffle, no job, no row-multiplicity hazards — duplicate input rows
+    each get their own verdict."""
+    m_bits = len(bitmap) * BITS_PER_WORD
+    words_arr = _bitmap_literal(bitmap)
     # probe positions come from the SAME helper the build uses — one
     # source of truth for the hash/salt scheme, or build and probe
     # silently disagree and the no-false-negative contract breaks.
-    pos_arr = _positions(F.col(key), k, m_bits)
+    pos_arr = _positions(F.col(key), m_bits)
     hit = F.lit(True)
-    for i in range(k):
+    for i in range(K):
         idx = F.element_at(pos_arr, i + 1)
-        word = (idx / BITS_PER_WORD).cast("int")
-        bit = (idx % BITS_PER_WORD).cast("int")
-        elem = F.element_at(words_arr, word + 1)
-        hit = hit & (
-            F.call_function("shiftright", elem, bit).bitwiseAND(F.lit(1)) == 1
-        )
-    return df.withColumn("bloom_hit", hit)
-
-
-def bloom_hit_keys(
-    df: DataFrame,
-    key: str,
-    bloom: DataFrame,
-    *,
-    words: int = 16,
-    k: int = 4,
-    distinct: bool = True,
-) -> DataFrame:
-    """``df[key]`` values that MAY be members (all k probed bits set)
-    — the join-based twin of :func:`bloom_probe` for LARGE bitmaps.
-    :func:`bloom_probe` inlines the bitmap as ``words`` plan literals
-    (the right call at a few dozen words), but literal Columns cost
-    py4j build time linear in ``words`` — and at thousands of words
-    the inlined constants bloat whole-stage codegen, recompiled every
-    probe. Here the bitmap stays a DataFrame: k broadcast equi-joins
-    on the word index (<= ``words`` rows each; the repeated exchange
-    is reused), one per probe position — NARROW ops only, no shuffle,
-    no groupBy, so the probe fuses into the consuming stage and plan
-    size is O(1) in ``words``. Missing words read as 0 — no false
-    negatives, same hash scheme as the build.
-
-    Returns one column named ``key``. ``distinct=True`` (default)
-    collapses duplicate inputs (one shuffle); pass ``distinct=False``
-    when the input keys are already unique and the consumer wants the
-    fully-fused narrow plan."""
-    m_bits = words * BITS_PER_WORD
-    pos_arr = _positions(F.col(key), k, m_bits)
-    out = df.select(key)
-    hit = F.lit(True)
-    for i in range(k):
-        idx = F.element_at(pos_arr, i + 1)
-        side = bloom.select(
-            F.col("word").alias(f"_w{i}"), F.col("bm").alias(f"_bm{i}")
-        )
-        out = out.join(
-            F.broadcast(side),
-            (idx / BITS_PER_WORD).cast("int") == F.col(f"_w{i}"),
-            "left",
-        )
-        hit = hit & (
-            F.call_function(
-                "shiftright",
-                F.coalesce(F.col(f"_bm{i}"), F.lit(0).cast("bigint")),
-                (idx % BITS_PER_WORD).cast("int"),
-            ).bitwiseAND(F.lit(1))
-            == 1
-        )
-    out = out.filter(hit).select(key)
-    return out.distinct() if distinct else out
-
-
-def bloom_probe_array(
-    df: DataFrame, key: str, words_arr: list[int], *, k: int = 4
-) -> DataFrame:
-    """Append boolean ``bloom_hit`` to ``df`` probing a DRIVER-HELD
-    bitmap (``words_arr[i]`` = word i's 62-bit mask) — the probe form
-    for a persistent gate whose bitmap was read driver-side (e.g. from
-    a state table's newest file, no Spark job). The bitmap ships as
-    DATA in a one-row broadcast (``crossJoin(broadcast(...))`` — a
-    BroadcastNestedLoopJoin whose build side is ONE constant-sized
-    row, never corpus-shaped), so unlike :func:`bloom_probe`'s
-    literals there is no py4j build cost and no whole-stage-codegen
-    constant to recompile per probe, at any ``words``. The probe
-    itself is narrow (element_at + bit arithmetic) and fuses into the
-    consuming stage. Same hash scheme as the build — no false
-    negatives."""
-    words = len(words_arr)
-    m_bits = words * BITS_PER_WORD
-    bm_df = df.sparkSession.createDataFrame(
-        [(words_arr,)], "_bmarr array<bigint>"
-    )
-    pos_arr = _positions(F.col(key), k, m_bits)
-    hit = F.lit(True)
-    for i in range(k):
-        idx = F.element_at(pos_arr, i + 1)
-        elem = F.element_at(
-            F.col("_bmarr"), (idx / BITS_PER_WORD).cast("int") + 1
-        )
+        elem = F.element_at(words_arr, (idx / BITS_PER_WORD).cast("int") + 1)
         hit = hit & (
             F.call_function(
                 "shiftright", elem, (idx % BITS_PER_WORD).cast("int")
             ).bitwiseAND(F.lit(1))
             == 1
         )
-    return (
-        df.crossJoin(F.broadcast(bm_df))
-        .withColumn("bloom_hit", hit)
-        .drop("_bmarr")
+    return df.withColumn("bloom_hit", hit)
+
+
+def bitmap_rows(bitmap: list[int], df: DataFrame, key: str) -> DataFrame:
+    """Commit rows of a persistent gate: the standing ``bitmap``
+    OR-merged with ``df[key]``'s bits, as ``(key=word, value=mask,
+    attrs={"words": len(bitmap)})`` StateTable rows. The output is the
+    FULL merged bitmap (bit_or — idempotent under replay), which is what
+    lets :func:`read_bitmap` read only each bucket's newest file; the
+    standing side is built from the same word list the gate probed, so
+    no commit re-reads the table, and one groupBy folds it with the
+    batch's bits. ``bitmap_rows([0] * words, ...)`` builds a new
+    gate."""
+    words = len(bitmap)
+    standing = (
+        df.sparkSession.range(1)
+        .select(F.posexplode(_bitmap_literal(bitmap)).alias("word", "bm"))
+        .filter(F.col("bm") != 0)
+    )
+    merged = bloom_merge(standing, _key_bits(df, key, words))
+    return merged.select(
+        F.col("word").cast("string").alias("key"),
+        F.col("bm").cast("string").alias("value"),
+        F.create_map(F.lit("words"), F.lit(str(words))).alias("attrs"),
     )
 
 
-def bloom_fpr(n_keys: int, *, words: int = 16, k: int = 4) -> float:
+def read_bitmap(table: StateTable, words: int, *, rebuild: str) -> list[int]:
+    """A persistent gate's standing bitmap as a driver-held word list —
+    one pyarrow read of each bucket's newest file
+    (:meth:`StateTable.newest_rows`; every gate commit writes the full
+    merged bitmap, see :func:`bitmap_rows`), NO Spark job. All zeros
+    before the first commit.
+
+    Fails closed: a bitmap built at another ``words`` hashes keys to
+    other positions, so most standing keys would probe as definitely
+    new. A row whose recorded size differs from ``words``, or that
+    records none, raises ``ValueError`` naming both sizes and
+    ``rebuild``, the way to rebuild the gate at the new size."""
+    out = [0] * words
+    for row in table.newest_rows():
+        got = dict(row["attrs"] or ()).get("words")
+        if got != str(words):
+            raise ValueError(
+                f"bloom gate at {table.path} was built with "
+                f"words={got or 'unrecorded'}, but is probed with "
+                f"words={words}; probing it would read most standing "
+                "keys as new. Open it with the size it was built with, "
+                f"or rebuild it: {rebuild}"
+            )
+        out[int(row["key"])] = int(row["value"])
+    return out
+
+
+def bloom_fpr(n_keys: int, *, words: int = 16) -> float:
     """Expected false-positive rate of a bloom built from ``n_keys``
-    distinct keys at this (words, k): the standard
-    ``(1 - e^{-k*n/m})^k``. The saturation dial for sizing ``words``
+    distinct keys at this ``words``: the standard
+    ``(1 - e^{-K*n/m})^K``. The saturation dial for sizing ``words``
     — a gate whose FPR approaches 1 silently degrades to the ungated
     join it exists to avoid, so sinks warn when this crosses ~0.5
-    (~0.75 * words keys at k=4). Size m ~ 10-15 bits/key for ~1% FPR:
+    (~0.75 * words keys). Size m ~ 10-15 bits/key for ~1% FPR:
     ``words >= n_keys / 5``."""
     import math
 
     m_bits = words * BITS_PER_WORD
     if n_keys <= 0:
         return 0.0
-    return (1.0 - math.exp(-k * n_keys / m_bits)) ** k
+    return (1.0 - math.exp(-K * n_keys / m_bits)) ** K
 
 
-def warn_bloom_saturation(
-    n_keys: int, *, words: int, k: int, context: str
-) -> float:
+def warn_bloom_saturation(n_keys: int, *, words: int, context: str) -> float:
     """Loud saturation diagnostic: warn when the estimated FPR for
     ``n_keys`` standing keys exceeds 0.5 (the gate is no longer
     filtering — most absent keys probe as hits). Returns the estimate
@@ -229,14 +216,15 @@ def warn_bloom_saturation(
     driver-side footer count (no Spark job)."""
     import warnings
 
-    fpr = bloom_fpr(n_keys, words=words, k=k)
+    fpr = bloom_fpr(n_keys, words=words)
     if fpr > 0.5:
         warnings.warn(
             f"{context}: bloom gate is saturated — ~{n_keys} standing "
             f"keys in {words * BITS_PER_WORD} bits gives an estimated "
             f"FPR of {fpr:.2f}; most probes now pass the gate and pay "
-            "the exact check it exists to avoid. Rebuild the gate with "
-            f"words >= {max(words * 2, (n_keys + 4) // 5)} "
+            "the exact check it exists to avoid. Rebuild the gate "
+            "(a gate's size is fixed once written) with words >= "
+            f"{max(words * 2, (n_keys + 4) // 5)} "
             "(~10-15 bits/key for ~1% FPR).",
             RuntimeWarning,
             stacklevel=3,

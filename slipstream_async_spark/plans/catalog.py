@@ -5757,7 +5757,7 @@ GROUP BY h.source
 def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter decontamination pre-filter, validated in-query
     against the exact semi-join. The benchmark split's fingerprints are
-    folded into a 992-bit Bloom bitmap (k=4 md5-derived hashes, 16
+    folded into a 992-bit Bloom bitmap (K=4 md5-derived hashes, 16
     words x 62 bits — bit 63 never used, so signed shifts behave
     identically in every engine); the corpus probes the bitmap and the
     result reports, per source, Bloom hits vs exact-semi-join hits and
@@ -5767,9 +5767,10 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     at least broadcast) the full benchmark fingerprint SET; the Bloom
     bitmap is a fixed ~kilobyte regardless of benchmark size — the
     standard first-pass filter whose survivors (a tiny fraction) go to
-    the exact check. The bitmap here is a <=16-row broadcast join on
-    the word index, built with one groupBy(word)/bit_or partial agg:
-    mergeable across partitions, no collect. False negatives are
+    the exact check. The bitmap is built with one groupBy(word)/bit_or
+    partial agg (mergeable across partitions), fetched by one bounded
+    collect (<= 16 rows) and probed as one array constant: a pure
+    projection at the corpus scan, no join. False negatives are
     impossible (the query's n_bloom_hits >= n_true_hits invariant
     checks this), so the pre-filter is safe to apply before the exact
     pass. Build/probe are operators.membership.bloom_build/bloom_probe
@@ -5777,6 +5778,7 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     from slipstream_async_spark.operators.membership import (
         bloom_build,
         bloom_probe,
+        collect_bitmap,
     )
     from slipstream_async_spark.operators.sampling import hash_bucket
 
@@ -5793,8 +5795,8 @@ def contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     bench = fp.filter(F.col("_b") < 1000).select("fp").distinct()
     corpus = fp.filter(F.col("_b") >= 1000).select("doc_id", "source", "fp")
-    bloom = bloom_build(bench, "fp", words=16, k=4)
-    hit = bloom_probe(corpus, "fp", bloom, words=16, k=4).select(
+    bitmap = collect_bitmap(bloom_build(bench, "fp", words=16), 16)
+    hit = bloom_probe(corpus, "fp", bitmap).select(
         "doc_id", "source", "bloom_hit"
     )
     exact = corpus.join(bench, "fp", "left_semi").select("doc_id")

@@ -41,9 +41,11 @@ from pyspark.sql import functions as F
 from slipstream_async_spark.functions.text import text_fingerprint
 from slipstream_async_spark.operators.dedup import dedup_incremental
 from slipstream_async_spark.operators.membership import (
-    bloom_build,
-    bloom_merge,
+    bitmap_rows,
+    bloom_fpr,
     bloom_probe,
+    read_bitmap,
+    warn_bloom_saturation,
 )
 from slipstream_async_spark.streaming.state import StateTable, _EpochFence
 
@@ -158,7 +160,6 @@ def indexed_incremental_dedup_sink(
     query: str = "incremental_dedup",
     refresh_factor: float | None = None,
     stats: list | None = None,
-    redelivery_check: bool = True,
 ) -> Callable[[DataFrame, int], None]:
     """The O(|batch|)-per-trigger form of :func:`incremental_dedup_sink`:
     the corpus-side prefix index is PERSISTED (a
@@ -182,26 +183,26 @@ def indexed_incremental_dedup_sink(
     epoch probes exactly the pre-epoch corpus and no pair is silently
     lost.
 
-    **Cross-epoch redelivery** (``redelivery_check``, default on): the
-    postings/sets tables are append-only with unique keys, so a doc_id
-    re-delivered in a LATER epoch (e.g. updated text) must not append
-    again — the old rows would never be superseded and probes would
-    verify against stale hash arrays forever. The guard is
-    FIRST-WRITE-WINS: redelivered ids are dropped from the batch (the
-    standing version keeps producing pairs; the new text is ignored),
-    counted in stats as ``n_redelivered``. Cost shape at scale: a
-    persistent per-id bloom (``index.seen``) gates the check — bloom
-    misses (the unique-id common case) cost one small job over the
-    batch; only bloom hits pay a bucket-pruned exact read of the
-    corpus, filtered to rows committed in STRICTLY EARLIER epochs (the
-    corpus rows carry their commit epoch in attrs), which keeps the
-    drop decision deterministic under partial replay — this epoch's
-    own landed corpus commit never reads as a redelivery. The sink
+    **Cross-epoch redelivery:** the postings/sets tables are
+    append-only with unique keys, so a doc_id re-delivered in a LATER
+    epoch (e.g. updated text) must not append again — the old rows
+    would never be superseded and probes would verify against stale
+    hash arrays forever. The guard is FIRST-WRITE-WINS: redelivered ids
+    are dropped from the batch (the standing version keeps producing
+    pairs; the new text is ignored), counted in stats as
+    ``n_redelivered``. Cost shape at scale: a persistent per-id bloom
+    (``index.seen``, read driver-side with no job) gates the check —
+    bloom misses (the unique-id common case) cost no extra job, as the
+    probe rides the postings-bucket collect; only bloom hits pay a
+    bucket-pruned exact read of the corpus, filtered to rows committed
+    in STRICTLY EARLIER epochs (the corpus rows carry their commit
+    epoch in attrs), which keeps the drop decision deterministic under
+    partial replay — this epoch's own landed corpus commit never reads
+    as a redelivery. The sink
     warns loudly when the bloom saturates (``seen_words`` too small
     for the corpus — see membership.warn_bloom_saturation); a refresh
-    rebuilds the bloom at the instance's current ``seen_words``.
-    Disable only for streams whose doc ids are guaranteed unique over
-    the stream's lifetime (saves the gate job per trigger).
+    rebuilds the bloom at the instance's current ``seen_words`` (a
+    seen table written at another size raises until then).
 
     ``stats``, if given, collects per-epoch accounting dicts (n_batch /
     n_prefix_rows / buckets_read / n_candidates / n_corpus_candidates /
@@ -209,18 +210,16 @@ def indexed_incremental_dedup_sink(
     that say whether the frozen order is still tight for this corpus
     (the refresh dial). Most come free from commit footers; skipped
     entirely on the production hot path when ``stats`` is None."""
-    tables = {
-        "pairs": pairs,
-        "corpus": corpus,
-        "postings": index.postings,
-        "sets": index.sets,
-    }
-    if redelivery_check:
-        # the seen bitmap only exists to serve the guard — a sink run
-        # with the check disabled neither reads nor maintains it
-        # (re-enabling later requires index.refresh() to rebuild it)
-        tables["seen"] = index.seen
-    fence = _EpochFence(query, tables)
+    fence = _EpochFence(
+        query,
+        {
+            "pairs": pairs,
+            "corpus": corpus,
+            "postings": index.postings,
+            "sets": index.sets,
+            "seen": index.seen,
+        },
+    )
     # standing-key estimate for the saturation warning: one parquet-
     # footer walk at start, then incremented from commit accounting —
     # footer_rows every epoch would re-open O(buckets x chain) files
@@ -325,57 +324,48 @@ def indexed_incremental_dedup_sink(
             bp = index.prefix_rows(batch_sets, id_col).persist()
             # ONE bounded collect serves both the probe's postings
             # buckets AND the redelivery guard's bloom-hit corpus
-            # buckets (the join-based bitmap probe unioned into the
-            # same distinct — the bitmap moves as broadcast data, not
-            # plan literals) — on the unique-id common path the guard
-            # costs zero extra jobs. Result size <= postings.n_buckets
-            # + corpus.n_buckets.
-            bm_words = (
-                index.seen_bitmap_words() if redelivery_check else None
+            # buckets (the bitmap probe unioned into the same
+            # distinct) — on the unique-id common path the guard costs
+            # zero extra jobs. Result size <= postings.n_buckets +
+            # corpus.n_buckets. The bitmap is read driver-side (no
+            # job) and the probe is a projection fused into the
+            # collect's scan stage; raw ids are already unique
+            # (dropDuplicates above), so the per-row verdict IS the
+            # hit-key set.
+            seen = read_bitmap(
+                index.seen,
+                index.seen_words,
+                rebuild="index.refresh(<the corpus documents>)",
+            )
+            hits = (
+                bloom_probe(raw.select(id_col), id_col, seen)
+                .filter(F.col("bloom_hit"))
+                .select(id_col)
             )
             pb = bp.select(
                 F.lit("p").alias("_t"),
                 index.postings.bucket_expr_for("s").alias("_b"),
+            ).unionByName(
+                hits.select(
+                    F.lit("c").alias("_t"),
+                    corpus.bucket_expr_for(id_col).alias("_b"),
+                )
             )
-            if bm_words is not None:
-                from slipstream_async_spark.operators.membership import (
-                    bloom_probe_array,
-                    warn_bloom_saturation,
-                )
-
-                # the bitmap was read driver-side (no job) and ships
-                # as one-row broadcast data; the probe is narrow and
-                # fuses into the combined collect's scan stage. raw
-                # ids are already unique (dropDuplicates above), so
-                # the per-row verdict IS the hit-key set.
-                hits = (
-                    bloom_probe_array(raw.select(id_col), id_col, bm_words)
-                    .filter(F.col("bloom_hit"))
-                    .select(id_col)
-                )
-                pb = pb.unionByName(
-                    hits.select(
-                        F.lit("c").alias("_t"),
-                        corpus.bucket_expr_for(id_col).alias("_b"),
-                    )
-                )
             _mark("t_prep")
             tagged = pb.distinct().collect()
             _mark("t_bucket_collect")
             buckets = [r["_b"] for r in tagged if r["_t"] == "p"]
             hit_buckets = [r["_b"] for r in tagged if r["_t"] == "c"]
-            redelivered = None
-            if bm_words is not None:
-                if "keys" not in sat:
-                    sat["keys"] = index.sets.footer_rows()
-                warn_bloom_saturation(
-                    sat["keys"],
-                    words=index.seen_words,
-                    k=4,
-                    context=f"indexed_incremental_dedup_sink({query!r})",
-                )
-                if hit_buckets:
-                    redelivered = find_redelivered(hits, hit_buckets)
+            if "keys" not in sat:
+                sat["keys"] = index.sets.footer_rows()
+            warn_bloom_saturation(
+                sat["keys"],
+                words=index.seen_words,
+                context=f"indexed_incremental_dedup_sink({query!r})",
+            )
+            redelivered = (
+                find_redelivered(hits, hit_buckets) if hit_buckets else None
+            )
             if redelivered is not None:
                 # rare path: rebuild the batch-side frames without the
                 # redelivered ids (first-write-wins — see docstring)
@@ -417,8 +407,8 @@ def indexed_incremental_dedup_sink(
                 "postings": index.posting_rows(bp, id_col),
                 "sets": index._hset_rows(batch_sets, id_col),
             }
-            if "seen" in todo:  # seen_rows reads the standing bitmap
-                group["seen"] = index.seen_rows(batch, id_col)
+            if "seen" in todo:
+                group["seen"] = bitmap_rows(seen, batch, id_col)
             _mark("t_guard")
             with fence.overlap(
                 e,
@@ -443,31 +433,19 @@ def indexed_incremental_dedup_sink(
                 _mark("t_pairs_commit")
             _mark("t_commit_wait")
             index.finish_probe()
-            if "keys" in sat and "sets" in todo:
+            if "sets" in todo:
                 sat["keys"] += index.sets.last_commit_rows
             if stats is not None:
                 # footer-based accounting (no extra jobs beyond the
                 # candidate counts inside probe, over cached frames);
                 # None where a partial replay skipped that table's
                 # commit
-                from slipstream_async_spark.operators.membership import (
-                    bloom_fpr,
-                )
-
                 stats.append(
                     {
                         "epoch": epoch_id,
                         "n_redelivered": n_redelivered,
-                        "seen_fpr": (
-                            round(
-                                bloom_fpr(
-                                    sat.get("keys", 0),
-                                    words=index.seen_words,
-                                ),
-                                6,
-                            )
-                            if redelivery_check
-                            else None
+                        "seen_fpr": round(
+                            bloom_fpr(sat["keys"], words=index.seen_words), 6
                         ),
                         "n_batch": (
                             corpus.last_commit_rows
@@ -504,7 +482,6 @@ def bloom_gated_exact_dedup_sink(
     text_col: str = "text",
     id_col: str = "doc_id",
     words: int = 16,
-    k: int = 4,
     stats: list | None = None,
     query: str = "bloom_dedup",
 ) -> Callable[[DataFrame, int], None]:
@@ -553,14 +530,16 @@ def bloom_gated_exact_dedup_sink(
     measured gate selectivity, the number that says whether the bloom
     is sized right (words) for the standing key count.
 
-    **Sizing ``words``:** the bitmap holds ``words * 62`` bits; at
-    k=4, ~10-15 bits per standing fingerprint keeps FPR near 1%
-    (``words >= n_keys / 5``). The default words=16 (992 bits) fits
-    ~100 standing keys and SATURATES near ~1k — the sink estimates the
-    FPR each epoch from the fingerprint table's footer row count (no
-    Spark job) and warns loudly past 0.5 (the gate has silently
-    degraded to the ungated join it exists to avoid; rebuild with a
-    bigger ``words``)."""
+    **Sizing ``words``:** the bitmap holds ``words * 62`` bits; ~10-15
+    bits per standing fingerprint keeps FPR near 1% (``words >= n_keys
+    / 5``). The default words=16 (992 bits) fits ~100 standing keys and
+    SATURATES near ~1k — the sink estimates the FPR each epoch from the
+    fingerprint table's footer row count (no Spark job) and warns
+    loudly past 0.5 (the gate has silently degraded to the ungated join
+    it exists to avoid). ``words`` is fixed once the bloom table is
+    written: each epoch reads the bitmap driver-side (no Spark job) and
+    raises ``ValueError`` if it was built at another size; rebuild it
+    from the fingerprint table to resize."""
 
     fence = _EpochFence(
         query, {"dupes": dupes, "fps": fingerprints, "bloom": bloom_state}
@@ -596,23 +575,20 @@ def bloom_gated_exact_dedup_sink(
             # saturation watchdog: estimated FPR from the standing
             # fingerprint count (parquet-footer read, no Spark job) —
             # warns past 0.5, where the gate passes most absent keys
-            from slipstream_async_spark.operators.membership import (
-                warn_bloom_saturation,
-            )
-
             gate_fpr = warn_bloom_saturation(
                 fingerprints.footer_rows(),
                 words=words,
-                k=k,
                 context=f"bloom_gated_exact_dedup_sink({query!r})",
             )
-            standing_bloom = bloom_state.snapshot().select(
-                F.col("key").cast("int").alias("word"),
-                F.col("value").cast("bigint").alias("bm"),
+            standing = read_bitmap(
+                bloom_state,
+                words,
+                rebuild=(
+                    f"bloom_state.replace_all(bitmap_rows([0] * {words}, "
+                    "fingerprints.snapshot(), 'key'))"
+                ),
             )
-            probed = bloom_probe(
-                batch, "fp", standing_bloom, words=words, k=k
-            ).cache()
+            probed = bloom_probe(batch, "fp", standing).cache()
             maybe = probed.filter(F.col("bloom_hit")).select("doc", "fp")
             definite_new = probed.filter(~F.col("bloom_hit")).select(
                 "doc", "fp"
@@ -649,10 +625,6 @@ def bloom_gated_exact_dedup_sink(
                 ).first()
                 n_batch, n_maybe = int(gate["nb"]), int(gate["nm"] or 0)
                 n_keyed = keyed.count()
-            updated = bloom_merge(
-                standing_bloom,
-                bloom_build(batch.select("fp"), "fp", words=words, k=k),
-            )
             # the three state writes hit three INDEPENDENT tables:
             # overlap their (driver-coordinated, two-job) commits so the
             # epoch pays max not sum of their scheduling latencies; each
@@ -668,10 +640,7 @@ def bloom_gated_exact_dedup_sink(
                     F.col("fp").alias("key"),
                     F.col("canonical").alias("value"),
                 )},
-                {"bloom": updated.select(
-                    F.col("word").cast("string").alias("key"),
-                    F.col("bm").cast("string").alias("value"),
-                )},
+                {"bloom": bitmap_rows(standing, batch, "fp")},
             )
             if stats is not None:
                 stats.append(

@@ -57,7 +57,8 @@ from slipstream_async_spark.operators.dedup import (
     frozen_order_prefix_rows,
     ppjoin_probe_candidates,
 )
-from slipstream_async_spark.streaming.state import _FILE_SCHEMA, StateTable
+from slipstream_async_spark.operators.membership import bitmap_rows
+from slipstream_async_spark.streaming.state import StateTable
 
 
 class NearDupPrefixIndex:
@@ -124,11 +125,12 @@ class NearDupPrefixIndex:
         )
         self.order = StateTable(spark, os.path.join(path, "order"), n_buckets=4)
         # persistent "have we indexed this doc id" bloom (one row per
-        # bitmap word, <= seen_words rows): the O(|batch|) gate in front
-        # of the exact cross-epoch-redelivery check — a redelivered id
-        # appended again would violate the postings/sets tables'
-        # append-only unique-key contract and leave stale verification
-        # rows probing forever (the r11 ADVICE-medium failure mode)
+        # bitmap word, <= seen_words rows, written and read through
+        # membership.bitmap_rows/read_bitmap): the O(|batch|) gate in
+        # front of the exact cross-epoch-redelivery check — a
+        # redelivered id appended again would violate the postings/sets
+        # tables' append-only unique-key contract and leave stale
+        # verification rows probing forever
         self.seen = StateTable(spark, os.path.join(path, "seen"), n_buckets=1)
         self._hot: DataFrame | None = None
         self._rows_at_freeze: int | None = None
@@ -384,88 +386,6 @@ class NearDupPrefixIndex:
             ),
         )
 
-    def seen_bitmap_words(self) -> list[int] | None:
-        """The standing seen-ids bitmap as a driver-side word array —
-        read with pyarrow from the NEWEST chain file only (every seen
-        commit writes the FULL merged bitmap, so the latest delta IS
-        the whole gate): NO Spark job, ~ms at any corpus size (the
-        RocksDB bloom-block analog — the filter is metadata you read
-        once per probe, not a table you join). None before the first
-        commit. Probe with :func:`~slipstream_async_spark.operators.
-        membership.bloom_probe_array` — the bitmap ships as one-row
-        broadcast DATA, never as plan literals (thousands of inlined
-        literals cost py4j build time and recompile whole-stage
-        codegen every epoch; measured ~1 s/trigger at 4096 words)."""
-        v = self.seen.version
-        chain = self.seen._manifest(v).get(0) if v >= 0 else None
-        if not chain:
-            return None
-        import pyarrow.parquet as pq
-
-        newest = self.seen._chain_paths(chain, 0)[-1]
-        arr = [0] * self.seen_words
-        for f in os.listdir(newest):
-            if f.endswith(".parquet"):
-                t = pq.read_table(
-                    os.path.join(newest, f), columns=["key", "value"]
-                )
-                for row in t.to_pylist():
-                    arr[int(row["key"])] = int(row["value"])
-        return arr
-
-    def seen_bloom(self) -> DataFrame:
-        """The standing seen-ids bitmap as ``(word int, bm bigint)``
-        rows (<= seen_words, read from the NEWEST version's file only
-        — every seen commit writes the FULL merged bitmap, so the
-        latest delta IS the whole gate and the read needs no chain
-        merge; empty frame before the first commit). Probe with
-        :func:`~slipstream_async_spark.operators.membership.
-        bloom_hit_keys`: the bitmap moves as broadcast DATA, never as
-        plan literals — at thousands of words, inlined literals cost
-        py4j build time AND bloat whole-stage codegen (a 64 KiB
-        constant recompiled per epoch measured ~1 s/trigger)."""
-        v = self.seen.version
-        chain = self.seen._manifest(v).get(0) if v >= 0 else None
-        if not chain:
-            return self.spark.createDataFrame(
-                [], "word int, bm bigint"
-            )
-        newest = self.seen._chain_paths(chain, 0)[-1]
-        return self.spark.read.schema(_FILE_SCHEMA).parquet(newest).select(
-            F.col("key").cast("int").alias("word"),
-            F.col("value").cast("bigint").alias("bm"),
-        )
-
-    def seen_rows(self, ids: DataFrame, id_col: str) -> DataFrame:
-        """``(key=word, value=bitmap-word)`` rows folding a batch's ids
-        into the standing seen bitmap (bit_or — idempotent under
-        replay), shaped for the sink's :func:`upsert_group` commit.
-        ONE partial-aggregated groupBy over standing-rows ∪ batch-bit
-        rows; the output is the FULL merged bitmap every epoch, which
-        is what lets :meth:`seen_bloom` read only the newest file."""
-        from slipstream_async_spark.operators.membership import (
-            BITS_PER_WORD,
-            _positions,
-        )
-
-        m_bits = self.seen_words * BITS_PER_WORD
-        batch_bits = ids.select(
-            F.explode(_positions(F.col(id_col), 4, m_bits)).alias("idx")
-        ).select(
-            (F.col("idx") / BITS_PER_WORD).cast("int").alias("word"),
-            F.expr(f"shiftleft(1L, idx % {BITS_PER_WORD})").alias("bm"),
-        )
-        merged = (
-            self.seen_bloom()
-            .unionByName(batch_bits)
-            .groupBy("word")
-            .agg(F.bit_or("bm").alias("bm"))
-        )
-        return merged.select(
-            F.col("word").cast("string").alias("key"),
-            F.col("bm").cast("string").alias("value"),
-        )
-
     # -- maintenance ------------------------------------------------------
 
     def freeze_order_from(self, sets: DataFrame) -> None:
@@ -524,17 +444,10 @@ class NearDupPrefixIndex:
         # (idempotent when they already match)
         self.sets.replace_all(self._hset_rows(sets, id_col))
         # rebuild the seen bitmap exactly from the corpus ids (also the
-        # re-size path: a refresh after raising seen_words de-saturates
+        # re-size path: a refresh after changing seen_words de-saturates
         # the gate) — from zero, not OR-ed over the old bitmap
-        from slipstream_async_spark.operators.membership import bloom_build
-
         self.seen.replace_all(
-            bloom_build(
-                sets.select(id_col), id_col, words=self.seen_words
-            ).select(
-                F.col("word").cast("string").alias("key"),
-                F.col("bm").cast("string").alias("value"),
-            )
+            bitmap_rows([0] * self.seen_words, sets, id_col)
         )
         # record the corpus size this freeze saw (footer read, no job)
         # so maybe_refresh can fire at a doubling cadence

@@ -424,6 +424,26 @@ class StateTable:
             for p in self._chain_paths(ch, b)
         )
 
+    def newest_rows(self) -> list[dict[str, Any]]:
+        """``key``/``value``/``attrs`` rows of each bucket's NEWEST chain
+        file, read with pyarrow — driver-side, NO Spark job. They are the
+        live rows of a table whose every commit rewrites each bucket it
+        touches in full (a persistent Bloom gate: see
+        ``membership.bitmap_rows``); of any other table they are only
+        the last delta."""
+        import pyarrow.parquet as pq
+
+        return [
+            row
+            for b, ch in self._manifest(self.version).items()
+            for d in self._chain_paths(ch, b)[-1:]
+            for f in sorted(os.listdir(d))
+            if f.endswith(".parquet")
+            for row in pq.read_table(
+                os.path.join(d, f), columns=["key", "value", "attrs"]
+            ).to_pylist()
+        ]
+
     def snapshot(self, version: int | None = None) -> DataFrame:
         """Current state (or any retained version — C8 time travel)."""
         v = self.version if version is None else version

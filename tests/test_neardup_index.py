@@ -17,6 +17,7 @@ from slipstream_async_spark.operators.dedup import (
 from slipstream_async_spark.streaming.dedup_flow import (
     indexed_incremental_dedup_sink,
 )
+from slipstream_async_spark.operators.membership import bitmap_rows, read_bitmap
 from slipstream_async_spark.streaming.neardup_index import NearDupPrefixIndex
 from slipstream_async_spark.streaming.state import StateTable
 
@@ -317,8 +318,9 @@ def test_redelivery_guard_safe_under_partial_replay(spark, tmp_path):
         ),
         fence=("incremental_dedup", 1),
     )
+    seen = read_bitmap(index.seen, index.seen_words, rebuild="-")
     index.seen.upsert(
-        index.seen_rows(batch1, "doc_id"), fence=("incremental_dedup", 1)
+        bitmap_rows(seen, batch1, "doc_id"), fence=("incremental_dedup", 1)
     )
     vx = index.postings.version
     stats: list = []
@@ -343,26 +345,39 @@ def test_redelivery_guard_safe_under_partial_replay(spark, tmp_path):
     index.destroy()
 
 
-def test_seen_bloom_builds_without_a_job(spark, tmp_path, count_jobs):
-    """``seen_bloom`` reads the newest seen file with the StateTable file
-    schema, so building it after a seen commit runs no inference job
-    (one per trigger through ``seen_rows`` before)."""
-    index = NearDupPrefixIndex(
-        spark, str(tmp_path / "idx"), k=3, threshold=0.5, n_buckets=4,
-        seen_words=64,
+def test_seen_gate_fails_closed_on_size_change(spark, tmp_path):
+    """A seen gate written at one ``seen_words`` and probed at another
+    would read most indexed ids as never seen (redelivered ids append
+    again) or index past the bitmap: the sink raises, naming both sizes
+    and ``refresh()``, until a refresh rebuilds the gate at the new
+    size."""
+    import pytest
+
+    corpus = StateTable(spark, str(tmp_path / "corpus"), n_buckets=4)
+    pairs = StateTable(spark, str(tmp_path / "pairs"), n_buckets=4)
+    path = str(tmp_path / "idx")
+    index = NearDupPrefixIndex(spark, path, n_buckets=4, seen_words=64)
+    indexed_incremental_dedup_sink(corpus, pairs, index)(
+        _mk(spark, [("a", "p q r s t"), ("b", "x y z w v")]), 0
     )
-    batch = _mk(spark, [("a", "p q r"), ("b", "x y z")])
-    index.seen.upsert(index.seen_rows(batch, "doc_id"), fence=("seen", 0))
-    bloom, jobs = count_jobs(index.seen_bloom)
-    assert jobs == 0
-    assert bloom.schema.simpleString() == "struct<word:int,bm:bigint>"
-    got = {(r["word"], r["bm"]) for r in bloom.collect()}
-    want = {
-        (int(r["key"]), int(r["value"]))
-        for r in index.seen.snapshot().collect()
-    }
-    assert got == want and got
-    index.destroy()
+    grown = NearDupPrefixIndex(spark, path, n_buckets=4, seen_words=128)
+    sink = indexed_incremental_dedup_sink(corpus, pairs, grown)
+    batch = _mk(spark, [("a", "other text"), ("c", "p q r s u")])
+    with pytest.raises(ValueError, match=r"words=64.*words=128.*refresh"):
+        sink(batch, 1)
+    grown.refresh(
+        corpus.snapshot().select(
+            F.col("key").alias("doc_id"), F.col("value").alias("text")
+        )
+    )
+    stats: list = []
+    indexed_incremental_dedup_sink(corpus, pairs, grown, stats=stats)(batch, 1)
+    assert stats[0]["n_redelivered"] == 1
+    assert corpus.get("a") == "p q r s t"
+    corpus.destroy()
+    pairs.destroy()
+    grown.destroy()
+
 
 def test_refresh_and_stale_hot_order_stay_exact(spark, tmp_path):
     """refresh() re-freezes the hot-shingle order and rebuilds the

@@ -211,9 +211,9 @@ def test_dsir_gram_explosion_materialized_once(q):
 
 def test_bloom_bitmap_is_broadcast(q):
     """contamination_bloom: the Bloom probe must be a pure projection —
-    the bounded bitmap inlined as plan literals (shiftright bit checks
-    at the scan), never a join that shuffles the corpus on the probe
-    index. The one broadcast join left is the exact-validation
+    the bounded bitmap inlined as one array constant (shiftright bit
+    checks at the scan), never a join that shuffles the corpus on the
+    probe index. The one broadcast join left is the exact-validation
     semi-join; no sort-merge join anywhere in the query."""
     plan = _plan(q["contamination_bloom"], "simple")
     assert "shiftright" in plan, plan

@@ -391,6 +391,7 @@ def test_bloom_never_false_negative_and_merge_is_union(spark, members, probes):
         bloom_build,
         bloom_merge,
         bloom_probe,
+        collect_bitmap,
     )
 
     mdf = spark.createDataFrame(
@@ -399,10 +400,11 @@ def test_bloom_never_false_negative_and_merge_is_union(spark, members, probes):
     if not members:
         mdf = mdf.limit(0)
     bloom = bloom_build(mdf, "k")
+    bitmap = collect_bitmap(bloom, 16)
 
     # (1) no false negatives
     if members:
-        hits = bloom_probe(mdf, "k", bloom)
+        hits = bloom_probe(mdf, "k", bitmap)
         assert hits.filter(~F.col("bloom_hit")).count() == 0
 
     # (2) merge == union build
@@ -424,7 +426,7 @@ def test_bloom_never_false_negative_and_merge_is_union(spark, members, probes):
     # never be a true member (subset direction of the FPR contract)
     if probes:
         pdf = spark.createDataFrame([(k,) for k in probes], "k string")
-        out = bloom_probe(pdf, "k", bloom).collect()
+        out = bloom_probe(pdf, "k", bitmap).collect()
         member_set = set(members)
         for r in out:
             if not r["bloom_hit"]:

@@ -765,6 +765,25 @@ def test_cc_two_phase_logarithmic_on_chains(spark):
     assert stats["rounds"] <= 20, stats
 
 
+def test_duplicate_clusters_cutover_jobs_do_not_grow_with_partitions(
+    spark, count_jobs
+):
+    """The driver-lane cutover fetch is one bounded action whose job
+    count does not depend on the edge list's partition count (Spark's
+    incremental take ran one more job per scan round)."""
+    from slipstream_async_spark.operators.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame(
+        [(f"d{i:02d}", f"d{i + 1:02d}") for i in range(50)],
+        "id_a string, id_b string",
+    )
+    jobs = [
+        count_jobs(lambda: duplicate_clusters(pairs.repartition(n)))[1]
+        for n in (2, 32)
+    ]
+    assert jobs[0] == jobs[1], jobs
+
+
 def test_duplicate_clusters_fails_closed_without_fixpoint(spark):
     """Labels short of the large-star/small-star fixpoint are wrong (the
     chain's tail still points at non-minimal ids), so running out of

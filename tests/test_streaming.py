@@ -1149,6 +1149,44 @@ def test_bloom_gate_saturation_warns(spark, stream_dir):
     dupes.destroy()
 
 
+def test_bloom_gate_fails_closed_on_size_change(spark, stream_dir):
+    """A bloom table written at one ``words`` and probed at another
+    would read most standing fingerprints as definitely new, skip their
+    exact check and overwrite their canonical ids. The sink raises
+    instead, naming both sizes, and commits nothing; once the table is
+    rebuilt from the fingerprint table at the new size, a duplicate of
+    a standing document is found again."""
+    import pytest as _pytest
+
+    from pyspark.sql import functions as F
+
+    from slipstream_async_spark.operators.membership import bitmap_rows
+    from slipstream_async_spark.streaming.dedup_flow import (
+        bloom_gated_exact_dedup_sink,
+    )
+    from slipstream_async_spark.streaming.state import StateTable
+
+    fps, bloom, dupes = (
+        StateTable(spark, os.path.join(stream_dir, f"resize_{n}"))
+        for n in ("fps", "bloom", "dupes")
+    )
+    docs = spark.range(40).select(
+        F.col("id").cast("string").alias("doc_id"),
+        F.concat(F.lit("text "), F.col("id")).alias("text"),
+    )
+    bloom_gated_exact_dedup_sink(fps, bloom, dupes, words=16)(docs, 0)
+    again = spark.createDataFrame([("x", "text 7")], "doc_id string, text string")
+    versions = (fps.version, bloom.version, dupes.version)
+    with _pytest.raises(ValueError, match=r"words=16.*words=32"):
+        bloom_gated_exact_dedup_sink(fps, bloom, dupes, words=32)(again, 1)
+    assert (fps.version, bloom.version, dupes.version) == versions
+    bloom.replace_all(bitmap_rows([0] * 32, fps.snapshot(), "key"))
+    bloom_gated_exact_dedup_sink(fps, bloom, dupes, words=32)(again, 1)
+    assert dupes.get("x") == "7"
+    for t in (fps, bloom, dupes):
+        t.destroy()
+
+
 def test_streaming_ann_enrichment_from_materialized_index(spark, stream_dir):
     """The write-once/probe-many index read path as a streaming query:
     an IVF index is materialized offline, then two micro-batches of
