@@ -605,6 +605,18 @@ def _cc_two_phase(
 _DRIVER_CC_MAX_EDGES = 500_000
 
 
+def _driver_rows(df: DataFrame, n: int) -> list | None:
+    """All rows of ``df`` if it has at most ``n``, else None — ONE
+    bounded action instead of count-then-collect: fetch at most n+1
+    rows, and if the extra row arrives the frame exceeds the driver
+    budget; the driver never holds more than the dial allows either
+    way. The coalesce(1) plans one local+global limit over every
+    partition instead of Spark's incremental take (one job per scan
+    round, so the job count grew with the partition count)."""
+    rows = df.limit(n + 1).coalesce(1).collect()
+    return rows if len(rows) <= n else None
+
+
 def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
@@ -647,20 +659,14 @@ def duplicate_clusters(
     )
     rows = None
     if driver_cutover is not None:
-        # ONE bounded action instead of count-then-collect: fetch at
-        # most cutover+1 rows — if the limit row arrives, the edge list
-        # exceeds the driver budget and the distributed lane runs; the
-        # driver never holds more than the dial allows either way. The
-        # coalesce(1) plans one local+global limit over every partition
-        # instead of Spark's incremental take (one job per scan round,
-        # so the job count grew with the partition count).
-        rows = edges.limit(driver_cutover + 1).coalesce(1).collect()
-        if len(rows) > driver_cutover:
-            rows = None
+        rows = _driver_rows(edges, driver_cutover)
     if rows is None:
         labeled = _cc_two_phase(edges, max_iter, stats)
     else:
-        labeled = _union_find_labels(edges, rows)
+        # the labels are bounded by the cutover, so consumers' joins
+        # against them broadcast without a sizing action; the star
+        # lane stays unhinted and AQE sizes its corpus-scale output
+        labeled = F.broadcast(_union_find_labels(edges, rows))
         if stats is not None:
             stats["rounds"] = 0
     return labeled.select(

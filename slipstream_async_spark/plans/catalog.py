@@ -184,27 +184,6 @@ def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
-# The near-duplicate drop list grows LINEARLY with the corpus (20-30% of
-# docs are non-canonical near-dups on real web data), so at 100 TB it is
-# billions of ids — a forced broadcast OOMs every executor. Broadcast only
-# below a measured count; above it, a plain equi-join that AQE plans.
-_BC_MAX_DROPS = 100_000
-
-
-def _join_drops(df: DataFrame, drops: DataFrame, how: str) -> DataFrame:
-    """Join the dedup drop list onto a per-document frame, adaptively.
-
-    The drop list is the output of the expensive pair->connected-
-    components lineage; ``localCheckpoint`` materializes it ONCE so the
-    sizing count and the join both read the pinned copy — neither branch
-    re-derives the corpus pair stage (same measured-count discipline as
-    the set-table gates of operators.dedup._cached_hsets)."""
-    drops = drops.localCheckpoint(eager=True)
-    if drops.count() <= _BC_MAX_DROPS:
-        drops = F.broadcast(drops)
-    return df.join(drops, "doc_id", how)
-
-
 # ---------------------------------------------------------------------------
 # Relational / TPC-H-style batch inventory (J4, A8, §2.5 sorts & set ops).
 # The reference gets these "free" from arbitrary Python (SURVEY §2.4 A8);
@@ -1783,8 +1762,8 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     ('en') -> near-duplicate removal (keep only cluster canonicals) ->
     per-document token stats. One declarative plan: the text gates are
     pure expressions over a single documents scan, the dedup drop-list
-    joins in as an adaptively-broadcast anti-join (_join_drops: plain
-    equi-join once the measured drop count outgrows a broadcast) — the
+    joins in as an anti-join (broadcast from duplicate_clusters' driver
+    lane, AQE-sized from its distributed lane) — the
     shape a 100 TB curation run takes (gates before dedup so the expensive pairing sees only
     survivors of the cheap filters... here gates are applied to the pair
     output instead so the oracle stays a pure composition; flip the
@@ -1811,13 +1790,10 @@ def pipeline_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = st["docs"]
     return (
-        _join_drops(
-            scored.filter(
-                (F.col("quality") >= 0.73) & (F.col("lang_pred") == "en")
-            ),
-            drops,
-            "left_anti",
+        scored.filter(
+            (F.col("quality") >= 0.73) & (F.col("lang_pred") == "en")
         )
+        .join(drops, "doc_id", "left_anti")
         .select("doc_id", "n_tokens", "quality")
     )
 
@@ -3062,7 +3038,7 @@ def pipeline_curation_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     clusters = DD.duplicate_clusters(pairs)
     drops = clusters.filter(~F.col("is_canonical")).select("doc_id")
-    return _join_drops(st["docs"], drops, "left_anti")
+    return st["docs"].join(drops, "doc_id", "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -7617,9 +7593,9 @@ def quality_gate_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME tokenize pass the pair stage already pays and carried
     through its narrow per-doc cache (dedup_ngram_jaccard ``carry``) —
     ONE documents scan total; the dedup drop-list (min-id connected
-    components over the PPJoin pair set) joins in as an
-    adaptively-broadcast left join on doc_id (_join_drops); the result
-    is an 8-row aggregate."""
+    components over the PPJoin pair set) joins in as a left join on
+    doc_id, broadcast below the duplicate_clusters driver cutover; the
+    result is an 8-row aggregate."""
     (docs,) = _t(spark, sf_dir, "documents")
     st: dict = {}
     pairs = DD.dedup_ngram_jaccard(
@@ -7639,7 +7615,7 @@ def quality_gate_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.lit(True).alias("_dropped"))
     )
     return (
-        _join_drops(st["docs"], drops, "left")
+        st["docs"].join(drops, "doc_id", "left")
         .groupBy(
             "pass_quality",
             "pass_lang",
@@ -8966,18 +8942,15 @@ def pipeline_tokens_saved(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ew = Window.partitionBy("_md5")
     flags = (
-        _join_drops(
-            st["docs"].select(
-                "doc_id",
-                "n_tokens",
-                (F.col("doc_id") != F.min("doc_id").over(ew)).alias(
-                    "is_exact_dup"
-                ),
-                "passes_gates",
+        st["docs"].select(
+            "doc_id",
+            "n_tokens",
+            (F.col("doc_id") != F.min("doc_id").over(ew)).alias(
+                "is_exact_dup"
             ),
-            drops,
-            "left",
+            "passes_gates",
         )
+        .join(drops, "doc_id", "left")
         .withColumn("is_near_dup", F.col("_near").isNotNull())
     )
     s1 = ~F.col("is_exact_dup")
@@ -9418,8 +9391,8 @@ def dedup_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .localCheckpoint()
     )
-    if e.count() <= DD._DRIVER_CC_MAX_EDGES:
-        rows = e.collect()
+    rows = DD._driver_rows(e, DD._DRIVER_CC_MAX_EDGES)
+    if rows is not None:
         fwd: dict = {}
         deg_d: dict = {}
         for r in rows:
@@ -18856,8 +18829,7 @@ def dedup_impact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape: reuses the PPJoin pair -> connected-components -> drop-list
     lineage (the pipeline_curation shape) and lands it on a |sources|-
-    row aggregate via the adaptively-broadcast drop-list join
-    (_join_drops)."""
+    row aggregate via the drop-list left join."""
     (docs,) = _t(spark, sf_dir, "documents")
     # source + token count ride the pair stage's tokenize scan via the
     # carry cache (one documents scan for the whole pipeline).
@@ -18876,11 +18848,7 @@ def dedup_impact_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops = clusters.filter(~F.col("is_canonical")).select(
         "doc_id", F.lit(True).alias("dropped")
     )
-    d = _join_drops(
-        st["docs"].select("source", "doc_id", "n_tokens"),
-        drops,
-        "left",
-    ).select(
+    d = st["docs"].join(drops, "doc_id", "left").select(
         "source",
         "n_tokens",
         F.coalesce(F.col("dropped"), F.lit(False)).alias("dropped"),

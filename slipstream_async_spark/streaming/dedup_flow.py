@@ -1,23 +1,29 @@
-"""Streaming incremental dedup: the nightly-ingest dedup story as an
-actual streaming query.
+"""Streaming dedup sinks: the nightly-ingest dedup story as actual
+streaming queries.
 
 Reference parity: the cookbook's cache-update-stream pattern
 (docs/source/cookbook.rst:522-588) — a handler consumes a stream, looks
 each arrival up against a standing RocksDB cache, emits what it learns,
 and folds the arrival back into the cache for the next event. Here the
 micro-batch is the unit instead of the single event, and the standing
-cache is a :class:`~slipstream_async_spark.streaming.state.StateTable`:
+cache is a :class:`~slipstream_async_spark.streaming.state.StateTable`.
+Two sinks:
 
-- each arriving micro-batch is near-dup-checked against the standing
-  corpus index WITH :func:`~slipstream_async_spark.operators.dedup.
-  dedup_incremental` (prefix-index probe: batch x corpus and batch x
-  batch pairs only — the corpus is never re-paired against itself);
-- discovered pairs land in a pairs StateTable (key
-  ``len(id_a)|id_a|id_b`` — length-prefixed so ids containing the
-  separator cannot collide; value jaccard) — the operator's
-  continuously-growing output;
-- the batch's documents are then upserted into the corpus StateTable,
-  so the NEXT micro-batch dedups against them.
+- :func:`indexed_incremental_dedup_sink` (near-dup): each arriving
+  micro-batch probes a persistent
+  :class:`~slipstream_async_spark.streaming.neardup_index.
+  NearDupPrefixIndex` (bucket-pruned postings read + verification
+  against stored shingle-hash arrays: batch x corpus and batch x batch
+  pairs only — the corpus is never re-paired against itself, nor
+  re-read or re-shingled). Discovered pairs land in a pairs StateTable
+  (key ``len(id_a)|id_a|id_b`` — length-prefixed so ids containing the
+  separator cannot collide; value jaccard), the operator's
+  continuously-growing output; the batch's documents are then folded
+  into the corpus table and the index, so the NEXT micro-batch dedups
+  against them.
+- :func:`bloom_gated_exact_dedup_sink` (exact): a persistent Bloom
+  bitmap gates the standing fingerprint table, the reference cache's
+  ``key_may_exist``-before-``get``.
 
 Exactly-once: foreachBatch is at-least-once per epoch; every sink here
 commits through the epoch fence all StateTable sinks share
@@ -26,9 +32,10 @@ that did not land. The writes are also idempotent upserts keyed
 deterministically (same pair key -> same jaccard; same doc key -> same
 text), so even the re-run commits converge to the same state.
 
-Scale: per micro-batch cost is |batch| x (prefix-index probe), never
-|corpus|^2; the standing index is the copy-on-write StateTable, which at
-100 TB is the Delta/Iceberg MERGE pattern (state.py module docstring).
+Scale: per micro-batch cost is O(|batch| + candidates), never
+O(|corpus|); the standing state is the copy-on-write StateTable, which
+at 100 TB is the Delta/Iceberg MERGE pattern (state.py module
+docstring).
 """
 
 from __future__ import annotations
@@ -39,7 +46,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from slipstream_async_spark.functions.text import text_fingerprint
-from slipstream_async_spark.operators.dedup import dedup_incremental
 from slipstream_async_spark.operators.membership import (
     bitmap_rows,
     bloom_fpr,
@@ -67,90 +73,6 @@ def _pair_rows(found: DataFrame) -> DataFrame:
     )
 
 
-def incremental_dedup_sink(
-    corpus: StateTable,
-    pairs: StateTable,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-    threshold: float = 0.5,
-    query: str = "incremental_dedup",
-) -> Callable[[DataFrame, int], None]:
-    """foreachBatch function wiring ``dedup_incremental`` between a
-    streaming source and two StateTables (standing corpus index + pair
-    output). Use with ``foreach_batch_sink`` on a ``Pipeline`` flow::
-
-        p.handle(stream, sink=[foreach_batch_sink(
-            incremental_dedup_sink(corpus, pairs))])
-
-    Document ids are carried as strings (StateTable keys are strings);
-    pair ordering ``id_a < id_b`` is therefore string order within one
-    micro-batch's output — stable across replays. Epoch-fenced like
-    foreach_batch_upsert: a replayed epoch no-ops per table (exactly-
-    once pair/corpus changelogs, not merely convergent state).
-
-    Scale note: this form re-derives the corpus prefix index from the
-    standing snapshot every trigger — O(|corpus|)/trigger. Use
-    :func:`indexed_incremental_dedup_sink` (persistent
-    ``NearDupPrefixIndex``) for the O(|batch|)/trigger shape.
-    """
-    fence = _EpochFence(query, {"pairs": pairs, "corpus": corpus})
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        e = int(epoch_id)
-        if not fence.pending(e):
-            return  # fully-committed epoch replayed — nothing to do
-        batch = (
-            batch_df.select(
-                F.col(id_col).cast("string").alias(id_col), F.col(text_col)
-            )
-            .dropDuplicates([id_col])
-            .cache()
-        )
-        try:
-            # the standing side must be the PRE-epoch corpus even under
-            # partial replay: if a crash landed the corpus commit but
-            # not the pairs commit, the replayed probe would otherwise
-            # see the batch's own docs in the corpus — each doc's
-            # prefix rank then spreads over BOTH duplicate copies,
-            # roughly halving the PPJoin prefix and silently missing
-            # candidate pairs FOREVER (the corpus is never re-paired
-            # against itself). Excluding the batch's ids makes the
-            # probe frame identical on first delivery and on replay.
-            standing = (
-                corpus.snapshot()
-                .select(
-                    F.col("key").alias(id_col),
-                    F.col("value").alias(text_col),
-                )
-                .join(
-                    F.broadcast(batch.select(id_col)), id_col, "left_anti"
-                )
-            )
-            found = dedup_incremental(
-                standing, batch, text_col, id_col, k=k, threshold=threshold
-            )
-            doc_rows = batch.select(
-                F.col(id_col).alias("key"),
-                F.col(text_col).alias("value"),
-            )
-            # two INDEPENDENT tables: overlap their (driver-coordinated)
-            # commits so the epoch pays max, not sum, of the two commit
-            # latencies — same discipline as the bloom sink below. The
-            # probe (`found`) reads the pre-epoch corpus BY CONSTRUCTION
-            # (batch ids are anti-joined out of the standing snapshot
-            # above), so commit order cannot leak this batch's docs into
-            # its own pair search — in this process OR across a restart
-            # replay after a partial commit. Each commit is fenced;
-            # under partial replay only the table whose commit was lost
-            # re-runs.
-            fence.commit(e, {"pairs": _pair_rows(found)}, {"corpus": doc_rows})
-        finally:
-            batch.unpersist()
-
-    return sink
-
-
 def indexed_incremental_dedup_sink(
     corpus: StateTable,
     pairs: StateTable,
@@ -161,15 +83,23 @@ def indexed_incremental_dedup_sink(
     refresh_factor: float | None = None,
     stats: list | None = None,
 ) -> Callable[[DataFrame, int], None]:
-    """The O(|batch|)-per-trigger form of :func:`incremental_dedup_sink`:
-    the corpus-side prefix index is PERSISTED (a
+    """foreachBatch function wiring a persistent
     :class:`~slipstream_async_spark.streaming.neardup_index.
-    NearDupPrefixIndex`) instead of being rebuilt from the full standing
-    snapshot every micro-batch — per-trigger Spark work is the batch's
-    own shingling + a bucket-pruned postings probe + candidate
-    verification, independent of standing-corpus size (the r10 VERDICT
-    scale-killer, fixed). ``k``/``threshold`` come from the index (they
-    parameterize the persisted prefix rows).
+    NearDupPrefixIndex` between a streaming source and two StateTables
+    (standing corpus + pair output). Use with ``foreach_batch_sink`` on
+    a ``Pipeline`` flow::
+
+        p.handle(stream, sink=[foreach_batch_sink(
+            indexed_incremental_dedup_sink(corpus, pairs, index))])
+
+    The corpus-side prefix index is PERSISTED, never rebuilt from the
+    standing snapshot — per-trigger Spark work is the batch's own
+    shingling + a bucket-pruned postings probe + candidate
+    verification, independent of standing-corpus size.
+    ``k``/``threshold`` come from the index (they parameterize the
+    persisted prefix rows). Document ids are carried as strings
+    (StateTable keys are strings); pair ordering ``id_a < id_b`` is
+    therefore string order, stable across replays.
 
     Four fenced tables per epoch — pairs, corpus docs, the index
     postings, and the index verification sets. The postings + sets
@@ -418,15 +348,12 @@ def indexed_incremental_dedup_sink(
                 labels=("t_corpus_commit", "t_group_commit"),
             ):
                 probe_stats: dict | None = {} if stats is not None else None
-                # probe(materialize=False) returns the verification
-                # plan LAZY over persisted candidate frames: the pairs
-                # commit's write job below materializes it — one fewer
-                # scheduling round than checkpoint-then-commit, and a
-                # fenced replay that skips the pairs commit skips
-                # verification entirely
+                # the probe returns the verification plan LAZY over
+                # persisted candidate frames: the pairs commit's write
+                # job below materializes it, and a fenced replay that
+                # skips the pairs commit skips verification entirely
                 found = index.probe(
-                    bp, batch_sets, id_col, stats=probe_stats,
-                    buckets=buckets, materialize=False,
+                    bp, batch_sets, id_col, buckets, stats=probe_stats
                 )
                 _mark("t_probe_build")
                 fence.commit(e, {"pairs": _pair_rows(found)})

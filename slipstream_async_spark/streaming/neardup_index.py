@@ -229,9 +229,9 @@ class NearDupPrefixIndex:
         ]
 
     def finish_probe(self) -> None:
-        """Release the candidate frames a ``materialize=False`` probe
-        left persisted for its consumer (call after the pairs commit —
-        or instead of it on a fenced replay that skips the commit)."""
+        """Release the candidate frames :meth:`probe` left persisted
+        for its consumer (call after the pairs commit — or instead of
+        it on a fenced replay that skips the commit)."""
         for df in self._probe_cached:
             df.unpersist()
         self._probe_cached = []
@@ -241,29 +241,25 @@ class NearDupPrefixIndex:
         batch_prefix: DataFrame,
         batch_sets: DataFrame,
         id_col: str,
+        buckets: list[int],
         stats: dict | None = None,
-        buckets: list[int] | None = None,
-        materialize: bool = True,
     ) -> DataFrame:
         """Verified near-dup pairs of batch x (standing ∪ batch), where
-        at least one side is a batch document. With ``materialize=True``
-        (default) the result is localCheckpoint'd before returning —
-        callers reuse it without re-running candidate generation or
-        verification. With ``materialize=False`` the verification plan
-        is returned LAZY over persisted candidate frames, so a sink can
-        fold verification into its pairs-commit write job (one fewer
-        scheduling round per trigger; a fenced replay that skips the
-        commit then skips verification entirely) — call
-        :meth:`finish_probe` once the result is consumed. ``buckets``
-        accepts a precomputed :meth:`probe_buckets` result.
+        at least one side is a batch document. ``buckets`` is the
+        :meth:`probe_buckets` result for ``batch_prefix``. The
+        verification plan is returned LAZY over persisted candidate
+        frames, so a sink folds verification into its pairs-commit
+        write job (a fenced replay that skips the commit then skips
+        verification entirely) — call :meth:`finish_probe` once the
+        result is consumed.
         Per-trigger cost is O(|batch| + candidates), and every
         driver-side collect is bounded by ``n_buckets`` ints — candidate
         ids themselves never leave the cluster (the r11-VERDICT weak
         item: a candidate-id collect is O(candidates) driver memory,
         unbounded when the frozen order degrades):
 
-        - postings read is PRUNED to the buckets the batch's prefix
-          shingles hash to (bucket-id collect: <= n_buckets ints);
+        - postings read is PRUNED to ``buckets``, the buckets the
+          batch's prefix shingles hash to;
         - the batch's own ids are anti-joined out of the standing side
           — under partial replay (corpus/postings commit landed, pairs
           commit lost) the re-probe sees the PRE-epoch corpus, so each
@@ -278,8 +274,6 @@ class NearDupPrefixIndex:
           re-read, nothing is re-shingled, no candidate list is ever
           built on the driver.
         """
-        if buckets is None:
-            buckets = self.probe_buckets(batch_prefix)
         parts = F.split(F.col("value"), r"\|", 3)
         idx = self.postings.read_buckets(buckets).select(
             F.substring_index("key", self.SEP, 1).alias("s"),
@@ -361,13 +355,8 @@ class NearDupPrefixIndex:
             verified = _verified_pairs_hashed(
                 cand, hsets, id_col, self.threshold, broadcast_sets=True
             )
-            if not materialize:
-                self._probe_cached += [cand, corpus_cand]
-                return verified
-            out = verified.localCheckpoint()
-            corpus_cand.unpersist()
-            cand.unpersist()
-            return out
+            self._probe_cached += [cand, corpus_cand]
+            return verified
         except Exception:
             if corpus_cand is not None:
                 corpus_cand.unpersist()

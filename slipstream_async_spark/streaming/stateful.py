@@ -189,66 +189,9 @@ def ttl_fold(
     """Running per-key sum whose state EXPIRES after ``ttl_ms`` of
     processing time — the reference's bounded-retention cache semantics
     (FIFO compaction evicting old records, slipstream/caching.py:112-122,
-    features.rst:64-66) on Spark 4's ``transformWithStateInPandas``:
-    TTL is declared on the state variable and the store evicts it, no
-    user-side eviction scans.
-
-    A key silent for longer than the TTL restarts its fold from zero —
-    exactly how the reference's 25 MB FIFO tables forget idle keys.
-
-    Runtime requirement: ``transformWithState``'s driver worker imports
-    ``google.protobuf`` (ships with ``pyspark[connect]``). Absent that,
-    constructing the plan raises at stream start — use ``stateful_fold``
-    (applyInPandasWithState) which has no such dependency; its state
-    simply never expires. (Install attempted 2026-08-14: the build
-    container has no network egress — pypi.org unresolvable — and no
-    vendorable protobuf wheel on disk, so the TTL test remains
-    skip-gated here; it runs wherever ``pip install protobuf`` has.)
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = f"{key_col} string, {out_col} double"
-
-    class _TTLFold(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._acc = handle.getValueState(
-                "acc", "acc double", ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            acc = self._acc.get()[0] if self._acc.exists() else 0.0
-            for pdf in rows:
-                acc += float(pdf[value_col].astype(float).sum())
-            self._acc.update((acc,))
-            yield pd.DataFrame({key_col: [str(key[0])], out_col: [acc]})
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_TTLFold(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="ProcessingTime",
-    )
-
-
-def ttl_fold_apws(
-    df: DataFrame,
-    key_col: str,
-    value_col: str,
-    ttl_ms: int,
-    out_col: str = "agg_value",
-) -> DataFrame:
-    """Protobuf-free TTL fold: the same bounded-retention semantics as
-    :func:`ttl_fold` (running per-key sum that forgets keys idle longer
-    than ``ttl_ms`` — the reference's FIFO cache eviction,
-    slipstream/caching.py:112-122) expressed on
-    ``applyInPandasWithState``, which has no ``google.protobuf``
-    driver-worker dependency and therefore runs in this sandbox.
+    features.rst:64-66): a key silent for longer than the TTL restarts
+    its fold from zero, exactly how the reference's 25 MB FIFO tables
+    forget idle keys. Built on ``applyInPandasWithState``.
 
     Eviction is two-layered, matching how a 100 TB stream must bound
     state: (a) ``ProcessingTimeTimeout`` — every update re-arms a
@@ -257,7 +200,8 @@ def ttl_fold_apws(
     not the all-time key set; (b) a lazy in-handler staleness check
     (``now - last_ms > ttl_ms`` → restart the fold at zero) for the
     window between logical expiry and the next micro-batch's timeout
-    sweep. Output cadence and schema are identical to ``ttl_fold``.
+    sweep. Emits ``(key, running sum)`` per key per micro-batch, update
+    mode.
     """
     out_schema = f"{key_col} string, {out_col} double"
     state_schema = "acc double, last_ms long"

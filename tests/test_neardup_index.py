@@ -178,7 +178,9 @@ def test_probe_collects_stay_bucket_bounded(spark, tmp_path):
     stats: dict = {}
     dfcls.collect = spying_collect
     try:
-        found = index.probe(bp, bsets, "doc_id", stats=stats)
+        found = index.probe(
+            bp, bsets, "doc_id", buckets=index.probe_buckets(bp), stats=stats
+        )
     finally:
         dfcls.collect = orig
     assert stats["n_candidates"] > 50, "fixture must swamp the batch"
@@ -193,6 +195,7 @@ def test_probe_collects_stay_bucket_bounded(spark, tmp_path):
     assert stats["sets_rows_scanned"] >= 0
     # and the probe still verifies correctly against the stored sets
     got = {(r["id_a"], r["id_b"]) for r in found.collect()}
+    index.finish_probe()
     assert ("B1", "B2") in got  # the in-batch near-dup pair survives
     corpus.destroy()
     pairs.destroy()

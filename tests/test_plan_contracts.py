@@ -281,7 +281,8 @@ def test_gate_attribution_drop_list_join_is_adaptive(q):
     re-scans documents parquet (r13: one corpus scan for the whole
     pipeline); (b) the drop-list side reads the ONE materialized copy,
     never re-deriving the pair->CC lineage; and (c) at this SF the
-    measured count picks the broadcast branch."""
+    labels come from duplicate_clusters' cutover-bounded driver lane,
+    whose broadcast hint plans the join as a broadcast."""
     plan = _plan(q["quality_gate_attribution"], "simple")
     assert "InMemoryTableScan" in plan, plan
     # no live parquet scan above the cached relation: the only FileScan
@@ -289,7 +290,7 @@ def test_gate_attribution_drop_list_join_is_adaptive(q):
     top = plan.split("InMemoryRelation", 1)[0]
     assert "FileScan parquet" not in top, plan
     assert "Scan ExistingRDD" in plan, plan
-    # small-SF: measured count <= _BC_MAX_DROPS => broadcast branch
+    # small-SF: edges <= the driver cutover => broadcast-hinted labels
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, plan
 

@@ -784,6 +784,44 @@ def test_duplicate_clusters_cutover_jobs_do_not_grow_with_partitions(
     assert jobs[0] == jobs[1], jobs
 
 
+def test_duplicate_clusters_driver_labels_join_as_broadcast(spark, count_jobs):
+    """The driver lane's labels are bounded by the cutover, so a drop
+    list taken from them joins a per-document frame as a broadcast from
+    the plan alone: building the join runs no sizing action."""
+    from slipstream_async_spark.operators.dedup import duplicate_clusters
+
+    pairs = spark.createDataFrame(
+        [(f"d{i:03d}", f"d{i + 1:03d}") for i in range(0, 100, 2)],
+        "id_a string, id_b string",
+    )
+    drops = duplicate_clusters(pairs).filter(~F.col("is_canonical"))
+    docs = spark.range(1000).selectExpr("format_string('d%03d', id) AS doc_id")
+
+    def build():
+        joined = docs.join(drops.select("doc_id"), "doc_id", "left_anti")
+        return joined, joined._jdf.queryExecution().executedPlan().toString()
+
+    (joined, plan), jobs = count_jobs(build)
+    assert jobs == 0
+    assert "BroadcastHashJoin" in plan, plan
+    assert joined.count() == 950
+
+
+def test_duplicate_clusters_star_labels_carry_no_broadcast_hint(spark):
+    """Above the cutover the labels are corpus-scale, so the star lane
+    leaves the join strategy to AQE: its logical plan holds no
+    broadcast hint."""
+    from slipstream_async_spark.operators.dedup import duplicate_clusters
+
+    pairs = spark.range(0, 100, 2).selectExpr("id AS id_a", "id + 1 AS id_b")
+    labels = duplicate_clusters(pairs, driver_cutover=None)
+    plan = labels._jdf.queryExecution().logical().toString()
+    assert "ResolvedHint" not in plan, plan
+    assert "broadcast" not in plan.lower(), plan
+    driver = duplicate_clusters(pairs)._jdf.queryExecution().logical()
+    assert "strategy=broadcast" in driver.toString()
+
+
 def test_duplicate_clusters_fails_closed_without_fixpoint(spark):
     """Labels short of the large-star/small-star fixpoint are wrong (the
     chain's tail still points at non-minimal ids), so running out of

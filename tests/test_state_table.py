@@ -657,12 +657,21 @@ def test_multi_table_dedup_sink_epoch_fenced(spark, tmp_path):
     table's commit after a partial failure — both tables' changelogs
     stay exactly-once."""
     from slipstream_async_spark.streaming.dedup_flow import (
-        incremental_dedup_sink,
+        indexed_incremental_dedup_sink,
+    )
+    from slipstream_async_spark.streaming.neardup_index import (
+        NearDupPrefixIndex,
     )
 
     corpus = StateTable(spark, str(tmp_path / "corpus"))
     pairs = StateTable(spark, str(tmp_path / "pairs"))
-    sink = incremental_dedup_sink(corpus, pairs)
+
+    def make_sink():
+        # a fresh index instance per sink: a restart re-reads it
+        index = NearDupPrefixIndex(spark, str(tmp_path / "idx"))
+        return indexed_incremental_dedup_sink(corpus, pairs, index)
+
+    sink = make_sink()
     batch = spark.createDataFrame(
         [("1", "aaa bbb ccc ddd eee"), ("2", "aaa bbb ccc ddd fff")],
         "doc_id string, text string",
@@ -674,7 +683,7 @@ def test_multi_table_dedup_sink_epoch_fenced(spark, tmp_path):
     sink(batch, 0)  # same-closure replay
     assert (corpus.version, pairs.version) == vs
 
-    sink2 = incremental_dedup_sink(corpus, pairs)  # restart recovery
+    sink2 = make_sink()  # restart recovery
     sink2(batch, 0)
     assert (corpus.version, pairs.version) == vs
     assert (corpus.changelog().count(), pairs.changelog().count()) == logs
@@ -693,7 +702,7 @@ def test_multi_table_dedup_sink_epoch_fenced(spark, tmp_path):
     )
     vc = corpus.version
     vp = pairs.version
-    sink3 = incremental_dedup_sink(corpus, pairs)
+    sink3 = make_sink()
     sink3(batch2, 1)
     assert corpus.version == vc, "fenced corpus commit must not re-run"
     assert pairs.version == vp + 1, "lost pairs commit must re-run"
@@ -777,57 +786,6 @@ def test_one_file_per_bucket_per_version(spark, tmp_path):
         assert len(files) <= 1, (b, files)
     assert t.snapshot().count() == 1000
     t.destroy()
-
-
-def test_partial_replay_with_near_dups_finds_all_pairs(spark, tmp_path):
-    """The lethal partial-replay shape (NOT the no-dup fixture): the
-    corpus commit landed but the pairs commit was lost, and the batch
-    HAS near-dups. The replayed probe must see the PRE-epoch corpus
-    (batch ids anti-joined out of the standing snapshot) — otherwise
-    each batch doc appears twice in the tagged union, its prefix rank
-    spreads over both copies, the PPJoin prefix halves, and pairs are
-    silently missed forever."""
-    from slipstream_async_spark.streaming.dedup_flow import (
-        incremental_dedup_sink,
-    )
-
-    corpus = StateTable(spark, str(tmp_path / "corpus"))
-    pairs = StateTable(spark, str(tmp_path / "pairs"))
-    sink = incremental_dedup_sink(corpus, pairs)
-    # epoch 0 seeds the corpus with one doc, no pairs
-    sink(
-        spark.createDataFrame(
-            [("c1", "p q r s t")], "doc_id string, text string"
-        ),
-        0,
-    )
-    assert pairs.snapshot().count() == 0
-    # epoch 1: b2 is a near-dup of c1 (jaccard 0.5); b3/b4 are
-    # near-dups of each other (in-batch pair)
-    batch1 = spark.createDataFrame(
-        [
-            ("b2", "p q r s u"),
-            ("b3", "m n o v w"),
-            ("b4", "m n o v y"),
-        ],
-        "doc_id string, text string",
-    )
-    # simulate the crash: the corpus commit landed under the sink's
-    # fence, the pairs commit did not
-    corpus.upsert(
-        batch1.select(
-            F.col("doc_id").alias("key"), F.col("text").alias("value")
-        ),
-        fence=("incremental_dedup", 1),
-    )
-    vc = corpus.version
-    sink2 = incremental_dedup_sink(corpus, pairs)  # restart recovery
-    sink2(batch1, 1)
-    assert corpus.version == vc, "fenced corpus commit must not re-run"
-    got = sorted(r["key"] for r in pairs.snapshot().collect())
-    assert got == ["2|b2|c1", "2|b3|b4"], got
-    corpus.destroy()
-    pairs.destroy()
 
 
 def test_changelog_publish_crash_window_recovered(spark, tmp_path):
@@ -939,8 +897,8 @@ def test_changelog_vacuum_retention_above_log_length_keeps_all(
 
 @pytest.mark.parametrize(
     "kind",
-    ["foreach_batch_upsert", "incremental_dedup_sink",
-     "indexed_incremental_dedup_sink", "bloom_gated_exact_dedup_sink"],
+    ["foreach_batch_upsert", "indexed_incremental_dedup_sink",
+     "bloom_gated_exact_dedup_sink"],
 )
 def test_fence_regression_warns_on_checkpoint_reset(spark, tmp_path, kind):
     """A delivered epoch STRICTLY below the recovered fence cannot be
@@ -974,20 +932,22 @@ def test_fence_regression_warns_on_checkpoint_reset(spark, tmp_path, kind):
         )
         if kind == "bloom_gated_exact_dedup_sink":
             tables = [table("fps"), table("bloom"), table("dupes")]
+
+            def make():
+                return dedup_flow.bloom_gated_exact_dedup_sink(
+                    *tables, query="q"
+                )
         else:
-            tables = [table("corpus"), table("pairs")]
-        if kind == "indexed_incremental_dedup_sink":
             index = NearDupPrefixIndex(
                 spark, str(tmp_path / "idx"), n_buckets=4
             )
-            tables += [index.postings, index.sets, index.seen]
+            tables = [table("corpus"), table("pairs"),
+                      index.postings, index.sets, index.seen]
 
-        def make():
-            if kind == "indexed_incremental_dedup_sink":
+            def make():
                 return dedup_flow.indexed_incremental_dedup_sink(
                     tables[0], tables[1], index, query="q"
                 )
-            return getattr(dedup_flow, kind)(*tables, query="q")
 
     def versions():
         return [t.version for t in tables]

@@ -312,63 +312,13 @@ def test_stream_stream_interval_join(spark, stream_dir):
         q.stop()
 
 
-@pytest.mark.skipif(
-    not __import__("importlib").util.find_spec("google"),
-    reason="transformWithState driver worker needs google.protobuf "
-    "(pyspark[connect]); absent in this container",
-)
 def test_ttl_fold_accumulates_and_expires(spark, stream_dir):
-    """C9/T-analog: state variable with TTL on transformWithStateInPandas
-    — accumulates across micro-batches, forgets after the TTL."""
+    """U3 TTL form: applyInPandasWithState with ProcessingTimeTimeout —
+    accumulates across micro-batches within the TTL, restarts from zero
+    for a key idle longer than the TTL."""
     import time
 
     from slipstream_async_spark.streaming.stateful import ttl_fold
-
-    src_path = os.path.join(stream_dir, "src")
-    schema = "ts timestamp, k string, v double"
-    _write_batch(spark, src_path, [(ts(0.0), "x", 1.0), (ts(1.0), "x", 2.0)], schema, 0)
-    out = ttl_fold(
-        _file_stream(spark, src_path, schema), "k", "v", ttl_ms=2500
-    )
-    q = (
-        out.writeStream.format("memory").queryName("out_ttl")
-        .outputMode("update").start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {r["k"]: r["agg_value"] for r in spark.sql("SELECT * FROM out_ttl").collect()}
-        assert got == {"x": 3.0}
-        # within TTL: fold continues
-        _write_batch(spark, src_path, [(ts(2.0), "x", 4.0)], schema, 1)
-        q.processAllAvailable()
-        vals = sorted(
-            r["agg_value"] for r in spark.sql(
-                "SELECT * FROM out_ttl WHERE k = 'x'"
-            ).collect()
-        )
-        assert vals[-1] == 7.0
-        # after TTL expiry: state evicted, fold restarts from zero
-        time.sleep(3.0)
-        _write_batch(spark, src_path, [(ts(3.0), "x", 5.0)], schema, 2)
-        q.processAllAvailable()
-        vals = sorted(
-            r["agg_value"] for r in spark.sql(
-                "SELECT * FROM out_ttl WHERE k = 'x'"
-            ).collect()
-        )
-        assert 5.0 in vals and vals[-1] == 7.0  # restarted at 5, not 12
-    finally:
-        q.stop()
-
-
-def test_ttl_fold_apws_accumulates_and_expires(spark, stream_dir):
-    """U3 TTL form, protobuf-free lane: applyInPandasWithState with
-    ProcessingTimeTimeout — accumulates across micro-batches within the
-    TTL, restarts from zero for a key idle longer than the TTL. Runs
-    in-sandbox (no transformWithState/google.protobuf dependency)."""
-    import time
-
-    from slipstream_async_spark.streaming.stateful import ttl_fold_apws
 
     schema = "ts timestamp, k string, v double"
 
@@ -400,7 +350,7 @@ def test_ttl_fold_apws_accumulates_and_expires(spark, stream_dir):
         spark, src_a, [(ts(0.0), "x", 1.0), (ts(1.0), "x", 2.0)], schema, 0
     )
     qa = (
-        ttl_fold_apws(
+        ttl_fold(
             _file_stream(spark, src_a, schema), "k", "v", ttl_ms=600_000
         )
         .writeStream.format("memory").queryName("out_ttl_a")
@@ -418,7 +368,7 @@ def test_ttl_fold_apws_accumulates_and_expires(spark, stream_dir):
     src_b = os.path.join(stream_dir, "src_b")
     _write_batch(spark, src_b, [(ts(0.0), "x", 9.0)], schema, 0)
     qb = (
-        ttl_fold_apws(
+        ttl_fold(
             _file_stream(spark, src_b, schema), "k", "v", ttl_ms=2000
         )
         .writeStream.format("memory").queryName("out_ttl_b")
@@ -955,7 +905,10 @@ def test_streaming_incremental_dedup_two_batches(spark, stream_dir):
     cross-batch near-dup pair appears ONLY after batch 2, batch 1's
     in-batch pair appears immediately, and unrelated docs never pair."""
     from slipstream_async_spark.streaming.dedup_flow import (
-        incremental_dedup_sink,
+        indexed_incremental_dedup_sink,
+    )
+    from slipstream_async_spark.streaming.neardup_index import (
+        NearDupPrefixIndex,
     )
     from slipstream_async_spark.streaming.pipeline import (
         Pipeline,
@@ -976,12 +929,15 @@ def test_streaming_incremental_dedup_two_batches(spark, stream_dir):
 
     corpus = StateTable(spark, os.path.join(stream_dir, "dedup_corpus"))
     pairs = StateTable(spark, os.path.join(stream_dir, "dedup_pairs"))
+    index = NearDupPrefixIndex(
+        spark, os.path.join(stream_dir, "dedup_index"), threshold=0.5
+    )
     p = Pipeline()
 
     @p.handle(
         _file_stream(spark, src, schema),
         sink=[foreach_batch_sink(
-            incremental_dedup_sink(corpus, pairs, threshold=0.5),
+            indexed_incremental_dedup_sink(corpus, pairs, index),
             checkpoint=os.path.join(stream_dir, "dedup_ckpt"),
         )],
     )
@@ -1012,6 +968,7 @@ def test_streaming_incremental_dedup_two_batches(spark, stream_dir):
         p.stop()
         corpus.destroy()
         pairs.destroy()
+        index.destroy()
 
 
 def test_streaming_bloom_gated_exact_dedup(spark, stream_dir):

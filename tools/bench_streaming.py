@@ -371,17 +371,11 @@ def main() -> None:
         if fixed6 is not None
         else None
     )
-    # grown-corpus flatness, indexed vs rebuild: identical-shaped probe
-    # epochs against the sf corpus and against a 10x corpus (the extra
-    # 9x lives in a DISJOINT shingle space — every token salted — so
-    # candidate mass stays constant and the measurement isolates what
-    # standing-state SIZE does to a trigger). The persistent index must
-    # stay flat; the legacy rebuild sink re-shingles and re-ranks the
-    # whole standing corpus per trigger and grows.
-    from slipstream_async_spark.streaming.dedup_flow import (
-        incremental_dedup_sink,
-    )
-
+    # grown-corpus flatness: identical-shaped probe epochs against the
+    # sf corpus and against a 10x corpus (the extra 9x lives in a
+    # DISJOINT shingle space — every token salted — so candidate mass
+    # stays constant and the measurement isolates what standing-state
+    # SIZE does to a trigger). The persistent index must stay flat.
     def _salted(c: int) -> DataFrame:
         return docs_tbl.select(
             F.concat(F.lit(f"c{c}-"), F.col("doc_id")).alias("doc_id"),
@@ -394,9 +388,7 @@ def main() -> None:
             ).alias("text"),
         )
 
-    def _flatness(
-        tag: str, use_index: bool, n_buckets: int | None = None
-    ) -> dict:
+    def _flatness(tag: str, n_buckets: int | None = None) -> dict:
         # min-of-2 probe epochs per corpus size: a one-shot trigger
         # timing is hostage to co-tenant bursts; the min of two
         # identical-shaped epochs is the comparable number
@@ -414,18 +406,15 @@ def main() -> None:
         corpus = StateTable(spark, os.path.join(work, f"flat_c_{tag}"))
         pairs = StateTable(spark, os.path.join(work, f"flat_p_{tag}"))
         stats: list = []
-        if use_index:
-            index = NearDupPrefixIndex(
-                spark,
-                os.path.join(work, f"flat_i_{tag}"),
-                threshold=0.5,
-                n_buckets=n_buckets,
-            )
-            sink = indexed_incremental_dedup_sink(
-                corpus, pairs, index, stats=stats
-            )
-        else:
-            sink = incremental_dedup_sink(corpus, pairs, threshold=0.5)
+        index = NearDupPrefixIndex(
+            spark,
+            os.path.join(work, f"flat_i_{tag}"),
+            threshold=0.5,
+            n_buckets=n_buckets,
+        )
+        sink = indexed_incremental_dedup_sink(
+            corpus, pairs, index, stats=stats
+        )
         mk = lambda r: spark.createDataFrame(r, docs_tbl.schema)  # noqa: E731
 
         def timed(epoch: int, batch_rows) -> float:
@@ -446,27 +435,25 @@ def main() -> None:
             ),
             "pairs_found": int(pairs.snapshot().count()),
         }
-        if use_index:
-            # growth ATTRIBUTION (r11 VERDICT #4): postings rows the
-            # bucket-pruned probe physically scanned, per epoch, from
-            # commit footers — separates inherent growth (the real
-            # corpus shares shingle space, so probed buckets gain
-            # postings as the corpus grows) from fixable overhead.
-            # Epochs 1/2 probe the small corpus, 4/5 the 10x one.
-            scanned = {
-                s["epoch"]: s.get("postings_rows_scanned") for s in stats
-            }
-            out["postings_rows_scanned_small"] = min(
-                (scanned.get(e) for e in (1, 2)), key=lambda v: v or 0
-            )
-            out["postings_rows_scanned_10x"] = min(
-                (scanned.get(e) for e in (4, 5)), key=lambda v: v or 0
-            )
-            out["n_buckets"] = index.postings.n_buckets
+        # growth ATTRIBUTION (r11 VERDICT #4): postings rows the
+        # bucket-pruned probe physically scanned, per epoch, from
+        # commit footers — separates inherent growth (the real
+        # corpus shares shingle space, so probed buckets gain
+        # postings as the corpus grows) from fixable overhead.
+        # Epochs 1/2 probe the small corpus, 4/5 the 10x one.
+        scanned = {
+            s["epoch"]: s.get("postings_rows_scanned") for s in stats
+        }
+        out["postings_rows_scanned_small"] = min(
+            (scanned.get(e) for e in (1, 2)), key=lambda v: v or 0
+        )
+        out["postings_rows_scanned_10x"] = min(
+            (scanned.get(e) for e in (4, 5)), key=lambda v: v or 0
+        )
+        out["n_buckets"] = index.postings.n_buckets
         return out
 
-    flat_indexed = _flatness("idx", True)
-    flat_legacy = _flatness("leg", False)
+    flat_indexed = _flatness("idx")
     # the same indexed measurement at 8x the postings buckets (default
     # is 64): if the grown-corpus ratio / scanned-rows drop, the
     # residual growth was bucket-pruning granularity (fixable by
@@ -474,7 +461,7 @@ def main() -> None:
     # set already touches every bucket and the growth is inherent
     # postings volume in the probed shingle space — pruning re-engages
     # only when |batch shingles| << n_buckets
-    flat_indexed_512 = _flatness("idx512", True, n_buckets=512)
+    flat_indexed_512 = _flatness("idx512", n_buckets=512)
 
     flows["incremental_near_dup"] = {
         "rows": int(n_docs),
@@ -491,7 +478,6 @@ def main() -> None:
         ),
         "flatness_indexed": flat_indexed,
         "flatness_indexed_512buckets": flat_indexed_512,
-        "flatness_legacy_rebuild": flat_legacy,
     }
 
     # -- flow 5b: the refresh dial's VALUE on a vocabulary-drifted
